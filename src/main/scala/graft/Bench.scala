@@ -14,8 +14,8 @@ object Bench {
     // sizes the AQE skew-split thresholds to the local Zipf stage); absent
     // in the driver's official runs, so those are untouched
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => builder.config(k.trim, v.trim)
+      kv.split("=", 2).map(_.trim) match {
+        case Array(k, v) if k.nonEmpty => builder.config(k, v)
         case _                         => ()
       }
     })

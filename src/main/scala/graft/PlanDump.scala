@@ -27,8 +27,8 @@ object PlanDump {
     // same extra-conf pass-through as Bench: tier-forcing confs (e.g.
     // graft.lpa.broadcastNodes=0) let the dumps show the fallback plans
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => builder.config(k.trim, v.trim)
+      kv.split("=", 2).map(_.trim) match {
+        case Array(k, v) if k.nonEmpty => builder.config(k, v)
         case _                         => ()
       }
     })

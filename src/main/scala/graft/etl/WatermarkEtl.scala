@@ -20,10 +20,13 @@ import graft.Tables
   *   - the watermark is a real `max()` aggregate, not a "last row" positional
   *     read (the reference admits its sink-side order_by "is not working",
   *     bin:52 — `max` is order-independent and distributed);
-  *   - the watermark joins back via a broadcast single-row cross join, so the
-  *     whole pipeline stays one lazy plan (no driver-side collect between the
-  *     sink read and the source filter) and the `po > watermark` predicate is
-  *     pushed into the parquet scan by Catalyst;
+  *   - the cron tick ([[runIncrement]]) reads the watermark first and passes
+  *     it into the source filter as a literal, as the reference itself sends
+  *     it to the API as a `filter[...]` query parameter (bin:79-85): the
+  *     source's pushed-filter contract then returns only the delta. The
+  *     read is cheap — the connector sink answers MAX from its manifest
+  *     stats. [[deltaAgainst]] keeps the lazy form (a broadcast single-row
+  *     cross join) for callers that compose the delta into a larger plan;
   *   - PO numbers stay StringType and compare lexicographically — matching
   *     the reference's string `>` ('is greater than', bin:81); never cast to
   *     numeric (SURVEY.md §7 "hard parts").
@@ -69,15 +72,23 @@ object WatermarkEtl {
   /** Delta of an arbitrary source vs an arbitrary already-loaded sink (both
     * carrying a `po_number` column). Broadcast cross join keeps it lazy. */
   def deltaAgainst(source: DataFrame, sink: DataFrame): DataFrame =
+    newerThan(source.crossJoin(broadcast(watermark(sink))),
+      coalesce(col("wm"), lit("")))
+
+  /** Source rows with `po_number > wm`, projected to the sink's five
+    * columns in COLUMN_VALUES order and sorted ascending by PO (R6-R9). */
+  private def newerThan(source: DataFrame, wm: Column): DataFrame =
     source
-      .crossJoin(broadcast(watermark(sink)))
-      .filter(col("po_number") > coalesce(col("wm"), lit("")))
+      .filter(col("po_number") > wm)
       .select(col("vendor"), col("description"), col("picker_erk"),
         col("charge_code"), col("po_number"))
       .orderBy(col("po_number"))
 
-  /** Full run: compute the delta vs the sink at `sinkPath` and append it
-    * (R4). Two sink transports behind `viaConnector`:
+  /** Full run: read the watermark of the sink at `sinkPath`, then append
+    * the source rows newer than it (R4). The watermark reaches the source
+    * as a literal (`""` for an empty sink), so a source with filter
+    * pushdown returns only the delta. Two sink transports behind
+    * `viaConnector`:
     *
     *   - `false`: parquet via `DataFrameWriter` — the lake-table shape;
     *   - `true`: the [[graft.sources.FormSinkSource]] DSv2 connector — the
@@ -100,7 +111,8 @@ object WatermarkEtl {
           .option("path", sinkPath).load()
       else if (new java.io.File(sinkPath).exists) spark.read.parquet(sinkPath)
       else spark.emptyDataFrame.withColumn("po_number", lit(null).cast("string"))
-    val d = deltaAgainst(source, sink.select(col("po_number")))
+    val wm = watermark(sink.select(col("po_number"))).head().getString(0)
+    val d = newerThan(source, lit(Option(wm).getOrElse("")))
     val obs = org.apache.spark.sql.Observation()
     val observed = d.observe(obs, count(lit(1)).as("n"))
     if (viaConnector)

@@ -51,7 +51,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *     without re-reading the table. Append-only by contract: a range
   *     spanning a truncate/compaction rewrite is rejected loudly;
   *   - **readable back** (`SupportsRead` with column pruning), so the
-  *     watermark MAX-over-sink read (R3) runs through the same connector;
+  *     watermark MAX-over-sink read (R3) runs through the same connector.
+  *     An ungrouped MAX/MIN/COUNT(*) is answered on the driver from the
+  *     manifest's per-file stats, so the watermark costs one manifest read,
+  *     not a pass over the table; only files from manifests written before
+  *     stats existed are still opened;
   *   - **manifest-stats file skipping**: each commit records per-file
   *     rows/min/max in the manifest (collected inline by the task writers),
   *     and the scan prunes whole files whose range provably excludes a
@@ -102,30 +106,33 @@ object FormSinkSource {
   private def manifestFile(path: String, version: Long): Path =
     manifestDir(path).resolve(f"manifest-v$version%010d.json")
 
-  /** Newest manifest: (version, file names it makes visible). Version 0 with
-    * no files when the table has never committed. */
-  private[sources] def currentManifest(path: String): (Long, Seq[String]) = {
-    val (v, names, _) = currentManifestFull(path)
-    (v, names)
-  }
+  /** One parsed manifest version: the file names it makes visible (in
+    * listing order), their stats, and the streaming-epoch watermarks it
+    * carries. Version 0 with no files when the table has never committed.
+    *
+    * `epochs` is `{queryId -> last committed epochId}`, carried forward by
+    * every commit and consulted BEFORE committing a streaming epoch, so a
+    * replayed micro-batch after a restart is recognized and skipped — the
+    * manifest swap and the epoch record are the SAME atomic publication,
+    * which is what makes streaming-into-the-sink exactly-once. */
+  private[sources] case class Manifest(version: Long, files: Seq[String],
+                                       stats: Map[String, FileStats],
+                                       epochs: Map[String, Long])
 
-  private[sources] def currentManifestFull(path: String): (Long, Seq[String], Map[String, FileStats]) = {
-    val newest =
-      graft.util.Scratch.listEntries(manifestDir(path))
-        .flatMap(p => p.getFileName.toString match {
-          case ManifestName(v) => Some(v.toLong -> p)
-          case _               => None // tmp files mid-publish
-        }).maxByOption(_._1)
-    newest match {
-      case None => (0L, Seq.empty, Map.empty)
-      case Some((v, p)) =>
-        val (names, stats) = readManifest(p)
-        (v, names, stats)
+  /** The newest manifest, listed and parsed once. */
+  private[sources] def latestManifest(path: String): Manifest =
+    graft.util.Scratch.listEntries(manifestDir(path))
+      .flatMap(p => p.getFileName.toString match {
+        case ManifestName(v) => Some(v.toLong -> p)
+        case _               => None // tmp files mid-publish
+      }).maxByOption(_._1) match {
+      case None         => Manifest(0L, Seq.empty, Map.empty, Map.empty)
+      case Some((v, p)) => readManifest(v, p)
     }
-  }
 
   /** Per-data-file column statistics, written into the manifest at commit
-    * time and consulted at scan planning for FILE SKIPPING: a pushed
+    * time. Scan planning answers pushed MAX/MIN/COUNT(*) from them and
+    * consults them for FILE SKIPPING: a pushed
     * comparison filter that provably matches no row of a file prunes the
     * whole file before any task is scheduled — at a 100 TB append log this
     * is what makes the watermark delta read `po_number > wm` touch only the
@@ -136,7 +143,7 @@ object FormSinkSource {
                                         mins: Map[String, String],
                                         maxs: Map[String, String])
 
-  private def readManifest(p: Path): (Seq[String], Map[String, FileStats]) = {
+  private def readManifest(version: Long, p: Path): Manifest = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.readTree(Files.readAllBytes(p))
     val files = root.get("files")
@@ -154,7 +161,11 @@ object FormSinkSource {
         }
       }.toMap
     }.getOrElse(Map.empty)
-    (names, stats)
+    val epochs = Option(root.get("epochs")).map { e =>
+      e.properties().iterator().asScala
+        .map(en => en.getKey -> en.getValue.asLong()).toMap
+    }.getOrElse(Map.empty[String, Long])
+    Manifest(version, names, stats, epochs)
   }
 
   /** Manifest listing + stats as of `version` (empty at 0, fatal if
@@ -165,7 +176,8 @@ object FormSinkSource {
     val p = manifestFile(path, version)
     require(Files.exists(p),
       s"form sink: no manifest for version=$version at $path (vacuumed or never committed)")
-    readManifest(p)
+    val m = readManifest(version, p)
+    (m.files, m.stats)
   }
 
   /** Change feed: the files ADDED strictly after version `from`, up to and
@@ -188,9 +200,6 @@ object FormSinkSource {
     (after.filterNot(beforeSet.contains), stats)
   }
 
-  /** Publish `visible` as manifest version `version` — atomically, and only
-    * if that version does not exist yet. Returns false when another commit
-    * won the version (caller re-reads and retries on top of it). */
   /** Remove one job's (now-unneeded) staging directory and its contents. */
   private[sources] def sweepStaging(staging: Path): Unit =
     if (Files.isDirectory(staging)) {
@@ -198,29 +207,9 @@ object FormSinkSource {
       Files.deleteIfExists(staging)
     }
 
-  /** Streaming-epoch watermarks: the newest manifest's optional
-    * `epochs: {queryId -> last committed epochId}` map. Carried forward by
-    * every streaming commit and consulted BEFORE committing an epoch, so a
-    * replayed micro-batch after a restart is recognized and skipped — the
-    * manifest swap and the epoch record are the SAME atomic publication,
-    * which is what makes streaming-into-the-sink exactly-once. */
-  private[sources] def currentEpochs(path: String): Map[String, Long] = {
-    val newest = graft.util.Scratch.listEntries(manifestDir(path))
-      .flatMap(p => p.getFileName.toString match {
-        case ManifestName(v) => Some(v.toLong -> p)
-        case _               => None
-      }).maxByOption(_._1)
-    newest match {
-      case None => Map.empty
-      case Some((_, p)) =>
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        Option(mapper.readTree(Files.readAllBytes(p)).get("epochs")).map { e =>
-          e.properties().iterator().asScala
-            .map(en => en.getKey -> en.getValue.asLong()).toMap
-        }.getOrElse(Map.empty)
-    }
-  }
-
+  /** Publish `visible` as manifest version `version` — atomically, and only
+    * if that version does not exist yet. Returns false when another commit
+    * won the version (caller re-reads and retries on top of it). */
   private[sources] def tryPublishManifest(path: String, version: Long,
                                           visible: Seq[String],
                                           stats: Map[String, FileStats] = Map.empty,
@@ -260,7 +249,7 @@ object FormSinkSource {
     * deterministic) order. Files present in the directory but not in the
     * manifest are invisible orphans from an uncommitted job. */
   private[sources] def committedFiles(path: String): Seq[Path] =
-    currentManifest(path)._2.map(dataDir(path).resolve)
+    latestManifest(path).files.map(dataDir(path).resolve)
 
   /** OPTIMIZE-style compaction: concatenate the newest snapshot's files
     * (in manifest order, so the row sequence is unchanged) into one file
@@ -272,7 +261,7 @@ object FormSinkSource {
     * retries when convenient. Small-file pressure is real at a 100 TB
     * ingest cadence — every incremental tick adds task-count files. */
   def compact(path: String): Option[Long] = {
-    val (version, files, _) = currentManifestFull(path)
+    val Manifest(version, files, _, epochs) = latestManifest(path)
     if (files.size <= 1) return Some(version) // already compact
     // rows stream through the codec tier (decode + re-encode — with the
     // columnar default this is also how a jsonl-era table migrates), and
@@ -292,7 +281,7 @@ object FormSinkSource {
         cw.finish()
       } catch { case e: Throwable => cw.abort(); throw e }
     if (tryPublishManifest(path, version + 1, Seq(mergedName),
-        Map(mergedName -> fs), currentEpochs(path)))
+        Map(mergedName -> fs), epochs))
       Some(version + 1)
     else { Files.deleteIfExists(merged); None } // lost to a concurrent commit
   }
@@ -362,7 +351,7 @@ object FormSinkSource {
       .drop("__cluster_key")
       .write.format(Format).mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("path", path).save()
-    currentManifest(path)._1
+    latestManifest(path).version
   }
 
   /** INCREMENTAL OPTIMIZE-CLUSTER — the write-time-clustering story's
@@ -399,7 +388,7 @@ object FormSinkSource {
       rowsPerFile: Long = 1000000L): Option[(Long, Int, Int, Int)] = {
     require(schema.fieldNames.contains(sortCol), s"unknown column $sortCol")
     require(rowsPerFile > 0, s"rowsPerFile must be positive, got $rowsPerFile")
-    val (version, files, stats) = currentManifestFull(path)
+    val Manifest(version, files, stats, epochs) = latestManifest(path)
     def bin(x: String) = UTF8String.fromString(x)
     // (file, range): None range = all-null column (overlaps nothing);
     // missing stats = unknown (overlaps everything)
@@ -505,8 +494,7 @@ object FormSinkSource {
     val visible = carried ++ newEntries.map(_._1)
     val newStats =
       carried.flatMap(f => stats.get(f).map(f -> _)).toMap ++ newEntries.toMap
-    if (tryPublishManifest(path, version + 1, visible, newStats,
-        currentEpochs(path)))
+    if (tryPublishManifest(path, version + 1, visible, newStats, epochs))
       Some((version + 1, groups.size, groupSet.size, carried.size))
     else { created.foreach(Files.deleteIfExists(_)); None } // lost the race
   }
@@ -518,7 +506,7 @@ object FormSinkSource {
     * records per-file stats). 0 when any file lacks stats (pre-stats
     * history) — callers floor their derived width. */
   def committedRows(path: String): Long = {
-    val (_, files, stats) = currentManifestFull(path)
+    val Manifest(_, files, stats, _) = latestManifest(path)
     // all-or-nothing (r17 ADVICE): summing only the files that HAVE stats
     // would report a confident-looking undercount for a partial-stats
     // history and undersize the derived rewrite width — the documented
@@ -533,7 +521,7 @@ object FormSinkSource {
     * (q350) can measure their effect; cost is one manifest read, no data
     * IO. */
   def skippingCensus(path: String, filters: Seq[sqlf.Filter]): (Int, Int) = {
-    val (_, fileNames, stats) = currentManifestFull(path)
+    val Manifest(_, fileNames, stats, _) = latestManifest(path)
     val open = fileNames.count(f =>
       filters.forall(fl => mayMatch(stats.get(f), fl)))
     (open, fileNames.size)
@@ -541,7 +529,10 @@ object FormSinkSource {
 
   /** Public snapshot inspection: (current version, the data-file names it
     * makes visible) — the `DESCRIBE HISTORY`-lite any table format exposes. */
-  def snapshotInfo(path: String): (Long, Seq[String]) = currentManifest(path)
+  def snapshotInfo(path: String): (Long, Seq[String]) = {
+    val m = latestManifest(path)
+    (m.version, m.files)
+  }
 
   /** Row-level DELETE as copy-on-write — the lakehouse `DELETE FROM t WHERE p`
     * over an immutable-file table: files whose manifest stats PROVE the
@@ -568,13 +559,12 @@ object FormSinkSource {
     // file exists — validating lazily inside the row loop would leave the
     // already-written `deleted-*` survivor files as orphans until vacuum.
     eval3(_ => None, filter)
-    val (version, files, stats) = currentManifestFull(path)
+    val Manifest(version, files, stats, epochs) = latestManifest(path)
     val (out, created) = rewriteSurvivors(path, version, files, stats, filter)
     if (created.isEmpty && out.map(_._1) == files)
       return Some(version) // stats proved a no-op or the predicate matched nothing
     if (tryPublishManifest(path, version + 1, out.map(_._1),
-        out.collect { case (n, Some(fs)) => n -> fs }.toMap,
-        currentEpochs(path)))
+        out.collect { case (n, Some(fs)) => n -> fs }.toMap, epochs))
       Some(version + 1)
     else { created.foreach(Files.deleteIfExists(_)); None } // lost the race
   }
@@ -665,7 +655,7 @@ object FormSinkSource {
       "every MERGE image needs a non-null key cell")
     val byKey = images.map(r => r(keyCol) -> r).toMap
     require(byKey.size == images.size, "duplicate keys in the MERGE source")
-    val (version, files, stats) = currentManifestFull(path)
+    val Manifest(version, files, stats, epochs) = latestManifest(path)
     def bin(x: String) = UTF8String.fromString(x)
     // a file may hold key k only if its [min,max] range covers k; a file
     // with no stats (legacy) or an all-null key column range must be read
@@ -726,8 +716,7 @@ object FormSinkSource {
     }
     if (created.isEmpty) return Some(version) // nothing matched, nothing new
     if (tryPublishManifest(path, version + 1, out.map(_._1).toSeq,
-        out.collect { case (n, Some(fs)) => n -> fs }.toMap,
-        currentEpochs(path)))
+        out.collect { case (n, Some(fs)) => n -> fs }.toMap, epochs))
       Some(version + 1)
     else { created.foreach(Files.deleteIfExists(_)); None } // lost the race
   }
@@ -851,7 +840,7 @@ object FormSinkSource {
     * default would let a routine vacuum race a concurrent commit's phase-1
     * files and lose that commit's rows. Returns deleted paths. */
   def vacuum(path: String, minAgeMs: Long = 10 * 60 * 1000L): Seq[Path] = {
-    val (version, referenced) = currentManifest(path)
+    val Manifest(version, referenced, _, _) = latestManifest(path)
     val cutoff = System.currentTimeMillis() - minAgeMs
     def oldEnough(p: Path): Boolean =
       Files.getLastModifiedTime(p).toMillis <= cutoff
@@ -905,7 +894,7 @@ private class FormSinkTable(path: String) extends Table
       Option(options.get("changesFromVersion")).map { from =>
         (from.toLong,
           Option(options.get("changesToVersion")).map(_.toLong)
-            .getOrElse(FormSinkSource.currentManifest(path)._1))
+            .getOrElse(FormSinkSource.latestManifest(path).version))
       })
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -1004,8 +993,8 @@ private class FormSinkStreamingWrite(path: String, schema: StructType, queryId: 
       m.fileName -> FormSinkSource.FileStats(m.rows, m.mins, m.maxs)).toMap
     var published = false
     while (!published) {
-      val (version, current, currentStats) = FormSinkSource.currentManifestFull(path)
-      val epochs = FormSinkSource.currentEpochs(path)
+      val FormSinkSource.Manifest(version, current, currentStats, epochs) =
+        FormSinkSource.latestManifest(path)
       // replayed epoch (restart re-ran a committed micro-batch): drop it
       if (epochs.get(queryId).exists(_ >= epochId)) {
         FormSinkSource.sweepStaging(staging)
@@ -1092,7 +1081,8 @@ private class FormSinkBatchWrite(path: String, schema: StructType,
     // manifest and stacks this job's files on top of it.
     var published = false
     while (!published) {
-      val (version, current, currentStats) = FormSinkSource.currentManifestFull(path)
+      val FormSinkSource.Manifest(version, current, currentStats, epochs) =
+        FormSinkSource.latestManifest(path)
       // REPLACE WHERE: copy-on-write the snapshot's files against the
       // predicate (stats-skipped files carry over untouched), then stack
       // this job's new files on top — ONE swap covers delete + append, so
@@ -1112,7 +1102,7 @@ private class FormSinkBatchWrite(path: String, schema: StructType,
       // degrade an older file from "skippable" back to "always read"
       val stats = survivors.collect { case (n, Some(fs)) => n -> fs }.toMap ++ newStats
       published = FormSinkSource.tryPublishManifest(path, version + 1, visible, stats,
-        FormSinkSource.currentEpochs(path))
+        epochs)
       if (!published) rewrites.foreach(Files.deleteIfExists(_))
       // truncate drops the old files from the manifest; physically delete
       // them only AFTER the swap (readers of the old manifest mid-scan keep
@@ -1241,9 +1231,11 @@ private class FormSinkScanBuilder(path: String, versionAsOf: Option[Long],
 
   /** R3 sink-side watermark: an ungrouped MAX/MIN/COUNT(*) evaluates inside
     * the sink scan (the reference reads its watermark FROM the sink table,
-    * bin:53-69) — same complete-pushdown contract as [[FormPipelineSource]],
-    * including the non-empty guard (see the note there: an outer count()
-    * can offer an empty Aggregation, which must be refused). */
+    * bin:53-69), from the manifest stats where every commit already
+    * recorded each file's exact rows/min/max — same complete-pushdown
+    * contract as [[FormPipelineSource]], including the non-empty guard
+    * (see the note there: an outer count() can offer an empty Aggregation,
+    * which must be refused). */
   private def translate(f: org.apache.spark.sql.connector.expressions.aggregate.AggregateFunc): Option[PushedAgg] = f match {
     case m: org.apache.spark.sql.connector.expressions.aggregate.Max =>
       fieldOf(m.column).map(PushedAgg("MAX", _))
@@ -1329,25 +1321,10 @@ private class FormSinkScan(path: String, required: StructType,
               s"form sink time travel: versionAsOf=$v — ${e.getMessage}", e)
         }
       case (None, None) =>
-        val (_, names, stats) = FormSinkSource.currentManifestFull(path)
-        (names, stats)
+        val m = FormSinkSource.latestManifest(path)
+        (m.files, m.stats)
     }
 
-  /** The snapshot's files minus those whose manifest stats prove no row can
-    * satisfy every pushed filter — the delta read `po_number > wm` opens
-    * only the newest commit's files, not the whole append history. The
-    * (survivors, snapshot-size) census is published to
-    * [[FormSinkSource.lastScanFileCensus]] so specs and queries can assert
-    * skipping actually engaged, not just that results were correct. */
-  private def snapshot(): Seq[Path] = {
-    val (names, stats) = snapshotNames()
-    // static pushed filters AND runtime join-key filters prune identically
-    val pruners = skip ++ runtime
-    val survivors =
-      names.filter(n => pruners.forall(FormSinkSource.mayMatch(stats.get(n), _)))
-    FormSinkSource.recordScanCensus(survivors.size, names.size)
-    survivors.map(FormSinkSource.dataDir(path).resolve)
-  }
   override def readSchema(): StructType =
     if (aggs.isEmpty) required
     else StructType(aggs.map {
@@ -1363,13 +1340,35 @@ private class FormSinkScan(path: String, required: StructType,
       s"PushedAggregates: [${aggs.mkString(", ")}], " +
       s"SkipFilters: [${skip.mkString(", ")}], " +
       s"ReadSchema: ${readSchema().simpleString}"
-  override def planInputPartitions(): Array[InputPartition] =
-    // complete pushdown → exactly one partition over ALL committed files
-    // (an empty sink must still emit its single aggregate row)
-    if (aggs.nonEmpty)
-      Array(SinkAggPartition(snapshot().map(_.toString)))
-    else snapshot()
-      .map(p => SinkFilePartition(p.toString): InputPartition).toArray
+  /** One partition per snapshot file, minus the files whose manifest stats
+    * prove no row can satisfy every pushed filter — the delta read
+    * `po_number > wm` opens only the newest commit's files, not the whole
+    * append history. A pushed aggregate is answered from the stats of the
+    * same files on the driver. The (files opened, snapshot size) census
+    * is published to [[FormSinkSource.lastScanFileCensus]] so specs and
+    * queries can assert skipping actually engaged, not just that results
+    * were correct. */
+  override def planInputPartitions(): Array[InputPartition] = {
+    val (names, stats) = snapshotNames()
+    // static pushed filters AND runtime join-key filters prune identically
+    val pruners = skip ++ runtime
+    val survivors =
+      names.filter(n => pruners.forall(FormSinkSource.mayMatch(stats.get(n), _)))
+    def file(n: String) = FormSinkSource.dataDir(path).resolve(n).toString
+    if (aggs.nonEmpty) {
+      // complete pushdown → exactly one partition (an empty sink must still
+      // emit its single aggregate row); only files without manifest stats
+      // are opened, by that partition's task
+      val (known, legacy) = survivors.partition(stats.contains)
+      val partial = new SinkAggAcc(aggs)
+      known.foreach(n => partial.addStats(stats(n)))
+      FormSinkSource.recordScanCensus(legacy.size, names.size)
+      Array(SinkAggPartition(legacy.map(file), partial))
+    } else {
+      FormSinkSource.recordScanCensus(survivors.size, names.size)
+      survivors.map(n => SinkFilePartition(file(n)): InputPartition).toArray
+    }
+  }
 
   /** Table statistics from the SAME manifest the skipper reads: exact row
     * counts (commit-time collected) and on-disk bytes of the
@@ -1394,7 +1393,7 @@ private class FormSinkScan(path: String, required: StructType,
   }
   override def createReaderFactory(): PartitionReaderFactory =
     if (aggs.isEmpty) new FormSinkReaderFactory(required)
-    else new FormSinkAggReaderFactory(aggs)
+    else FormSinkAggReaderFactory
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
@@ -1419,7 +1418,7 @@ private class FormSinkMicroBatchStream(path: String, required: StructType)
   import org.apache.spark.sql.connector.read.streaming.Offset
   override def initialOffset(): Offset = SinkVersionOffset(0L)
   override def latestOffset(): Offset =
-    SinkVersionOffset(FormSinkSource.currentManifest(path)._1)
+    SinkVersionOffset(FormSinkSource.latestManifest(path).version)
   override def deserializeOffset(json: String): Offset =
     SinkVersionOffset(json.toLong)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
@@ -1436,54 +1435,86 @@ private class FormSinkMicroBatchStream(path: String, required: StructType)
   override def stop(): Unit = ()
 }
 
-private case class SinkAggPartition(files: Seq[String]) extends InputPartition
+/** Running state of the pushed ungrouped aggregates: COUNT(*) and, per
+  * MAX/MIN slot, the extremum so far. Extrema compare in UTF-8 binary order
+  * — `UTF8String.compareTo`, the SAME order Spark's own string comparisons
+  * use — and ignore nulls (SQL aggregate semantics). Java `String` </> is
+  * UTF-16 code-unit order, which diverges from Spark for
+  * supplementary-plane characters, so a pushed MAX would differ from the
+  * unpushed plan on non-BMP data. */
+private final class SinkAggAcc(aggs: Seq[PushedAgg]) extends Serializable {
+  private var count = 0L
+  private val extrema = new Array[UTF8String](aggs.length)
 
-/** One pass over every committed file, one output row: MAX/MIN compare in
-  * UTF-8 binary order — `UTF8String.compareTo`, the SAME order Spark's own
-  * string comparisons use — and ignore nulls (SQL aggregate semantics);
-  * COUNT(*) counts all rows. Java `String` </> is UTF-16 code-unit order,
-  * which diverges from Spark for supplementary-plane characters, so a
-  * pushed MAX would differ from the unpushed plan on non-BMP data. */
-private class FormSinkAggReaderFactory(aggs: Seq[PushedAgg])
-    extends PartitionReaderFactory {
+  private def offer(j: Int, v: UTF8String): Unit =
+    if (v != null && (extrema(j) == null || {
+      val c = v.compareTo(extrema(j))
+      if (aggs(j).fn == "MAX") c > 0 else c < 0
+    })) extrema(j) = v
+
+  /** Fold one file from its manifest stats alone: the exact row count and
+    * per-column min/max the commit recorded. A column absent from `mins`
+    * was all-null in the file, so it offers nothing. */
+  def addStats(s: FormSinkSource.FileStats): Unit = {
+    count += s.rows
+    aggs.zipWithIndex.foreach { case (a, j) =>
+      val bound = a.fn match {
+        case "MAX" => s.maxs.get(a.field)
+        case "MIN" => s.mins.get(a.field)
+        case _     => None
+      }
+      bound.foreach(v => offer(j, UTF8String.fromString(v)))
+    }
+  }
+
+  /** Fold one decoded row; `cell(field)` is its (nullable) cell. */
+  def addRow(cell: String => UTF8String): Unit = {
+    count += 1
+    aggs.zipWithIndex.foreach { case (a, j) =>
+      if (a.fn != "COUNT_STAR") offer(j, cell(a.field))
+    }
+  }
+
+  def fields: Seq[String] =
+    aggs.collect { case PushedAgg(fn, f) if fn != "COUNT_STAR" => f }.distinct
+
+  def result: InternalRow = InternalRow.fromSeq(aggs.zipWithIndex.map {
+    case (PushedAgg("COUNT_STAR", _), _) => count
+    case (_, j)                          => extrema(j)
+  })
+}
+
+/** The driver's partial aggregate over every file with manifest stats, plus
+  * the stats-less files (manifests written before stats existed) it could
+  * not answer. */
+private case class SinkAggPartition(files: Seq[String], partial: SinkAggAcc)
+    extends InputPartition
+
+/** Opens the partition's stats-less files and folds their rows into the
+  * driver's partial result (each task deserializes its own copy of it):
+  * one output row. With no such files it opens nothing. */
+private object FormSinkAggReaderFactory extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val files = p.asInstanceOf[SinkAggPartition].files
+    val part = p.asInstanceOf[SinkAggPartition]
     new PartitionReader[InternalRow] {
       private var done = false
       override def next(): Boolean = !done
       override def get(): InternalRow = {
         done = true
-        var count = 0L
-        val acc = Array.fill[UTF8String](aggs.length)(null)
+        val acc = part.partial
         // read only the aggregated columns (COUNT(*) needs none — one
         // column keeps the row count observable through either codec)
-        val cols = aggs.collect {
-          case PushedAgg(fn, field) if fn != "COUNT_STAR" => field
-        }.distinct match {
+        val cols = acc.fields match {
           case Seq() => Seq(FormSinkSource.schema.fieldNames.head)
           case cs    => cs
         }
         val colIdx = cols.zipWithIndex.toMap
-        files.foreach { f =>
+        part.files.foreach { f =>
           SinkCodec.foreachRow(Paths.get(f), cols) { cells =>
-            count += 1
-            aggs.zipWithIndex.foreach { case (a, j) =>
-              if (a.fn != "COUNT_STAR") {
-                val s = cells(colIdx(a.field))
-                if (s != null) {
-                  val cmp = if (acc(j) == null) 0 else s.compareTo(acc(j))
-                  val better = acc(j) == null ||
-                    (if (a.fn == "MAX") cmp > 0 else cmp < 0)
-                  if (better) acc(j) = s
-                }
-              }
-            }
+            acc.addRow(c => cells(colIdx(c)))
           }
         }
-        InternalRow.fromSeq(aggs.zipWithIndex.map {
-          case (PushedAgg("COUNT_STAR", _), _) => count
-          case (_, j) => acc(j)
-        })
+        acc.result
       }
       override def close(): Unit = ()
     }

@@ -2,8 +2,14 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SaveMode
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 import graft.etl.WatermarkEtl
 import graft.sources.FormSinkSource
@@ -196,6 +202,62 @@ class FormSinkSpec extends SparkSpec {
     val expectMax = sink.orderBy(col("po_number").desc).select("po_number").as[String].head()
     assert(row.getString(0) === expectMax && row.getString(0) === emoji)
     assert(row.getString(1) === "po-zzz")
+  }
+
+  /** Pushed MAX/MIN over two columns plus COUNT(*) on `sink` must equal
+    * Spark's own answer over the same rows, and open exactly `opened` of
+    * the snapshot's `total` files. */
+  private def assertPushedAggs(sink: DataFrame, opened: Int, total: Int): Unit = {
+    val aggs = Seq(max("po_number"), min("po_number"), max("charge_code"),
+      min("charge_code"), count(lit(1)))
+    val pushed = sink.agg(aggs.head, aggs.tail: _*)
+    val plan = pushed.queryExecution.executedPlan.toString()
+    assert(plan.contains("PushedAggregates: [MAX(po_number), MIN(po_number), " +
+      "MAX(charge_code), MIN(charge_code), COUNT(*)]"), plan.take(2000))
+    val got = pushed.collect().head
+    assert(FormSinkSource.lastScanFileCensus === ((opened, total)))
+    val rows = sink.collect()
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), sink.schema)
+    assert(got === local.agg(aggs.head, aggs.tail: _*).collect().head)
+  }
+
+  test("pushed MAX/MIN/COUNT(*) come from the manifest stats, through every table operation") {
+    val dir = tmp()
+    def load(opts: (String, Long)*): DataFrame =
+      opts.foldLeft(spark.read.format(FormSinkSource.Format).option("path", dir)) {
+        case (r, (k, v)) => r.option(k, v)
+      }.load()
+    def files: Int = FormSinkSource.snapshotInfo(dir)._2.size
+    feed(1, 100).repartition(2).write.format(FormSinkSource.Format)
+      .mode(SaveMode.Append).option("path", dir).save()
+    // one file whose charge_code is all-null: absent from its stats' mins
+    feed(101, 150).repartition(1).withColumn("charge_code", lit(null).cast("string"))
+      .write.format(FormSinkSource.Format)
+      .mode(SaveMode.Append).option("path", dir).save()
+    feed(151, 200).repartition(2).write.format(FormSinkSource.Format)
+      .mode(SaveMode.Append).option("path", dir).save()
+    assert(files === 5)
+    assertPushedAggs(load(), 0, 5)
+    assertPushedAggs(load("versionAsOf" -> 2L), 0, 3)
+    // the change feed (1, 2] is the all-null file alone: null MAX/MIN
+    assertPushedAggs(load("changesFromVersion" -> 1L, "changesToVersion" -> 2L), 0, 1)
+    assert(load("changesFromVersion" -> 1L, "changesToVersion" -> 2L)
+      .agg(max("charge_code")).collect().head.isNullAt(0))
+    assertPushedAggs(load("changesFromVersion" -> 1L), 0, 3)
+    assert(FormSinkSource.delete(dir,
+      org.apache.spark.sql.sources.GreaterThan("po_number", "U000000180D")).isDefined)
+    assertPushedAggs(load(), 0, files)
+    assert(FormSinkSource.compact(dir).isDefined)
+    assertPushedAggs(load(), 0, 1)
+    feed(300, 320).write.format(FormSinkSource.Format)
+      .mode(SaveMode.Overwrite).option("path", dir).save()
+    assertPushedAggs(load(), 0, files)
+  }
+
+  test("a file without manifest stats is the only file a pushed aggregate opens") {
+    val dir = tmp()
+    clusteredAppend2(dir)
+    assertPushedAggs(spark.read.format(FormSinkSource.Format).option("path", dir).load(), 1, 2)
   }
 
   test("reading an empty sink yields zero rows with the declared schema") {
@@ -490,8 +552,9 @@ class FormSinkSpec extends SparkSpec {
     assert(delta.count() === feed(201, 300).count())
     // the published census agrees: the delta read OPENED 1 of 3 files
     assert(FormSinkSource.lastScanFileCensus === (1, 3))
-    // and an unfiltered read opens everything (census shows no pruning)
-    assert(all.count() === 300)
+    // and an unfiltered row read opens everything (census shows no pruning;
+    // a bare count() would be answered from the manifest, opening none)
+    assert(all.collect().length === 300)
     assert(FormSinkSource.lastScanFileCensus === (3, 3))
   }
 
@@ -598,6 +661,33 @@ class FormSinkSpec extends SparkSpec {
     assert(n1 + n2 === full.count())
     assert(spark.read.format(FormSinkSource.Format).option("path", dir).load()
       .count() === n1 + n2)
+  }
+
+  test("runIncrement pushes the sink watermark into the source as a literal") {
+    val dir = tmp()
+    def source(rows: Int): DataFrame =
+      spark.read.format("graft.sources.FormPipelineSource")
+        .option("rows", rows).option("partitions", 4).load()
+        .select("vendor", "description", "picker_erk", "charge_code", "po_number")
+    assert(WatermarkEtl.runIncrement(spark, source(200), dir, viaConnector = true) === 200)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString())
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(WatermarkEtl.runIncrement(spark, source(300), dir, viaConnector = true) === 100)
+      eventually(timeout(30.seconds)) {
+        assert(plans.asScala.exists(_.contains("FormPipelineScan rows=300")))
+      }
+    } finally spark.listenerManager.unregister(listener)
+    val append = plans.asScala.filter(_.contains("FormPipelineScan rows=300")).toSeq
+    assert(append.size === 1, append)
+    assert(append.head.contains("PushedFilters: [GreaterThan(po_number,U000000199D)]"),
+      append.head)
+    assert(!append.head.contains("BroadcastNestedLoopJoin"), append.head)
   }
 
   test("empty appends are elided: a no-op tick adds no manifest version") {
