@@ -13,12 +13,8 @@ object Bench {
     // extra conf pass-through for special-stage legs (e.g. bench_skew.sh
     // sizes the AQE skew-split thresholds to the local Zipf stage); absent
     // in the driver's official runs, so those are untouched
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2).map(_.trim) match {
-        case Array(k, v) if k.nonEmpty => builder.config(k, v)
-        case _                         => ()
-      }
-    })
+    sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(graft.util.Sizing.extraConf)
+      .foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Dev-loop filter: SPARK_GRAFT_ONLY=q42,q38 benches just those queries.

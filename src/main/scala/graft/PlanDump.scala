@@ -26,12 +26,8 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
     // same extra-conf pass-through as Bench: tier-forcing confs (e.g.
     // graft.lpa.broadcastNodes=0) let the dumps show the fallback plans
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2).map(_.trim) match {
-        case Array(k, v) if k.nonEmpty => builder.config(k, v)
-        case _                         => ()
-      }
-    })
+    sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(graft.util.Sizing.extraConf)
+      .foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(out))

@@ -16,25 +16,20 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Data-file codec tier of [[FormSinkSource]] — the r17 verdict's weak
   * item 2 ("the sink's JSONL data format is the scale-killer, measured
-  * twice"): every data file under a sink table is now either
+  * twice"). Every NEW data file is snappy parquet (`.parquet`) of optional
+  * UTF-8 string columns via parquet-mr — dictionary + RLE encoded, so the
+  * OPTIMIZE-CLUSTER full-table rewrite (2 reads + 2 writes of the whole
+  * table, q350/q354's 139 s sf10 absolute) moves columnar bytes instead of
+  * a row-at-a-time Jackson string codec, and a pruned scan decodes only
+  * the requested columns.
   *
-  *   - **columnar** (`.parquet`, the default): snappy parquet of optional
-  *     UTF-8 string columns via parquet-mr — dictionary + RLE encoded, so
-  *     the OPTIMIZE-CLUSTER full-table rewrite (2 reads + 2 writes of the
-  *     whole table, q350/q354's 139 s sf10 absolute) moves columnar bytes
-  *     instead of a row-at-a-time Jackson string codec, and a pruned scan
-  *     decodes only the requested columns; or
-  *   - **row-JSON** (`.jsonl`): the original Jackson JSON-lines tier,
-  *     retained for reference-parity tests and pre-existing tables.
-  *
-  * The format is a property of each FILE (dispatch on extension), never of
-  * the table: the manifest/commit protocol is byte-identical to r17, old
-  * `.jsonl` history keeps reading, and a table can mix eras freely — a
-  * compaction or clustered rewrite naturally migrates it to the active
-  * format. New files follow `spark.graft.sink.format` (default
-  * `parquet`). Both codecs round-trip cell STRINGS exactly (the sink's
-  * cells are strings by model, SURVEY §1.2), and the manifest min/max
-  * stats are still collected inline at write time by the callers — the
+  * Row-JSON files (`.jsonl`, the original JSON-lines tier) are read-only
+  * history: readers dispatch on each FILE's extension, so old history keeps
+  * reading, a table can mix eras, and a compaction or clustered rewrite
+  * migrates it to parquet. Both readers round-trip cell STRINGS exactly (the
+  * sink's cells are strings by model, SURVEY §1.2); the manifest min/max
+  * stats are collected inline by the writers, and every mutation publishes
+  * through the one manifest swap, [[FormSinkSource.commit]] — the
   * file-skipping contract is codec-independent. */
 private[sources] object SinkCodec {
   val JsonlExt = ".jsonl"
@@ -44,27 +39,6 @@ private[sources] object SinkCodec {
     * and any listing hygiene — manifests and tmp files are excluded.) */
   def isDataFile(name: String): Boolean =
     name.endsWith(JsonlExt) || name.endsWith(ParquetExt)
-
-  /** Extension for NEW data files, from the active session's
-    * `spark.graft.sink.format` (driver-side decision — task writers get
-    * their file name, extension included, from the driver-constructed
-    * factory). Default columnar. FAILS LOUD when the calling thread has
-    * no active session (r18 ADVICE): a silent parquet default here would
-    * let driver-side maintenance invoked off-thread migrate a
-    * jsonl-pinned table to parquet against the session's configuration —
-    * mixed eras are legal, but only ever by the SESSION's choice. */
-  def activeExtension(): String =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .getOrElse(throw new IllegalStateException(
-        "no active SparkSession on this thread: the sink data-file format " +
-          "is session configuration (spark.graft.sink.format) — run " +
-          "maintenance from a session thread"))
-      .conf.get("spark.graft.sink.format", "parquet") match {
-      case "parquet" => ParquetExt
-      case "jsonl"   => JsonlExt
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.sink.format must be parquet or jsonl, got '$other'")
-    }
 
   /** All-optional-string parquet schema over `cols` — the sink's fixed
     * 5-string-column model (or a pruned subset for projected reads). */
@@ -79,39 +53,10 @@ private[sources] object SinkCodec {
 
   // ---- write ----------------------------------------------------------
 
-  /** Row-at-a-time writer over nullable UTF-8 cells in `cols` order.
-    * Callers own stats collection (min/max ride the manifest, not the
-    * codec) and must close() to seal the footer/flush. */
-  trait RowWriter {
-    def write(cells: Array[UTF8String]): Unit
-    def close(): Unit
-  }
-
-  def writer(file: Path, cols: Seq[String]): RowWriter =
-    if (file.getFileName.toString.endsWith(JsonlExt))
-      new JsonlWriter(file, cols)
-    else new ParquetRowWriter(file, cols)
-
-  private final class JsonlWriter(file: Path, cols: Seq[String])
-      extends RowWriter {
-    private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    private val out = Files.newBufferedWriter(file)
-    private val names = cols.toArray
-    override def write(cells: Array[UTF8String]): Unit = {
-      val node = mapper.createObjectNode()
-      var i = 0
-      while (i < names.length) {
-        if (cells(i) == null) node.putNull(names(i))
-        else node.put(names(i), cells(i).toString)
-        i += 1
-      }
-      out.write(mapper.writeValueAsString(node)); out.write("\n")
-    }
-    override def close(): Unit = out.close()
-  }
-
-  private final class ParquetRowWriter(file: Path, cols: Seq[String])
-      extends RowWriter {
+  /** Row-at-a-time parquet writer over nullable UTF-8 cells in `cols`
+    * order. Callers own stats collection (min/max ride the manifest, not
+    * the codec) and must close() to seal the footer. */
+  final class ParquetRowWriter(file: Path, cols: Seq[String]) {
     private val mt = messageType(cols)
     private val w = ExampleParquetWriter.builder(
         new org.apache.hadoop.fs.Path(file.toString))
@@ -120,7 +65,7 @@ private[sources] object SinkCodec {
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withWriterVersion(ParquetProperties.WriterVersion.PARQUET_1_0)
       .build()
-    override def write(cells: Array[UTF8String]): Unit = {
+    def write(cells: Array[UTF8String]): Unit = {
       val g = new SimpleGroup(mt)
       var i = 0
       while (i < cells.length) {
@@ -134,7 +79,7 @@ private[sources] object SinkCodec {
       }
       w.write(g)
     }
-    override def close(): Unit = w.close()
+    def close(): Unit = w.close()
   }
 
   // ---- read -----------------------------------------------------------

@@ -133,6 +133,14 @@ object Sizing {
     }
   }
 
+  /** `SPARK_GRAFT_CONF`'s `k=v;k=v` extra session conf, as pairs: keys
+    * and values trimmed, entries without `=` or with an empty key dropped. */
+  def extraConf(spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.flatMap(kv => kv.split("=", 2).map(_.trim) match {
+      case Array(k, v) if k.nonEmpty => Some(k -> v)
+      case _                         => None
+    })
+
   /** Spread a per-row-EXPENSIVE stage (codec encode/decode, XML parse,
     * regex surgery, curve-key formatting) across the session's cores.
     *

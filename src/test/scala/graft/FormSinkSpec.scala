@@ -47,12 +47,33 @@ class FormSinkSpec extends SparkSpec {
 
   test("codec tiers mix in one table: jsonl era + parquet era, one manifest protocol") {
     val dir = tmp()
-    // era 1: the original row-JSON tier (reference parity / old history)
-    spark.conf.set("spark.graft.sink.format", "jsonl")
-    try feed(1, 50).write.format(FormSinkSource.Format)
-      .mode(SaveMode.Append).option("path", dir).save()
-    finally spark.conf.unset("spark.graft.sink.format")
-    // era 2: the columnar default
+    // era 1: legacy history from the original row-JSON tier, which the sink
+    // now only reads — jsonl lines plus the version-1 manifest, with the
+    // file's stats, that published them
+    val era1 = feed(1, 50).collect().toSeq
+    val cols = FormSinkSource.schema.fieldNames.toSeq
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val legacy = "part-00000-0-legacy.jsonl"
+    Files.write(java.nio.file.Paths.get(dir, legacy), era1.map { r =>
+      val node = mapper.createObjectNode()
+      cols.foreach(c => Option(r.getAs[String](c)).fold(node.putNull(c))(node.put(c, _)))
+      mapper.writeValueAsString(node)
+    }.asJava)
+    val manifest = mapper.createObjectNode()
+    manifest.putArray("files").add(legacy)
+    val fs = manifest.putObject("stats").putObject(legacy)
+    fs.put("rows", era1.size)
+    val (mins, maxs) = (fs.putObject("mins"), fs.putObject("maxs"))
+    cols.foreach { c =>
+      // UTF-8 binary order, the order the sink's stats are kept in
+      val vs = era1.flatMap(r => Option(r.getAs[String](c)))
+        .map(org.apache.spark.unsafe.types.UTF8String.fromString)
+      if (vs.nonEmpty) { mins.put(c, vs.min.toString); maxs.put(c, vs.max.toString) }
+    }
+    Files.createDirectories(java.nio.file.Paths.get(dir, "_manifests"))
+    Files.write(java.nio.file.Paths.get(dir, "_manifests", "manifest-v0000000001.json"),
+      mapper.writeValueAsBytes(manifest))
+    // era 2: the parquet writer
     feed(51, 100).write.format(FormSinkSource.Format)
       .mode(SaveMode.Append).option("path", dir).save()
     val (_, names) = FormSinkSource.snapshotInfo(dir)
@@ -71,7 +92,7 @@ class FormSinkSpec extends SparkSpec {
     assert(total === 2 && scanned === 1,
       s"cross-codec skip census $scanned/$total")
     assert(hi === feed(51, 100).count())
-    // ...and a compaction migrates the jsonl era to the active format
+    // ...and a compaction migrates the jsonl era to parquet
     FormSinkSource.compact(dir)
     val (_, after) = FormSinkSource.snapshotInfo(dir)
     assert(after.size === 1 && after.head.endsWith(".parquet"), after)
