@@ -12,7 +12,7 @@ set -e
 cd "$(dirname "$0")/.."
 # salted forms + their unsalted twins, per-hot-key windows/sessions, the
 # profiler, and the two-phase agg: the queries whose plans CLAIM skew-safety
-QUERIES="q03_,q16_,q17_,q53_,q55_,q98_,q135_,q137_,q152_,q279_,q319_,q342_"
+QUERIES="q03,q16,q17,q53,q55,q98,q135,q137,q152,q279,q319,q342"
 REPS="${SPARK_GRAFT_REPS:-3}"
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" SPARK_GRAFT_ONLY="$QUERIES" SPARK_GRAFT_REPS="$REPS"
 # size the AQE skew-split thresholds to the local stage (the 256 MB default

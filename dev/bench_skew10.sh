@@ -9,7 +9,7 @@
 #   sbt -batch "runMain graft.ScaleData /root/testdata/sf0.1 scaledata/sf10zipf 100 zipf"
 set -e
 cd "$(dirname "$0")/.."
-QUERIES="q03_,q16_,q17_,q53_,q55_,q98_,q135_,q137_,q152_,q279_,q319_,q342_"
+QUERIES="q03,q16,q17,q53,q55,q98,q135,q137,q152,q279,q319,q342"
 REPS="${SPARK_GRAFT_REPS:-2}"
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" SPARK_GRAFT_ONLY="$QUERIES" SPARK_GRAFT_REPS="$REPS"
 export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-48g}"

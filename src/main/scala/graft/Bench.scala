@@ -1,91 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.util.Sizing.configureAdaptiveWidths(builder, sfDir, cpus.toInt)
-    // extra conf pass-through for special-stage legs (e.g. bench_skew.sh
-    // sizes the AQE skew-split thresholds to the local Zipf stage); absent
-    // in the driver's official runs, so those are untouched
-    sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(graft.util.Sizing.extraConf)
-      .foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Dev-loop filter: SPARK_GRAFT_ONLY=q42,q38 benches just those queries.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(f => f.exists(name.startsWith))
-    }
-    // Untimed warmup: initialize codegen/JIT, the Hadoop FS layer and the
-    // vectorized parquet reader once, so the first timed query measures the
-    // query rather than JVM startup (standard benchmark methodology).
-    try {
-      spark.range(1 << 20).selectExpr("sum(id)").collect()
-      spark.read.parquet(s"$sfDir/region.parquet").count()
-      // spin up the Structured Streaming machinery once (state store,
-      // checkpoint plumbing, micro-batch planner) so the first timed
-      // streaming query measures the query
-      val q = spark.readStream.format("rate").option("numPartitions", "1").load()
-        .groupBy().count()
-        .writeStream.format("memory").queryName("bench_warmup")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      // stop() in finally: an awaitTermination timeout must not leave the
-      // warmup stream running under the first timed queries
-      try q.awaitTermination(15000) finally q.stop()
-      // second streaming warmup, production-shaped: file source + watermark +
-      // session_window + RocksDB state store. r10's residual bench spread
-      // concentrated in 5 streaming queries — first-touch provider/JNI and
-      // state-store init, not plan noise — so pay those costs here, untimed.
-      val wdir = graft.util.Scratch.dir("graft-bench-warmup").toString
-      spark.range(200).selectExpr("id AS user_id",
-        "timestamp_micros(1700000000000000 + id * 1000000) AS ts")
-        .write.mode("overwrite").parquet(wdir)
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val savedProvider = spark.conf.getOption(providerKey)
-      try {
-        spark.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val wq = spark.readStream
-          .schema(spark.read.parquet(wdir).schema).parquet(wdir)
-          .withWatermark("ts", "1 hour")
-          .groupBy(org.apache.spark.sql.functions.session_window(
-            org.apache.spark.sql.functions.col("ts"), "10 minutes"),
-            org.apache.spark.sql.functions.col("user_id"))
-          .count()
-          .writeStream.format("memory").queryName("bench_warmup_stream")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try wq.awaitTermination(20000) finally wq.stop()
-      } finally savedProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-      // pre-stage the streaming band's three-file corpus (one-time ~30s at
-      // sf10) OUTSIDE the timed window: the first selected file-stream
-      // query would otherwise pay fixture IO inside its measured reps
-      // (r17 verdict item 5)
-      if (selected.exists { case (n, _) =>
-          graft.streaming.StreamingOps.FileStreamQueries.contains(n) })
-        graft.streaming.StreamingOps.preStageEvents(spark, sfDir)
-    } catch { case _: Throwable => () }
-    // cache hygiene between runs: clearCache drops the CacheManager entries
-    // too (a bare RDD-unpersist leaves stale InMemoryRelations that later
-    // matching plans silently recompute through); the RDD sweep after it
-    // catches any persist that bypassed the CacheManager
+    val selected = Harness.select(sys.env.get("SPARK_GRAFT_ONLY"))
+    val sfDir = Harness.sfDir
+    val spark = Harness.session(sfDir, Harness.cpus)
+    Harness.warm(spark, sfDir, selected.keys)
     def sweepCaches(): Unit = {
-      graft.util.CacheOnce.sweepAll() // orphaned one-action listeners first
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      Harness.sweep(spark)
       // ContextCleaner reaps shuffle files / broadcasts only when their
       // references are GC'd: without an explicit GC a multi-hundred-query
       // leg accumulates them for its whole lifetime, and late queries
@@ -164,7 +86,7 @@ object Bench {
             // a crashed query must never green-wash into a normal-looking
             // time: record the error, emit no timing at all
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-              .replaceAll("[\"\\\\\n\r\t]", " ").take(160)
+              .take(160)
             None
         }
         sweepCaches()
@@ -201,7 +123,7 @@ object Bench {
     def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val qs = results.map { case (k, (t, _)) => s"\"" + k + "\":" + r3(t) }
       .mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => s"\"" + k + "\":\"" + v + "\"" }
+    val errs = errors.map { case (k, v) => s"\"" + k + "\":" + Harness.jsonQuote(v) }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
     // aggregate noise telemetry rides the stdout line; the PER-QUERY spread

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB wall-clock profile of registered queries — the per-stage
   * evidence surface for scale claims (r16 verdict item 2): every Spark job
@@ -11,49 +10,22 @@ import org.apache.spark.sql.SparkSession
   * CHECKED stage by stage across scale factors instead of asserted from
   * the total. Dev/bench tooling, not part of the query surface.
   *
-  * Env: `SPARK_GRAFT_SF_DIR` (corpus), `SPARK_GRAFT_CPUS`,
-  * `SPARK_GRAFT_PROFILE_QUERY` (registered query name, or a comma-separated
-  * list — each profiled warm-then-timed in registration order, one JSON
-  * line each; a shared JVM matches Bench's shared-JVM methodology and
-  * amortizes startup over a sweep). Emits per query ONE JSON line:
+  * Env: `SPARK_GRAFT_ONLY` (required: the queries to profile, each
+  * warm-then-timed in name order in one shared JVM, matching Bench's
+  * shared-JVM methodology), and the [[Harness]] session variables. Emits
+  * per query ONE JSON line:
   * `{"query":…,"sf":…,"total_sec":…,"rows":…,"jobs":[{"job":id,
   * "site":…,"sec":…},…]}` — jobs in completion order.
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val names = sys.env.getOrElse("SPARK_GRAFT_PROFILE_QUERY",
-      "q335_projected_community_quality")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.util.Sizing.configureAdaptiveWidths(builder, sfDir, cpus.toInt)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: codegen/JIT + FS + vectorized parquet reader (the
-    // Bench warmup, minus streaming — graph queries never touch state)
-    spark.range(1 << 20).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    // streaming warmup + fixture pre-staging, matching Bench, when the
-    // sweep includes a streaming query (state-store/micro-batch first-touch
-    // must not be charged to the first profiled streaming query)
-    if (names.exists(_.contains("stream"))) {
-      try {
-        val q = spark.readStream.format("rate").option("numPartitions", "1")
-          .load().groupBy().count()
-          .writeStream.format("memory").queryName("profile_warmup")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination(15000) finally q.stop()
-        if (names.exists(graft.streaming.StreamingOps.FileStreamQueries.contains))
-          graft.streaming.StreamingOps.preStageEvents(spark, sfDir)
-      } catch { case _: Throwable => () }
-    }
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    require(Harness.tokens(only).nonEmpty,
+      "ProfileQuery profiles the queries SPARK_GRAFT_ONLY names; set it")
+    val selected = Harness.select(only).toSeq.sortBy(_._1)
+    val sfDir = Harness.sfDir
+    val spark = Harness.session(sfDir, Harness.cpus)
+    Harness.warm(spark, sfDir, selected.map(_._1))
 
     val inflight =
       new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
@@ -71,23 +43,17 @@ object ProfileQuery {
           done.add((je.jobId, site, (je.time - t0) / 1000.0))
         }
     })
-    def sweep(): Unit = {
-      graft.util.CacheOnce.sweepAll()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      System.gc()
-    }
-    def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    for (name <- names) {
+    def sweep(): Unit = { Harness.sweep(spark); System.gc() }
+    for ((name, fn) <- selected) {
       // run 0, untimed: JIT + OS page cache over the corpus — the profiled
       // run then matches the bench legs' min-of-reps conditions, so its
       // per-job ratios measure the PLAN, not first-touch disk reads
-      SparkEntry.queries(name)(spark, sfDir).collect()
+      fn(spark, sfDir).collect()
       sweep()
       done.clear()
       recording.set(true)
       val t0 = System.nanoTime()
-      val rows = SparkEntry.queries(name)(spark, sfDir).collect().length
+      val rows = fn(spark, sfDir).collect().length
       val totalSec = (System.nanoTime() - t0) / 1e9
       // drain the listener bus before reading `done`: a fixed sleep dropped
       // late JobEnd events on a loaded box (r17 ADVICE) — wait until every
@@ -102,10 +68,10 @@ object ProfileQuery {
       val jobsJson = {
         import scala.jdk.CollectionConverters._
         done.asScala.toSeq.sortBy(_._1).map { case (id, site, sec) =>
-          f"""{"job":$id,"site":"${esc(site)}","sec":$sec%.3f}"""
+          f"""{"job":$id,"site":${Harness.jsonQuote(site)},"sec":$sec%.3f}"""
         }.mkString("[", ",", "]")
       }
-      println(f"""{"query":"${esc(name)}","sf":"${esc(sfDir)}",""" +
+      println(f"""{"query":${Harness.jsonQuote(name)},"sf":${Harness.jsonQuote(sfDir)},""" +
         f""""total_sec":$totalSec%.3f,"rows":$rows,"jobs":$jobsJson}""")
       inflight.clear()
       sweep()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Scale-up staging for the sf1 scale-evidence bench (VERDICT r9 worklist #5).
@@ -90,22 +90,11 @@ object ScaleData {
   }
 
   def main(args: Array[String]): Unit = {
-    val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
+    val src = if (args.length > 0) args(0) else Harness.sfDir
     val out = if (args.length > 1) args(1) else "scaledata/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
     val zipf = args.length > 3 && args(3) == "zipf"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // UTC pin (r10 ADVICE): Tables.events re-tags µs-NTZ parquet as plain
-      // TIMESTAMP assuming a UTC session — without this pin a non-UTC host
-      // would shift every staged events.ts by the host offset
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("graft-scale-data")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(src, Harness.cpus)
 
     // one offset stride per keyed table: max key + 1, computed once
     def stride(df: DataFrame, key: String): Long =

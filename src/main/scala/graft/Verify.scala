@@ -1,61 +1,28 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // corpus-scaled exchange widths, mirroring Bench (no-op at sf<=0.1)
-    graft.util.Sizing.configureAdaptiveWidths(builder, sfDir, cpus.toInt)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // Dev-loop filter (driver never sets it): verify just the named queries.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(f => f.exists(name.startsWith)) }
-      .foreach { case (name, fn) =>
+    val selected = Harness.select(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = Harness.session(sfDir, Harness.cpus)
+    new java.io.File(outDir).mkdirs()
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally {
-        // cache hygiene: no query's persisted frames outlive its own action
-        // in this shared ~80-query session (VerifySpec asserts empty after).
-        // clearCache drops the CacheManager entries too — a bare RDD-unpersist
-        // leaves stale InMemoryRelations later matching plans re-route through.
-        graft.util.CacheOnce.sweepAll() // orphaned one-action listeners too
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
+      // no query's persisted frames outlive its own action in this shared
+      // session
+      finally Harness.sweep(spark)
     }
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${jsonQuote(k)}: ${jsonQuote(v)}" }
+      .map { case (k, v) => s"${Harness.jsonQuote(k)}: ${Harness.jsonQuote(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
-
-  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness.
-    * (Unit-tested in VerifySpec against a real JSON parser.) */
-  def jsonQuote(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

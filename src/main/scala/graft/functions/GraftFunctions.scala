@@ -190,8 +190,8 @@ object GraftFunctions {
 }
 
 /** `SparkSessionExtensions` entry point: registers the engine's native
-  * expressions at session build time —
-  * `SparkSession.builder.config("spark.sql.extensions", "graft.functions.GraftExtensions")`.
+  * expressions at session build time — set the session conf
+  * `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -490,7 +490,7 @@ object GraphOps {
       // 1.5M orders x 7 digits = 10.5M chain rows > 1e6). The bound comes
       // from parquet FOOTER metadata (r10 ADVICE: the previous orders.count()
       // ran a full scan job every time the query was merely CONSTRUCTED —
-      // ExplainDump/PlanSpec/bench registration), memoized per directory.
+      // PlanDump/PlanSpec/bench registration), memoized per directory.
       s.conf.set("spark.sql.cteRecursionRowLimit",
         math.max(1000000L, GraphOps.ordersRowCount(d) * 20L).toString)
       s.sql(

@@ -622,7 +622,7 @@ object Relational {
       // group key: mixing countDistinct with approx_count_distinct in one
       // agg makes Catalyst's Expand-based mixed-distinct plan carry the
       // multi-KB HLL buffer as per-DISTINCT-KEY state (millions of buffers
-      // — measured 50s vs 3.9s+1.8s split at sf1, Q09Probe). Two scans of
+      // — measured 50s vs 3.9s+1.8s split at sf1). Two scans of
       // a pruned 3-column parquet beat one scan with quadratic state.
       val exact = li.groupBy(col("l_returnflag"))
         .agg(countDistinct(col("l_partkey")).as("exact_parts"),

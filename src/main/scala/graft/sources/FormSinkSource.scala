@@ -1359,11 +1359,19 @@ private case class SinkVersionOffset(v: Long)
 }
 
 private class FormSinkMicroBatchStream(path: String, required: StructType)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
+    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
+  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
+  // Trigger.AvailableNow's end offset: the version current when the run was
+  // prepared, so a commit landing mid-run is left for the next run
+  @volatile private var pinned: Option[Long] = None
+  override def prepareForTriggerAvailableNow(): Unit =
+    pinned = Some(FormSinkSource.latestManifest(path).version)
   override def initialOffset(): Offset = SinkVersionOffset(0L)
   override def latestOffset(): Offset =
     SinkVersionOffset(FormSinkSource.latestManifest(path).version)
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset =
+    pinned.fold(latestOffset())(SinkVersionOffset(_))
   override def deserializeOffset(json: String): Offset =
     SinkVersionOffset(json.toLong)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {

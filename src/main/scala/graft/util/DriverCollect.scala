@@ -19,16 +19,22 @@ import org.apache.spark.sql.types.LongType
 object DriverCollect {
 
   /** Each partition of a two-LONG-column frame as one interleaved
-    * primitive array `[k0, v0, k1, v1, …]`. Columns must be non-null
-    * longs (every caller's frames are key/count aggregates by
-    * construction); any other shape fails before the job runs, since
-    * `getLong` on another type reads garbage instead of failing. */
+    * primitive array `[k0, v0, k1, v1, …]`. Any other shape fails before
+    * the job runs, since `getLong` on another type reads garbage instead
+    * of failing; a null cell fails the job naming its column, since
+    * `getLong` reads it as 0, a valid id or count to every caller. */
   def longPairChunks(df: DataFrame): Array[Array[Long]] = {
     require(df.schema.fields.map(_.dataType).toSeq == Seq(LongType, LongType),
       s"longPairChunks needs exactly two bigint columns, got ${df.schema.simpleString}")
+    val names = df.schema.fieldNames
     df.queryExecution.toRdd.mapPartitions { it =>
       val b = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+      it.foreach { r =>
+        if (r.isNullAt(0) || r.isNullAt(1))
+          throw new IllegalArgumentException("longPairChunks: null in column " +
+            names(if (r.isNullAt(0)) 0 else 1))
+        b += r.getLong(0); b += r.getLong(1)
+      }
       Iterator.single(b.result())
     }.collect()
   }

@@ -186,7 +186,7 @@ object Sizing {
   /** Row count of a driver table from parquet FOOTER metadata — no Spark
     * job runs (the GraphOps.ordersRowCount pattern, generalized): sizing
     * decisions made at query CONSTRUCTION time (bench registration,
-    * ExplainDump) must not cost a scan. Memoized on the
+    * PlanDump) must not cost a scan. Memoized on the
     * [[Scratch.sourceKey]] snapshot so a regenerated corpus invalidates. */
   def parquetRowCount(d: String, table: String): Long =
     rowCounts.computeIfAbsent(Scratch.sourceKey(d, table) + "/" + table, _ => {
@@ -321,4 +321,7 @@ object CacheOnce {
     * the bench/verify inter-query sweep so a frame that was built but never
     * executed cannot leak its listener (and cache entry) for the session. */
   def sweepAll(): Unit = pending.forEach(f => f())
+
+  /** Listeners still waiting for their consuming action. */
+  private[graft] def pendingCount: Int = pending.size
 }

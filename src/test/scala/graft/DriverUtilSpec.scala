@@ -23,4 +23,14 @@ class DriverUtilSpec extends SparkSpec {
           DriverCollect.longPairChunks(spark.range(4).selectExpr(cols: _*)))
       }
   }
+
+  test("longPairChunks rejects a null cell instead of reading it as 0, naming its column") {
+    Seq(Seq("IF(id = 2, NULL, id) AS k", "id AS v") -> "column k",
+        Seq("id AS k", "IF(id = 2, NULL, id * 2) AS v") -> "column v")
+      .foreach { case (cols, named) =>
+        val e = intercept[Exception](
+          DriverCollect.longPairChunks(spark.range(4).selectExpr(cols: _*)))
+        assert(e.getMessage.contains(s"null in $named"), e.getMessage)
+      }
+  }
 }
