@@ -26,26 +26,18 @@ object GraphOps {
     * oracle CTE chain. */
   val Iters = 3
 
-  // q226's recursion-governor bound needs |orders|; a full count() job per
-  // query CONSTRUCTION is wasted work (r10 ADVICE), so read the row count
-  // from parquet footer metadata — no scan — and memoize per directory.
-  private val ordersCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  def ordersRowCount(d: String): Long =
-    ordersCounts.computeIfAbsent(d, dir => {
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val p = new org.apache.hadoop.fs.Path(s"$dir/orders.parquet")
-      val fs = p.getFileSystem(conf)
-      val parts =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
-        else Seq(p)
-      parts.map { f =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-        try r.getRecordCount finally r.close()
-      }.sum
-    }).longValue()
+  /** `result`, which reads `caches`, collected now and returned as driver
+    * rows, with `caches` unpersisted — the query that persisted them drops
+    * them, so the next query never persists the same plan over a cache it
+    * does not own (the inter-query harness sweep stays a fallback). For
+    * results of census size only. */
+  private def collectReleasing(caches: org.apache.spark.sql.DataFrame*)(
+      result: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val (rows, schema) =
+      try { val r = result; (r.collect(), r.schema) }
+      finally caches.foreach(_.unpersist(false))
+    caches.head.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
 
   /** BFS rounds (q176) — 4 hops covers the dense bipartite co-occurrence
     * graph's diameter at every test SF; unreached nodes stay unlabeled. */
@@ -166,9 +158,8 @@ object GraphOps {
       // inherits the cached partitioning too, so past the gate only the O(V)
       // rank frame moves per round — the r19 fallback re-shuffled O(E) edges
       // every round against a v-partitioned cache. Plain persist, not
-      // persistForOneAction: the array tier below runs one action per round
-      // and the harness's inter-query sweep reclaims the cache (q326's Lpa
-      // contract).
+      // persistForOneAction: the array tier below runs one action per round;
+      // both tiers unpersist the caches before returning.
       val ed = Tables.lineitem(s, d)
         .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
         .distinct()
@@ -247,20 +238,22 @@ object GraphOps {
         // either (r19 shape: v-partitioned cache ⇒ every round exchanged
         // AND sorted O(E) rows). The census groupBy then exchanges only
         // map-side-combined partial sums.
-        val nn = degF.agg(count(lit(1)).as("n"))
-        var r = degF.crossJoin(broadcast(nn))
-          .selectExpr("u", "deg", "1000000000000 div n AS r")
-        for (_ <- 1 to Iters) {
-          val contrib = edges.join(r.hint("shuffle_hash"), "u")
-            .selectExpr("v AS u", "(r * 85) div (100 * deg) AS c")
-            .groupBy(col("u")).agg(sum(col("c")).as("c"))
-          r = degF.crossJoin(broadcast(nn))
-            .join(contrib.hint("shuffle_hash"), Seq("u"), "left")
-            .selectExpr("u", "deg", "(150000000000 div n) + coalesce(c, 0) AS r")
+        collectReleasing(degF, edges) {
+          val nn = degF.agg(count(lit(1)).as("n"))
+          var r = degF.crossJoin(broadcast(nn))
+            .selectExpr("u", "deg", "1000000000000 div n AS r")
+          for (_ <- 1 to Iters) {
+            val contrib = edges.join(r.hint("shuffle_hash"), "u")
+              .selectExpr("v AS u", "(r * 85) div (100 * deg) AS c")
+              .groupBy(col("u")).agg(sum(col("c")).as("c"))
+            r = degF.crossJoin(broadcast(nn))
+              .join(contrib.hint("shuffle_hash"), Seq("u"), "left")
+              .selectExpr("u", "deg", "(150000000000 div n) + coalesce(c, 0) AS r")
+          }
+          r.orderBy(col("r").desc, col("u"))
+            .limit(20)
+            .select(col("u").as("node_id"), col("r").as("rank_e12"))
         }
-        r.orderBy(col("r").desc, col("u"))
-          .limit(20)
-          .select(col("u").as("node_id"), col("r").as("rank_e12"))
       }
     },
 
@@ -490,9 +483,9 @@ object GraphOps {
       // 1.5M orders x 7 digits = 10.5M chain rows > 1e6). The bound comes
       // from parquet FOOTER metadata (r10 ADVICE: the previous orders.count()
       // ran a full scan job every time the query was merely CONSTRUCTED —
-      // PlanDump/PlanSpec/bench registration), memoized per directory.
+      // PlanDump/PlanSpec/bench registration), memoized per corpus snapshot.
       s.conf.set("spark.sql.cteRecursionRowLimit",
-        math.max(1000000L, GraphOps.ordersRowCount(d) * 20L).toString)
+        math.max(1000000L, graft.util.Sizing.parquetRowCount(d, "orders") * 20L).toString)
       s.sql(
         """WITH RECURSIVE chain AS (
           |  SELECT o_orderkey AS k, o_orderkey AS cur, 0 AS depth FROM orders_rcte
@@ -778,7 +771,8 @@ object GraphOps {
       "q333_lpa_modularity",
       s"Newman modularity of the q326 label-propagation partition — the metric that says whether the communities MEAN anything (Q compares internal-edge mass to the degree-preserving random expectation), in EXACT integer arithmetic: Q = (2m·Σᵢc − Σ d_c²) / (4m²) where Σᵢc counts DIRECTED same-label edge endpoints (so the ÷2 for undirected internal edges cancels against 2m — no halving anywhere) and d_c is each community's degree mass; the single floor-division happens once, offset positive first because Q can be negative and Spark's `div` truncates toward zero while DuckDB's `//` floors — they agree only on non-negatives (Q ≥ −1 bounds the shift). On THIS graph the metric reads exactly −0.5, the floor of Q's range — the textbook signature of synchronous LPA's bipartite two-coloring oscillation (labels ping-pong between the part and supplier sides, so internal-edge mass is ZERO): catching that pathology is precisely why a structure finder ships with its measured quality number (q266's recall-eval doctrine applied to communities — a pipeline gates on Q and learns it must PROJECT a bipartite graph to one mode, q208's wedge tier, before community detection). Cost beyond the $LpaRounds LPA rounds: one O(E) two-sided label join + two census aggregates.",
       lpaModularitySql) { (s, d) =>
-      lpaModularity(lpaGraph(s, d))
+      val lpa = lpaGraph(s, d)
+      collectReleasing(lpa.e)(lpaModularity(lpa))
     },
 
     GraftQuery(
@@ -824,7 +818,7 @@ object GraphOps {
         .select(col("e.u").as("u"), col("e.v").as("v"))
         .repartition(nDedup, col("u"), col("v")).distinct()
       val lpa = new Lpa(und)
-      if (lpa.arrayTier) {
+      collectReleasing(lpa.e)(if (lpa.arrayTier) {
         // the final-assignment census (n_nodes, max community size) falls
         // out of the same driver array the rounds already produced — the
         // two distributed aggregates (and their jobs) disappear
@@ -842,7 +836,7 @@ object GraphOps {
           .crossJoin(broadcast(nn)).crossJoin(broadcast(mx))
           .select(col("n_nodes"), col("m"), col("n_communities"),
             col("max_comm"), col("q_ppm"))
-      }
+      })
     },
 
     GraftQuery(

@@ -104,6 +104,8 @@ object FormSinkSource {
     Paths.get(path, "_manifests")
 
   private val ManifestName = """manifest-v(\d{10})\.json""".r
+  /** A Hadoop checksum sidecar `.<data file>.crc`. */
+  private val Sidecar = """\.(.+)\.crc""".r
   private def manifestFile(path: String, version: Long): Path =
     manifestDir(path).resolve(f"manifest-v$version%010d.json")
 
@@ -788,6 +790,37 @@ object FormSinkSource {
   private[sources] def recordScanCensus(scanned: Int, total: Int): Unit =
     scanCensus.set((scanned, total))
 
+  /** Read partitions over `files` (with their byte sizes), by Spark's own
+    * file-split rule: the split target is
+    * `FilePartition.maxSplitBytes` over Σ(bytes + open cost), and each
+    * partition takes files until the next would overflow it, as
+    * `FilePartition.getFilePartitions` fills one — so
+    * `spark.sql.files.maxPartitionBytes`, `openCostInBytes` and
+    * `minPartitionNum` govern it. Unlike Spark, files are not sorted by
+    * size: each partition is a contiguous run in manifest order, so an
+    * unordered read returns rows in the same sequence as one partition per
+    * file would. A file is never split. */
+  private[sources] def packFiles(files: Seq[(Path, Long)]): Array[InputPartition] = {
+    val openCost = org.apache.spark.sql.internal.SQLConf.get.filesOpenCostInBytes
+    val maxSplit = org.apache.spark.sql.execution.datasources.FilePartition
+      .maxSplitBytes(org.apache.spark.sql.SparkSession.active,
+        files.map(_._2 + openCost).sum)
+    val parts = scala.collection.mutable.ArrayBuffer[InputPartition]()
+    val run = scala.collection.mutable.ArrayBuffer[String]()
+    var runBytes = 0L
+    files.foreach { case (f, len) =>
+      if (run.nonEmpty && runBytes + len > maxSplit) {
+        parts += SinkFilesPartition(run.toList)
+        run.clear()
+        runBytes = 0L
+      }
+      runBytes += len + openCost
+      run += f.toString
+    }
+    if (run.nonEmpty) parts += SinkFilesPartition(run.toList)
+    parts.toArray
+  }
+
   // ---- manifest-stats file skipping ----------------------------------
   // The scan prunes whole FILES whose manifest min/max provably exclude a
   // pushed filter; the filter itself stays post-scan (Spark re-applies it
@@ -842,24 +875,33 @@ object FormSinkSource {
   }
 
   /** Garbage-collect the table: delete data files not referenced by the
-    * NEWEST manifest (crashed-commit orphans, truncate leftovers) and all
-    * superseded manifests. Only files older than `minAgeMs` are touched —
-    * a concurrent commit's phase-1 files are mid-publish, not garbage, and
-    * the age guard is what keeps vacuum safe to run alongside writers. The
-    * default is deliberately conservative (comfortably above any plausible
-    * commit duration); deterministic tests pass 0 EXPLICITLY — an unsafe
-    * default would let a routine vacuum race a concurrent commit's phase-1
-    * files and lose that commit's rows. Returns deleted paths. */
+    * NEWEST manifest (crashed-commit orphans, truncate leftovers), all
+    * superseded manifests, and Hadoop `.<name>.crc` sidecars (written
+    * beside rewrite files before the sink used parquet's local-file API)
+    * whose data file is gone or goes now. Only files older than `minAgeMs`
+    * are touched — a concurrent commit's phase-1 files are mid-publish, not
+    * garbage, and the age guard is what keeps vacuum safe to run alongside
+    * writers. The default is deliberately conservative (comfortably above
+    * any plausible commit duration); deterministic tests pass 0
+    * EXPLICITLY — an unsafe default would let a routine vacuum race a
+    * concurrent commit's phase-1 files and lose that commit's rows.
+    * Returns deleted paths. */
   def vacuum(path: String, minAgeMs: Long = 10 * 60 * 1000L): Seq[Path] = {
     val Manifest(version, referenced, _, _) = latestManifest(path)
     val cutoff = System.currentTimeMillis() - minAgeMs
     def oldEnough(p: Path): Boolean =
       Files.getLastModifiedTime(p).toMillis <= cutoff
-    val orphans =
-      graft.util.Scratch.listEntries(dataDir(path))
-        .filter(p => Files.isRegularFile(p) &&
-          SinkCodec.isDataFile(p.getFileName.toString) &&
-          !referenced.contains(p.getFileName.toString) && oldEnough(p))
+    val listing = graft.util.Scratch.listEntries(dataDir(path))
+      .filter(Files.isRegularFile(_))
+    val orphans = listing.filter(p =>
+      SinkCodec.isDataFile(p.getFileName.toString) &&
+        !referenced.contains(p.getFileName.toString) && oldEnough(p))
+    val gone = orphans.map(_.getFileName.toString).toSet
+    val sidecars = listing.filter(p => p.getFileName.toString match {
+      case Sidecar(data) =>
+        (gone(data) || !Files.exists(dataDir(path).resolve(data))) && oldEnough(p)
+      case _ => false
+    })
     val staleManifests =
       graft.util.Scratch.listEntries(manifestDir(path)).filter { p =>
         p.getFileName.toString match {
@@ -867,7 +909,7 @@ object FormSinkSource {
           case _               => oldEnough(p) // abandoned tmp files
         }
       }
-    val victims = orphans ++ staleManifests
+    val victims = orphans ++ sidecars ++ staleManifests
     victims.foreach(Files.deleteIfExists(_))
     victims
   }
@@ -1072,12 +1114,11 @@ private class FormSinkBatchWrite(path: String, truncateFirst: Boolean,
     Some(a.successor(survivors ++ added))
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val staging = FormSinkSource.stagingDir(path, jobId)
-    messages.filter(_ != null).foreach { case m: StagedFileMessage =>
-      Files.deleteIfExists(staging.resolve(m.fileName))
-    }
-  }
+  /** Removes the job's whole staging directory: the files its messages
+    * name, and any a task left behind without reporting (it died before
+    * the job aborted). */
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    FormSinkSource.sweepStaging(FormSinkSource.stagingDir(path, jobId))
 }
 
 /** Task-side writer factory for batch and streaming writes — a named
@@ -1146,7 +1187,7 @@ private class FormSinkDataWriter(file: Path) extends DataWriter[InternalRow] {
   override def close(): Unit = out.close()
 }
 
-// ---- read path: one partition per committed file, pruned columns ----
+// ---- read path: committed files packed into read partitions, pruned columns ----
 
 private class FormSinkScanBuilder(path: String, versionAsOf: Option[Long],
                                   changes: Option[(Long, Long)],
@@ -1251,8 +1292,10 @@ private class FormSinkScan(path: String, required: StructType,
     runtime = filters.toSeq.filter(FormSinkSource.skippable)
   }
   /** Snapshot resolution: a change-feed delta, a pinned manifest version
-    * (time travel), or the newest committed manifest — as (names, stats). */
-  private def snapshotNames(): (Seq[String], Map[String, FormSinkSource.FileStats]) =
+    * (time travel), or the newest committed manifest — as (names, stats).
+    * Resolved once per scan: statistics and partition planning see the
+    * same listing, and the manifest is read once. */
+  private lazy val (names, stats) =
     (changes, versionAsOf) match {
       case (Some((from, to)), _) =>
         FormSinkSource.addedFilesBetween(path, from, to)
@@ -1269,6 +1312,15 @@ private class FormSinkScan(path: String, required: StructType,
         val m = FormSinkSource.latestManifest(path)
         (m.files, m.stats)
     }
+  /** The snapshot files that may match every filter in `pruners`. */
+  private def surviving(pruners: Seq[sqlf.Filter]): Seq[String] =
+    names.filter(n => pruners.forall(FormSinkSource.mayMatch(stats.get(n), _)))
+  private def file(n: String): Path = FormSinkSource.dataDir(path).resolve(n)
+  /** On-disk bytes of every file the static filters keep, statted once:
+    * runtime filters only prune further. */
+  private lazy val bytes: Map[String, Long] = surviving(skip).map { n =>
+    n -> (try Files.size(file(n)) catch { case _: Exception => 0L })
+  }.toMap
 
   override def readSchema(): StructType =
     if (aggs.isEmpty) required
@@ -1285,21 +1337,19 @@ private class FormSinkScan(path: String, required: StructType,
       s"PushedAggregates: [${aggs.mkString(", ")}], " +
       s"SkipFilters: [${skip.mkString(", ")}], " +
       s"ReadSchema: ${readSchema().simpleString}"
-  /** One partition per snapshot file, minus the files whose manifest stats
-    * prove no row can satisfy every pushed filter — the delta read
-    * `po_number > wm` opens only the newest commit's files, not the whole
-    * append history. A pushed aggregate is answered from the stats of the
-    * same files on the driver. The (files opened, snapshot size) census
-    * is published to [[FormSinkSource.lastScanFileCensus]] so specs and
-    * queries can assert skipping actually engaged, not just that results
-    * were correct. */
+  /** The snapshot's files minus those whose manifest stats prove no row
+    * can satisfy every pushed filter — the delta read `po_number > wm`
+    * opens only the newest commit's files, not the whole append history —
+    * packed into read partitions of several files each
+    * ([[FormSinkSource.packFiles]]), so a scan's task count follows its
+    * bytes, not how many commits wrote them. A pushed aggregate is answered
+    * from the stats of the same files on the driver. The (files opened,
+    * snapshot size) census is published to
+    * [[FormSinkSource.lastScanFileCensus]] so specs and queries can assert
+    * skipping actually engaged, not just that results were correct. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val (names, stats) = snapshotNames()
     // static pushed filters AND runtime join-key filters prune identically
-    val pruners = skip ++ runtime
-    val survivors =
-      names.filter(n => pruners.forall(FormSinkSource.mayMatch(stats.get(n), _)))
-    def file(n: String) = FormSinkSource.dataDir(path).resolve(n).toString
+    val survivors = surviving(skip ++ runtime)
     if (aggs.nonEmpty) {
       // complete pushdown → exactly one partition (an empty sink must still
       // emit its single aggregate row); only files without manifest stats
@@ -1308,10 +1358,10 @@ private class FormSinkScan(path: String, required: StructType,
       val partial = new SinkAggAcc(aggs)
       known.foreach(n => partial.addStats(stats(n)))
       FormSinkSource.recordScanCensus(legacy.size, names.size)
-      Array(SinkAggPartition(legacy.map(file), partial))
+      Array(SinkAggPartition(legacy.map(file(_).toString), partial))
     } else {
       FormSinkSource.recordScanCensus(survivors.size, names.size)
-      survivors.map(n => SinkFilePartition(file(n)): InputPartition).toArray
+      FormSinkSource.packFiles(survivors.map(n => file(n) -> bytes(n)))
     }
   }
 
@@ -1323,14 +1373,9 @@ private class FormSinkScan(path: String, required: StructType,
     * is. Pruned-snapshot stats also mean a selective delta read reports
     * only the files it will open (CBO sees the delta, not the history). */
   override def estimateStatistics(): Statistics = new Statistics {
-    private val (names, stats) = snapshotNames()
-    private val survivors =
-      names.filter(n => skip.forall(FormSinkSource.mayMatch(stats.get(n), _)))
+    private val survivors = surviving(skip)
     override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(survivors.map { n =>
-        try Files.size(FormSinkSource.dataDir(path).resolve(n))
-        catch { case _: Exception => 0L }
-      }.sum)
+      java.util.OptionalLong.of(bytes.values.sum)
     override def numRows(): java.util.OptionalLong =
       if (survivors.forall(stats.contains))
         java.util.OptionalLong.of(survivors.map(stats(_).rows).sum)
@@ -1378,9 +1423,11 @@ private class FormSinkMicroBatchStream(path: String, required: StructType)
     val from = start.asInstanceOf[SinkVersionOffset].v
     val to = end.asInstanceOf[SinkVersionOffset].v
     if (from >= to) Array.empty
-    else FormSinkSource.addedFilesBetween(path, from, to)._1
-      .map(n => SinkFilePartition(
-        FormSinkSource.dataDir(path).resolve(n).toString): InputPartition).toArray
+    else FormSinkSource.packFiles(
+      FormSinkSource.addedFilesBetween(path, from, to)._1.map { n =>
+        val f = FormSinkSource.dataDir(path).resolve(n)
+        f -> Files.size(f)
+      })
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new FormSinkReaderFactory(required)
@@ -1474,15 +1521,17 @@ private object FormSinkAggReaderFactory extends PartitionReaderFactory {
   }
 }
 
-private case class SinkFilePartition(file: String) extends InputPartition
+/** One read task's committed files, a contiguous run of the manifest. */
+private case class SinkFilesPartition(files: Seq[String]) extends InputPartition
 
 private class FormSinkReaderFactory(required: StructType) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    // codec-dispatched, column-pruned: the parquet tier decodes only the
+    // the partition's files back to back, in manifest order; each is
+    // codec-dispatched and column-pruned: the parquet tier decodes only the
     // `required` columns; jsonl streams lines (never readAllLines — a
     // compacted 100 TB-era file must not materialize on one heap)
-    val rows = SinkCodec.reader(
-      Paths.get(p.asInstanceOf[SinkFilePartition].file),
+    val rows = SinkCodec.chain(
+      p.asInstanceOf[SinkFilesPartition].files.map(Paths.get(_)),
       required.fieldNames.toSeq)
     new PartitionReader[InternalRow] {
       override def next(): Boolean = rows.next()

@@ -2,13 +2,17 @@ package graft.sources
 
 import java.nio.file.{Files, Path}
 
-import org.apache.hadoop.conf.Configuration
+import scala.util.control.NonFatal
+
 import org.apache.parquet.column.ParquetProperties
+import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -30,7 +34,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * sink's cells are strings by model, SURVEY §1.2); the manifest min/max
   * stats are collected inline by the writers, and every mutation publishes
   * through the one manifest swap, [[FormSinkSource.commit]] — the
-  * file-skipping contract is codec-independent. */
+  * file-skipping contract is codec-independent.
+  *
+  * Files are opened through parquet's local-file API (`LocalInputFile`,
+  * `LocalOutputFile`, `PlainParquetConfiguration`): the sink is local by
+  * construction (`java.nio` paths, `Files.move` commits), so no Hadoop
+  * FileSystem or Hadoop `Configuration` is built per file — that per-file
+  * set-up, not decoding, was most of a small file's read cost. Integrity
+  * rides parquet's page CRC32s: the writer records one per page and the
+  * reader verifies every page it decodes, so a corrupt file fails the read
+  * with an error naming it instead of returning wrong cells. (Hadoop's
+  * `.crc` sidecars are no longer written; files that carry one still
+  * read, and `vacuum` reclaims sidecars whose data file is gone.) */
 private[sources] object SinkCodec {
   val JsonlExt = ".jsonl"
   val ParquetExt = ".parquet"
@@ -58,9 +73,8 @@ private[sources] object SinkCodec {
     * the codec) and must close() to seal the footer. */
   final class ParquetRowWriter(file: Path, cols: Seq[String]) {
     private val mt = messageType(cols)
-    private val w = ExampleParquetWriter.builder(
-        new org.apache.hadoop.fs.Path(file.toString))
-      .withConf(new Configuration())
+    private val w = ExampleParquetWriter.builder(new LocalOutputFile(file))
+      .withConf(new PlainParquetConfiguration())
       .withType(mt)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withWriterVersion(ParquetProperties.WriterVersion.PARQUET_1_0)
@@ -93,10 +107,31 @@ private[sources] object SinkCodec {
     def close(): Unit
   }
 
+  /** Open one data file. Every failure to open or decode it names the file
+    * (fail fast: a corrupt page must never read as wrong cells). */
   def reader(file: Path, cols: Seq[String]): RowReader =
-    if (file.getFileName.toString.endsWith(JsonlExt))
-      new JsonlReader(file, cols)
-    else new ParquetRowReader(file, cols)
+    try {
+      if (file.getFileName.toString.endsWith(JsonlExt))
+        new JsonlReader(file, cols)
+      else new ParquetRowReader(file, cols)
+    } catch { case NonFatal(e) => throw naming(file, e) }
+
+  /** `files` read back to back, in order, one open at a time — a read
+    * partition of several committed files. */
+  def chain(files: Seq[Path], cols: Seq[String]): RowReader = new RowReader {
+    private val rest = files.iterator
+    private var cur: RowReader = null
+    override def next(): Boolean = {
+      while (cur == null || !cur.next()) {
+        close()
+        if (!rest.hasNext) return false
+        cur = reader(rest.next(), cols)
+      }
+      true
+    }
+    override def get(): Array[UTF8String] = cur.get()
+    override def close(): Unit = if (cur != null) { cur.close(); cur = null }
+  }
 
   /** Drain a file through `f` per row — the driver-side rewrite loops. */
   def foreachRow(file: Path, cols: Seq[String])(
@@ -105,13 +140,26 @@ private[sources] object SinkCodec {
     try while (r.next()) f(r.get()) finally r.close()
   }
 
+  /** `e`, or — when its message does not already name `file` — `e`
+    * wrapped with the path prepended. */
+  private def naming(file: Path, e: Throwable): Throwable =
+    if (String.valueOf(e.getMessage).contains(file.toString)) e
+    else new java.io.IOException(s"form sink: cannot read $file: $e", e)
+
+  /** A file reader whose row step names the file on failure. */
+  private abstract class FileRowReader(file: Path) extends RowReader {
+    protected def advance(): Boolean
+    final override def next(): Boolean =
+      try advance() catch { case NonFatal(e) => throw naming(file, e) }
+  }
+
   private final class JsonlReader(file: Path, cols: Seq[String])
-      extends RowReader {
+      extends FileRowReader(file) {
     private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     private val in = Files.newBufferedReader(file)
     private val names = cols.toArray
     private var row: Array[UTF8String] = _
-    override def next(): Boolean = {
+    override protected def advance(): Boolean = {
       val line = in.readLine()
       if (line == null) return false
       val node = mapper.readTree(line)
@@ -126,18 +174,18 @@ private[sources] object SinkCodec {
   }
 
   private final class ParquetRowReader(file: Path, cols: Seq[String])
-      extends RowReader {
-    private val conf = new Configuration()
+      extends FileRowReader(file) {
+    private val conf = new PlainParquetConfiguration()
     // column projection: parquet decodes ONLY the requested columns —
     // the pruned-scan half of the columnar tier's win
     conf.set(ReadSupport.PARQUET_READ_SCHEMA, messageType(cols).toString)
-    private val rd = ParquetReader
-      .builder(new GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(file.toString))
-      .withConf(conf).build()
+    private val rd = new ParquetReader.Builder[Group](new LocalInputFile(file), conf) {
+        override protected def getReadSupport(): ReadSupport[Group] =
+          new GroupReadSupport()
+      }.usePageChecksumVerification(true).build()
     private val n = cols.size
     private var row: Array[UTF8String] = _
-    override def next(): Boolean = {
+    override protected def advance(): Boolean = {
       val g = rd.read()
       if (g == null) return false
       val cells = new Array[UTF8String](n)

@@ -184,9 +184,8 @@ object Sizing {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   /** Row count of a driver table from parquet FOOTER metadata — no Spark
-    * job runs (the GraphOps.ordersRowCount pattern, generalized): sizing
-    * decisions made at query CONSTRUCTION time (bench registration,
-    * PlanDump) must not cost a scan. Memoized on the
+    * job runs: sizing decisions made at query CONSTRUCTION time (bench
+    * registration, PlanDump) must not cost a scan. Memoized on the
     * [[Scratch.sourceKey]] snapshot so a regenerated corpus invalidates. */
   def parquetRowCount(d: String, table: String): Long =
     rowCounts.computeIfAbsent(Scratch.sourceKey(d, table) + "/" + table, _ => {

@@ -124,6 +124,31 @@ class SinkCommitSpec extends graft.SparkSpec {
     race(FormSinkSource.deleteOnto(f.LessThanOrEqual("po_number", key(20))), 301)
   }
 
+  test("compact, delete and a lost race leave only manifest-listed files on disk") {
+    val dir = tmp()
+    append(dir, 1, 50); append(dir, 51, 100)
+    assert(FormSinkSource.compact(dir).isDefined)
+    append(dir, 101, 150)
+    assert(FormSinkSource.delete(dir, f.LessThanOrEqual("po_number", key(120))).isDefined)
+    append(dir, 151, 160)
+    assert(FormSinkSource.commit(dir) { a =>
+      val next = FormSinkSource.compactOnto(a)
+      append(dir, 201, 210)
+      next
+    } === None)
+    val version = FormSinkSource.snapshotInfo(dir)._1
+    val listed = (1L to version).flatMap(FormSinkSource.manifestAt(dir, _)._1).toSet
+    val entries = graft.util.Scratch.listEntries(Paths.get(dir))
+    val (dirs, files) = entries.partition(Files.isDirectory(_))
+    assert(files.map(_.getFileName.toString).toSet === listed)
+    assert(dirs.map(_.getFileName.toString).toSet.subsetOf(Set("_manifests", "_staging")),
+      dirs)
+    dirs.filter(_.getFileName.toString == "_staging").foreach { s =>
+      assert(graft.util.Scratch.listEntries(s).isEmpty, graft.util.Scratch.listEntries(s))
+    }
+    assert(keysAt(dir) === keys(121, 160) ++ keys(201, 210))
+  }
+
   test("a merge that fails mid-rewrite leaves no merged-* file behind") {
     val dir = tmp()
     append(dir, 1, 50); append(dir, 51, 100)
