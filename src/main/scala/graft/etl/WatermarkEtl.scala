@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import graft.Tables
 
 /** The reference's flagship pipeline re-expressed Spark-first (SURVEY.md §0):
@@ -27,6 +28,12 @@ import graft.Tables
   *     read is cheap — the connector sink answers MAX from its manifest
   *     stats. [[deltaAgainst]] keeps the lazy form (a broadcast single-row
   *     cross join) for callers that compose the delta into a larger plan;
+  *   - the tick's append sorts a small delta in one task (R7): a delta the
+  *     optimizer sizes at most `spark.sql.adaptive.coalescePartitions.
+  *     minPartitionSize` is written as `coalesce(1).sortWithinPartitions`,
+  *     so a 100-row tick runs no range exchange and no sampling job; a
+  *     larger delta keeps the global `orderBy`. Either way the appended
+  *     files hold their rows ascending by PO, in manifest order;
   *   - PO numbers stay StringType and compare lexicographically — matching
   *     the reference's string `>` ('is greater than', bin:81); never cast to
   *     numeric (SURVEY.md §7 "hard parts").
@@ -73,16 +80,29 @@ object WatermarkEtl {
     * carrying a `po_number` column). Broadcast cross join keeps it lazy. */
   def deltaAgainst(source: DataFrame, sink: DataFrame): DataFrame =
     newerThan(source.crossJoin(broadcast(watermark(sink))),
-      coalesce(col("wm"), lit("")))
+      coalesce(col("wm"), lit(""))).orderBy(col("po_number"))
 
   /** Source rows with `po_number > wm`, projected to the sink's five
-    * columns in COLUMN_VALUES order and sorted ascending by PO (R6-R9). */
+    * columns in COLUMN_VALUES order (R6, R8-R9); the callers sort (R7). */
   private def newerThan(source: DataFrame, wm: Column): DataFrame =
     source
       .filter(col("po_number") > wm)
       .select(col("vendor"), col("description"), col("picker_erk"),
         col("charge_code"), col("po_number"))
-      .orderBy(col("po_number"))
+
+  /** R7 for an append: `delta` ascending by PO. A delta the optimizer
+    * sizes at most `spark.sql.adaptive.coalescePartitions.minPartitionSize`
+    * sorts inside one task: AQE would have merged a range exchange over it
+    * into one partition anyway, so the same single file is written, minus
+    * the exchange's sampling job and map stage. A larger delta keeps the
+    * global `orderBy` and its range-partitioned files. */
+  private def ascendingByPo(delta: DataFrame): DataFrame = {
+    val oneTask = delta.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    if (delta.queryExecution.optimizedPlan.stats.sizeInBytes <= oneTask)
+      delta.coalesce(1).sortWithinPartitions(col("po_number"))
+    else delta.orderBy(col("po_number"))
+  }
 
   /** Full run: read the watermark of the sink at `sinkPath`, then append
     * the source rows newer than it (R4). The watermark reaches the source
@@ -112,7 +132,7 @@ object WatermarkEtl {
       else if (new java.io.File(sinkPath).exists) spark.read.parquet(sinkPath)
       else spark.emptyDataFrame.withColumn("po_number", lit(null).cast("string"))
     val wm = watermark(sink.select(col("po_number"))).head().getString(0)
-    val d = newerThan(source, lit(Option(wm).getOrElse("")))
+    val d = ascendingByPo(newerThan(source, lit(Option(wm).getOrElse(""))))
     val obs = org.apache.spark.sql.Observation()
     val observed = d.observe(obs, count(lit(1)).as("n"))
     if (viaConnector)

@@ -3,6 +3,7 @@ package graft.sources
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.{expressions => sortexpr}
@@ -28,8 +29,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - `SupportsPushDownRequiredColumns`: only requested fields are
   *     materialized (the improvement SURVEY §4 notes the reference lacks —
   *     it fetches all columns and prunes client-side);
-  *   - partitioned reads: the row space splits into `partitions` ranges, the
-  *     way a paginated REST pipeline is fanned out across executors.
+  *   - partitioned reads: the row space splits into ranges of `rows /
+  *     partitions` ids, the way a paginated REST pipeline is fanned out
+  *     across executors. Pushed bounds on `submission_id`, and on
+  *     `po_number` while `rows <= 1e9`, first narrow the row space by
+  *     bisection, as a server answers a keyset filter from its index: a
+  *     cron tick's `po_number > watermark` plans only the ranges that hold
+  *     its delta, and none when nothing is newer.
   *
   * Row model (submission i of `rows`, all derived arithmetically so the
   * DuckDB oracle can regenerate them):
@@ -38,7 +44,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *   description   = 'order ' || i
   *   picker_erk    = date '2020-01-01' + (i % 365)  (ISO string)
   *   charge_code   = 'C' || i % 7
-  *   po_number     = printf('U%09dD', i)            (reference PO shape)
+  *   po_number     = printf('U%09dD', i)            (reference PO shape;
+  *                                                   rises with i below 1e9)
   *   amount_cents  = (i * 137903) % 300000          (over/under-$1500 routing)
   *
   * Usage: `spark.read.format("graft.sources.FormPipelineSource")
@@ -64,28 +71,61 @@ object FormPipelineSource {
     StructField("po_number", StringType, nullable = false),
     StructField("amount_cents", LongType, nullable = false)))
 
-  /** Field value of submission `i`, by column name. */
-  def value(i: Long, field: String): Any = field match {
-    case "submission_id" => i
-    case "vendor"        => s"V${i % 97}"
-    case "description"   => s"order $i"
-    case "picker_erk"    => java.time.LocalDate.of(2020, 1, 1).plusDays(i % 365).toString
-    case "charge_code"   => s"C${i % 7}"
-    case "po_number"     => f"U$i%09dD"
-    case "amount_cents"  => (i * 137903L) % 300000L
+  /** Below this many rows `po_number` rises strictly with the submission
+    * id: nine zero-padded digits cover ids up to 999,999,999, and a tenth
+    * digit breaks the lexicographic order. */
+  val PoMonotoneRows = 1000000000L
+
+  private val Vendors = Array.tabulate(97)(k => UTF8String.fromString(s"V$k"))
+  private val ChargeCodes = Array.tabulate(7)(k => UTF8String.fromString(s"C$k"))
+  private val PickerDates = Array.tabulate(365)(k => UTF8String.fromString(
+    java.time.LocalDate.of(2020, 1, 1).plusDays(k).toString))
+
+  /** Column `field` of the row model: the cell of submission `i >= 0` in
+    * Spark's internal form (`UTF8String` or `Long`). Resolve it once per
+    * reader: per row it is a table lookup or a concatenation, never a
+    * `java.util.Formatter`. */
+  def cell(field: String): Long => Any = field match {
+    case "submission_id" => i => i
+    case "vendor"        => i => Vendors((i % 97).toInt)
+    case "description"   => i => UTF8String.fromString("order " + i)
+    case "picker_erk"    => i => PickerDates((i % 365).toInt)
+    case "charge_code"   => i => ChargeCodes((i % 7).toInt)
+    case "po_number"     => i =>
+      val digits = java.lang.Long.toString(i)
+      UTF8String.fromString("U" + "000000000".substring(math.min(9, digits.length)) + digits + "D")
+    case "amount_cents"  => i => (i * 137903L) % 300000L
+  }
+
+  /** Total order of two cells of one column: longs numerically, strings in
+    * UTF-8 binary order — the order Spark itself compares strings in. Java
+    * String.compareTo is UTF-16 code-unit order; the two diverge on
+    * supplementary-plane characters, and a pushed filter, MAX/MIN or TopN
+    * must keep exactly what the unpushed plan would. */
+  def compareCells(x: Any, y: Any): Int = (x, y) match {
+    case (a: Long, b: Long)             => java.lang.Long.compare(a, b)
+    case (a: UTF8String, b: UTF8String) => a.compareTo(b)
+    case _ => 0 // unreachable: both cells come from one column
   }
 
   /** The "server-side" predicate evaluator: which v1 filters the source
-    * accepts, and their semantics over the row model. */
-  def evaluate(f: Filter, i: Long): Boolean = f match {
-    case EqualTo(a, v)              => cmp(i, a, v) == 0
-    case GreaterThan(a, v)          => cmp(i, a, v) > 0
-    case GreaterThanOrEqual(a, v)   => cmp(i, a, v) >= 0
-    case LessThan(a, v)             => cmp(i, a, v) < 0
-    case LessThanOrEqual(a, v)      => cmp(i, a, v) <= 0
-    case And(l, r)                  => evaluate(l, i) && evaluate(r, i)
-    case Or(l, r)                   => evaluate(l, i) || evaluate(r, i)
-    case _ => true // unreachable: unsupported filters are never accepted
+    * accepts, and their semantics over the row model. The filter is
+    * compiled once; its literal is converted here, not per row. */
+  def predicate(f: Filter): Long => Boolean = f match {
+    case EqualTo(a, v)            => val c = comparator(a, v); c(_) == 0
+    case GreaterThan(a, v)        => val c = comparator(a, v); c(_) > 0
+    case GreaterThanOrEqual(a, v) => val c = comparator(a, v); c(_) >= 0
+    case LessThan(a, v)           => val c = comparator(a, v); c(_) < 0
+    case LessThanOrEqual(a, v)    => val c = comparator(a, v); c(_) <= 0
+    case And(l, r) => val (p, q) = (predicate(l), predicate(r)); i => p(i) && q(i)
+    case Or(l, r)  => val (p, q) = (predicate(l), predicate(r)); i => p(i) || q(i)
+    case _ => _ => true // unreachable: unsupported filters are never accepted
+  }
+
+  /** The conjunction of the pushed filters. */
+  def predicate(pushed: Array[Filter]): Long => Boolean = {
+    val ps = pushed.map(predicate)
+    i => { var k = 0; while (k < ps.length && ps(k)(i)) k += 1; k == ps.length }
   }
 
   def supported(f: Filter): Boolean = f match {
@@ -96,15 +136,59 @@ object FormPipelineSource {
     case _ => false
   }
 
-  private def cmp(i: Long, field: String, v: Any): Int = value(i, field) match {
-    case l: Long   => java.lang.Long.compare(l, v.asInstanceOf[Number].longValue())
-    // lexicographic (reference §1.2) in UTF-8 BINARY order — the order
-    // Spark itself compares strings in. Java String.compareTo is UTF-16
-    // code-unit order; the two diverge on supplementary-plane characters,
-    // and a pushed filter must accept exactly the rows the unpushed plan
-    // would keep.
-    case s: String => UTF8String.fromString(s)
-      .compareTo(UTF8String.fromString(v.toString))
+  /** Row `i`'s `field` compared with the literal `v`, in `compareCells`'s
+    * order (reference §1.2: strings compare lexicographically). */
+  private def comparator(field: String, v: Any): Long => Int = {
+    val c = cell(field)
+    schema(field).dataType match {
+      case LongType =>
+        val x = v.asInstanceOf[Number].longValue()
+        i => java.lang.Long.compare(c(i).asInstanceOf[Long], x)
+      case _ =>
+        val x = UTF8String.fromString(v.toString)
+        i => c(i).asInstanceOf[UTF8String].compareTo(x)
+    }
+  }
+
+  /** The ids in `[0, rows)` that can pass all `pushed` filters, as one
+    * range `[lo, hi)` with `lo <= hi`. A comparison on a column that rises
+    * strictly with the id — `submission_id` always, `po_number` while
+    * `rows <= PoMonotoneRows` — passes on one contiguous run of ids, found
+    * by bisection; any other filter keeps the whole range. The range is a
+    * superset: the readers still evaluate every pushed filter per row. */
+  def span(pushed: Array[Filter], rows: Long): (Long, Long) = {
+    val all = (0L, math.max(0L, rows))
+    def monotone(field: String): Boolean =
+      field == "submission_id" || (field == "po_number" && rows <= PoMonotoneRows)
+    // first id in [0, rows] where `p` holds, for `p` false-then-true
+    def first(p: Long => Boolean): Long = {
+      var (lo, hi) = all
+      while (lo < hi) { val m = lo + (hi - lo) / 2; if (p(m)) hi = m else lo = m + 1 }
+      lo
+    }
+    def empty(r: (Long, Long)) = r._1 >= r._2
+    def of(f: Filter): (Long, Long) = f match {
+      case GreaterThan(a, v) if monotone(a) =>
+        val c = comparator(a, v); (first(c(_) > 0), all._2)
+      case GreaterThanOrEqual(a, v) if monotone(a) =>
+        val c = comparator(a, v); (first(c(_) >= 0), all._2)
+      case LessThan(a, v) if monotone(a) =>
+        val c = comparator(a, v); (0L, first(c(_) >= 0))
+      case LessThanOrEqual(a, v) if monotone(a) =>
+        val c = comparator(a, v); (0L, first(c(_) > 0))
+      case EqualTo(a, v) if monotone(a) =>
+        val c = comparator(a, v); (first(c(_) >= 0), first(c(_) > 0))
+      case And(l, r) => and(of(l), of(r))
+      case Or(l, r) =>
+        val (x, y) = (of(l), of(r))
+        if (empty(x)) y else if (empty(y)) x
+        else (math.min(x._1, y._1), math.max(x._2, y._2))
+      case _ => all
+    }
+    def and(x: (Long, Long), y: (Long, Long)) =
+      (math.max(x._1, y._1), math.min(x._2, y._2))
+    val (lo, hi) = pushed.map(of).foldLeft(all)(and)
+    (lo, math.max(lo, hi))
   }
 }
 
@@ -211,17 +295,26 @@ private class FormScan(rows: Long, partitions: Int,
                        topN: Seq[(String, Boolean)] = Seq.empty)
     extends Scan with Batch with SupportsReportStatistics {
 
-  /** CBO-visible size: the row count the "server" declares (a REST
-    * pipeline's row count is one metadata call), capped by a pushed
-    * LIMIT/TopN, times the declared row width. A pushed filter's
-    * selectivity is unknown — the pre-filter count is the sound upper
-    * bound. Without stats a DSv2 relation is "unknown = huge" and can
-    * never auto-broadcast; with them a small form feed broadcasts like
-    * the dim table it is. */
+  /** The ids the pushed filters can pass (see `FormPipelineSource.span`). */
+  private lazy val range: FormRange = {
+    val (lo, hi) = FormPipelineSource.span(pushed, rows)
+    FormRange(lo, hi)
+  }
+
+  /** CBO-visible size: the rows the pushed filters' range keeps (the
+    * declared row count when no filter narrows it — a REST pipeline's row
+    * count is one metadata call), capped by a pushed LIMIT/TopN, times the
+    * declared row width. Within the range a filter's selectivity is
+    * unknown, so the range's width is the sound upper bound. Without stats
+    * a DSv2 relation is "unknown = huge" and can never auto-broadcast; with
+    * them a small form feed broadcasts like the dim table it is. */
   override def estimateStatistics(): Statistics = new Statistics {
     private val n =
       if (aggs.nonEmpty) 1L
-      else limit.map(l => math.min(l.toLong, rows)).getOrElse(rows)
+      else {
+        val width = range.end - range.start
+        limit.map(l => math.min(l.toLong, width)).getOrElse(width)
+      }
     // declared row model: 2 longs + 5 short strings ≈ 64 bytes
     override def sizeInBytes(): java.util.OptionalLong =
       java.util.OptionalLong.of(n * 64L)
@@ -252,17 +345,21 @@ private class FormScan(rows: Long, partitions: Int,
 
   override def planInputPartitions(): Array[InputPartition] = {
     // complete pushdown → exactly one final row → exactly one partition,
-    // UNCONDITIONALLY: an empty source (rows=0) must still emit its single
-    // aggregate row (count=0, null max/min) because Spark plans no aggregate
-    // exec to supply the empty-input row itself
-    if (aggs.nonEmpty) return Array(FormRange(0L, rows))
+    // UNCONDITIONALLY: an empty range (rows=0, or no id passes the pushed
+    // bounds) must still emit its single aggregate row (count=0, null
+    // max/min) because Spark plans no aggregate exec to supply the
+    // empty-input row itself
+    if (aggs.nonEmpty) return Array(range)
     // a pushed LIMIT/TopN is COMPLETE (isPartiallyPushed=false): one
     // partition serves exactly the page, in the pushed order — fanning the
     // page across ranges would make the global limit a cross-partition race
-    if (limit.isDefined) return Array(FormRange(0L, rows))
+    if (limit.isDefined) return Array(range)
+    // the unnarrowed scan's range width, so a narrowed range (a cron
+    // tick's delta) plans only the few partitions it overlaps — none when
+    // no id can pass
     val per = math.max(1L, (rows + partitions - 1) / partitions)
-    (0L until rows by per).map(s =>
-      FormRange(s, math.min(s + per, rows)): InputPartition).toArray
+    (range.start until range.end by per).map(s =>
+      FormRange(s, math.min(s + per, range.end)): InputPartition).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
     if (aggs.nonEmpty) new FormAggReaderFactory(pushed, aggs)
@@ -279,45 +376,39 @@ private class FormAggReaderFactory(pushed: Array[Filter], aggs: Seq[PushedAgg])
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val r = p.asInstanceOf[FormRange]
+    val keep = FormPipelineSource.predicate(pushed)
+    // null for COUNT(*), which reads no column
+    val cells = aggs.map(a =>
+      if (a.fn == "COUNT_STAR") null else FormPipelineSource.cell(a.field)).toArray
     new PartitionReader[InternalRow] {
       private var done = false
       override def next(): Boolean = !done
       override def get(): InternalRow = {
         done = true
         var count = 0L
-        val acc = Array.fill[Any](aggs.length)(null)
+        val acc = new Array[Any](aggs.length)
         var i = r.start
         while (i < r.end) {
-          if (pushed.forall(FormPipelineSource.evaluate(_, i))) {
+          if (keep(i)) {
             count += 1
-            aggs.zipWithIndex.foreach { case (a, j) =>
-              if (a.fn != "COUNT_STAR") {
-                val v = FormPipelineSource.value(i, a.field)
-                val better = acc(j) == null || ((v, acc(j)) match {
-                  case (x: Long, cur: Long) =>
-                    if (a.fn == "MAX") x > cur else x < cur
-                  case (x: String, cur: String) =>
-                    // UTF-8 binary order (what Spark's own comparisons use),
-                    // NOT Java String UTF-16 order — they diverge on
-                    // supplementary-plane characters
-                    val cmp = UTF8String.fromString(x)
-                      .compareTo(UTF8String.fromString(cur))
-                    if (a.fn == "MAX") cmp > 0 else cmp < 0
-                  case _ => false // unreachable: a field's type is stable
-                })
+            var j = 0
+            while (j < cells.length) {
+              if (cells(j) != null) {
+                val v = cells(j)(i)
+                val better = acc(j) == null || {
+                  val c = FormPipelineSource.compareCells(v, acc(j))
+                  if (aggs(j).fn == "MAX") c > 0 else c < 0
+                }
                 if (better) acc(j) = v
               }
+              j += 1
             }
           }
           i += 1
         }
-        InternalRow.fromSeq(aggs.zipWithIndex.map {
-          case (PushedAgg("COUNT_STAR", _), _) => count
-          case (_, j) => acc(j) match {
-            case s: String => UTF8String.fromString(s)
-            case other     => other // Long or null (zero matching rows)
-          }
-        })
+        // COUNT(*) slots take the count; MAX/MIN stay null over zero rows
+        new GenericInternalRow(Array.tabulate[Any](aggs.length)(j =>
+          if (cells(j) == null) count else acc(j)))
       }
       override def close(): Unit = ()
     }
@@ -334,19 +425,16 @@ private class FormPageReaderFactory(pushed: Array[Filter], required: StructType,
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val r = p.asInstanceOf[FormRange]
+    val keep = FormPipelineSource.predicate(pushed)
+    val sortCells = topN.map { case (f, asc) => (FormPipelineSource.cell(f), asc) }
     // total order over submission ids under the pushed sort; ties fall back
     // to the id so the page is deterministic (the row model has no null cells)
     def compare(a: Long, b: Long): Int = {
       var c = 0
-      val it = topN.iterator
+      val it = sortCells.iterator
       while (c == 0 && it.hasNext) {
-        val (field, asc) = it.next()
-        val cc = (FormPipelineSource.value(a, field), FormPipelineSource.value(b, field)) match {
-          case (x: Long, y: Long)     => java.lang.Long.compare(x, y)
-          case (x: String, y: String) =>
-            UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
-          case _ => 0
-        }
+        val (cell, asc) = it.next()
+        val cc = FormPipelineSource.compareCells(cell(a), cell(b))
         c = if (asc) cc else -cc
       }
       if (c != 0) c else java.lang.Long.compare(a, b)
@@ -354,16 +442,14 @@ private class FormPageReaderFactory(pushed: Array[Filter], required: StructType,
     val page: Iterator[Long] =
       if (topN.isEmpty) {
         // keyset page: first `limit` matches in id order, scan stops early
-        Iterator.range(r.start, r.end)
-          .filter(i => pushed.forall(FormPipelineSource.evaluate(_, i)))
-          .take(limit)
+        Iterator.range(r.start, r.end).filter(keep).take(limit)
       } else {
         // bounded max-heap (worst of the kept page at the head)
         val heap = new java.util.PriorityQueue[java.lang.Long](
           math.max(1, limit), (x: java.lang.Long, y: java.lang.Long) => compare(y, x))
         var i = r.start
         while (i < r.end) {
-          if (pushed.forall(FormPipelineSource.evaluate(_, i))) {
+          if (keep(i)) {
             heap.add(i)
             if (heap.size > limit) heap.poll()
           }
@@ -374,17 +460,8 @@ private class FormPageReaderFactory(pushed: Array[Filter], required: StructType,
         while (j >= 0) { kept(j) = heap.poll(); j -= 1 } // heap pops worst-first
         kept.iterator
       }
-    new PartitionReader[InternalRow] {
-      private var cur = -1L
+    new FormRowReader(required) {
       override def next(): Boolean = { val h = page.hasNext; if (h) cur = page.next(); h }
-      override def get(): InternalRow =
-        InternalRow.fromSeq(required.fields.toSeq.map { f =>
-          FormPipelineSource.value(cur, f.name) match {
-            case s: String => UTF8String.fromString(s)
-            case other     => other
-          }
-        })
-      override def close(): Unit = ()
     }
   }
 }
@@ -393,21 +470,28 @@ private class FormReaderFactory(pushed: Array[Filter], required: StructType)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val r = p.asInstanceOf[FormRange]
-    new PartitionReader[InternalRow] {
-      private var i = r.start - 1
+    val keep = FormPipelineSource.predicate(pushed)
+    new FormRowReader(required) {
+      cur = r.start - 1
       override def next(): Boolean = {
-        i += 1
-        while (i < r.end && !pushed.forall(FormPipelineSource.evaluate(_, i))) i += 1
-        i < r.end
+        cur += 1
+        while (cur < r.end && !keep(cur)) cur += 1
+        cur < r.end
       }
-      override def get(): InternalRow =
-        InternalRow.fromSeq(required.fields.toSeq.map { f =>
-          FormPipelineSource.value(i, f.name) match {
-            case s: String => UTF8String.fromString(s)
-            case other     => other
-          }
-        })
-      override def close(): Unit = ()
     }
   }
+}
+
+/** Emits the `required` columns of submission `cur`; `next()` advances it. */
+private abstract class FormRowReader(required: StructType)
+    extends PartitionReader[InternalRow] {
+  private val cells = required.fieldNames.map(FormPipelineSource.cell)
+  protected var cur = -1L
+  override def get(): InternalRow = {
+    val row = new Array[Any](cells.length)
+    var k = 0
+    while (k < cells.length) { row(k) = cells(k)(cur); k += 1 }
+    new GenericInternalRow(row)
+  }
+  override def close(): Unit = ()
 }

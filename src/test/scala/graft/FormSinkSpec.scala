@@ -8,8 +8,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
-import org.scalatest.concurrent.Eventually._
-import org.scalatest.time.SpanSugar._
 
 import graft.etl.WatermarkEtl
 import graft.sources.FormSinkSource
@@ -684,13 +682,39 @@ class FormSinkSpec extends SparkSpec {
       .count() === n1 + n2)
   }
 
-  test("runIncrement pushes the sink watermark into the source as a literal") {
-    val dir = tmp()
-    def source(rows: Int): DataFrame =
-      spark.read.format("graft.sources.FormPipelineSource")
-        .option("rows", rows).option("partitions", 4).load()
-        .select("vendor", "description", "picker_erk", "charge_code", "po_number")
-    assert(WatermarkEtl.runIncrement(spark, source(200), dir, viaConnector = true) === 200)
+  private def formSource(rows: Int): DataFrame =
+    spark.read.format("graft.sources.FormPipelineSource")
+      .option("rows", rows).option("partitions", 4).load()
+      .select("vendor", "description", "picker_erk", "charge_code", "po_number")
+
+  /** `body`'s result, with the Spark jobs and tasks it ran: a listener
+    * counts the jobs and submitted stages of a job group set on this
+    * thread only. */
+  private def jobsAndTasks[T](body: => T): (T, Int, Int) = {
+    import org.apache.spark.scheduler._
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val (jobs, tasks) = (new java.util.concurrent.atomic.AtomicInteger,
+      new java.util.concurrent.atomic.AtomicInteger)
+    val listener = new SparkListener {
+      private def ours(p: java.util.Properties) =
+        p != null && group == p.getProperty("spark.jobGroup.id")
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (ours(e.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties)) tasks.addAndGet(e.stageInfo.numTasks)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "counted")
+    try {
+      val out = body
+      assert(org.apache.spark.graft.BusDrain.waitUntilEmpty(sc, 60000L))
+      (out, jobs.get, tasks.get)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  /** Executed plans of the queries that scan a `rows`-row form source. */
+  private def plansScanning[T](rows: Int)(body: => T): (T, Seq[String]) = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -698,13 +722,19 @@ class FormSinkSpec extends SparkSpec {
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    try {
-      assert(WatermarkEtl.runIncrement(spark, source(300), dir, viaConnector = true) === 100)
-      eventually(timeout(30.seconds)) {
-        assert(plans.asScala.exists(_.contains("FormPipelineScan rows=300")))
-      }
-    } finally spark.listenerManager.unregister(listener)
-    val append = plans.asScala.filter(_.contains("FormPipelineScan rows=300")).toSeq
+    val out = try body finally {
+      assert(org.apache.spark.graft.BusDrain.waitUntilEmpty(spark.sparkContext, 60000L))
+      spark.listenerManager.unregister(listener)
+    }
+    (out, plans.asScala.filter(_.contains(s"FormPipelineScan rows=$rows ")).toSeq)
+  }
+
+  test("runIncrement pushes the sink watermark into the source as a literal") {
+    val dir = tmp()
+    assert(WatermarkEtl.runIncrement(spark, formSource(200), dir, viaConnector = true) === 200)
+    val (n, append) = plansScanning(300)(
+      WatermarkEtl.runIncrement(spark, formSource(300), dir, viaConnector = true))
+    assert(n === 100)
     assert(append.size === 1, append)
     assert(append.head.contains("PushedFilters: [GreaterThan(po_number,U000000199D)]"),
       append.head)
@@ -726,6 +756,54 @@ class FormSinkSpec extends SparkSpec {
     // (reading a nonexistent version 2 must fail, proving the log length)
     assert(rowsAt(1) === v1)
     intercept[Exception](rowsAt(2))
+  }
+
+  test("a 100-row connector tick runs 2 Spark jobs and 2 tasks; a seed above the size gate keeps the range exchange") {
+    val dir = tmp()
+    val ((seeded, seedJobs, _), seedPlans) = plansScanning(100000)(
+      jobsAndTasks(WatermarkEtl.runIncrement(spark, formSource(100000), dir, viaConnector = true)))
+    assert(seeded === 100000)
+    // 6.4 MB estimated: above minPartitionSize, so the global sort stays —
+    // and the counter sees its sampling job and map stage
+    assert(seedPlans.size === 1 && seedPlans.head.contains("rangepartitioning"), seedPlans)
+    assert(seedJobs > 2, seedJobs)
+    // the seed writes the files a plain orderBy append of the same rows does
+    val plain = tmp()
+    formSource(100000).orderBy("po_number").write.format(FormSinkSource.Format)
+      .mode(SaveMode.Append).option("path", plain).save()
+    assert(FormSinkSource.snapshotInfo(dir)._2.size ===
+      FormSinkSource.snapshotInfo(plain)._2.size)
+
+    // the tick: the watermark job, then one task scanning the one narrowed
+    // range that holds the delta, sorting it and writing one file
+    val ((n, jobs, tasks), tickPlans) = plansScanning(100100)(
+      jobsAndTasks(WatermarkEtl.runIncrement(spark, formSource(100100), dir, viaConnector = true)))
+    assert(n === 100)
+    assert(jobs <= 2 && tasks <= 2, s"jobs=$jobs tasks=$tasks")
+    assert(tickPlans.size === 1 && !tickPlans.head.contains("Exchange"), tickPlans)
+    assert(FormSinkSource.snapshotInfo(dir)._2.size ===
+      FormSinkSource.snapshotInfo(plain)._2.size + 1)
+  }
+
+  test("connector appends stay ascending by PO: seed, small ticks, a tick above the gate, an empty tick") {
+    val dir = tmp()
+    // 20,000 rows estimate 1.28 MB (above minPartitionSize): global sort;
+    // 100 rows sort in one task
+    val appended = Seq(20000, 20100, 20200, 40200).map(rows =>
+      WatermarkEtl.runIncrement(spark, formSource(rows), dir, viaConnector = true))
+    assert(appended === Seq(20000L, 100L, 100L, 20000L))
+    val (version, files) = FormSinkSource.snapshotInfo(dir)
+    // nothing is newer than the watermark: the narrowed scan plans no
+    // partition, the tick appends nothing and publishes no version
+    assert(formSource(40200).filter(col("po_number") > "U000040199D")
+      .rdd.getNumPartitions === 0)
+    assert(WatermarkEtl.runIncrement(spark, formSource(40200), dir, viaConnector = true) === 0)
+    assert(FormSinkSource.snapshotInfo(dir) === ((version, files)))
+    // a manifest-order read: no sort, files in manifest order
+    val pos = spark.read.format(FormSinkSource.Format).option("path", dir).load()
+      .select("po_number").collect().map(_.getString(0)).toSeq
+    assert(pos.size === 40200)
+    assert(pos.zip(pos.tail).forall { case (a, b) => a < b })
   }
 
   test("delete rewrites only straddling files; stats-excluded files keep their bytes") {
