@@ -67,6 +67,10 @@ object Bench {
       }
     }
 
+    // Janino compilations so far in this JVM: a query whose reps keep
+    // compiling is evicting its own classes from the codegen cache
+    def compileCount(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
     // extra reps a noisy query may earn beyond `reps` before being flagged
     val maxExtra = sys.env.getOrElse("SPARK_GRAFT_MAX_EXTRA", "2").toInt
@@ -97,6 +101,7 @@ object Bench {
       // observation of the min is cheaper than a flagged number
       val baseReps = if (name.contains("stream")) reps + 1 else reps
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+      val compiles0 = compileCount()
       (1 to baseReps).foreach(_ => rep().foreach(times += _))
       // spread = gap between the TWO BEST observations, not max-min: rep 1
       // pays per-query Catalyst analysis + codegen compile that later reps
@@ -116,12 +121,13 @@ object Bench {
         if (best2Gap(times.toSeq) > 0.5 * times.min) flagged += name
       }
       if (times.size < baseReps) None
-      else Some(name -> (times.min, best2Gap(times.toSeq)))
+      else Some(name -> (times.min, best2Gap(times.toSeq),
+        compileCount() - compiles0))
     }
     // ms precision keeps the one-line JSON short enough to survive the
     // driver's bounded stdout-tail capture (9-decimal floats overflowed it)
     def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, (t, _)) => s"\"" + k + "\":" + r3(t) }
+    val qs = results.map { case (k, (t, _, _)) => s"\"" + k + "\":" + r3(t) }
       .mkString("{", ",", "}")
     val errs = errors.map { case (k, v) => s"\"" + k + "\":" + Harness.jsonQuote(v) }
       .mkString("{", ",", "}")
@@ -131,7 +137,7 @@ object Bench {
     // driver's tail-capture bound)
     val spreadTotal = results.values.map(_._2).sum
     val noisiest = results.toSeq.sortBy(-_._2._2).take(5)
-      .map { case (k, (_, s)) => s"\"" + k + "\":" + r3(s) }
+      .map { case (k, (_, s, _)) => s"\"" + k + "\":" + r3(s) }
       .mkString("{", ",", "}")
     def jarr(a: Array[Double]): String = a.map(r3).mkString("[", ",", "]")
     val flaggedJson = flagged.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -143,8 +149,8 @@ object Bench {
     // also persist the JSON to a file — with the full per-query spread map —
     // so a truncated captured stdout never loses the round's numbers (the
     // env var lets the driver redirect it)
-    val qfull = results.map { case (k, (t, s)) =>
-      s"\"" + k + "\":{\"t\":" + r3(t) + ",\"spread\":" + r3(s) + "}"
+    val qfull = results.map { case (k, (t, s, c)) =>
+      s"\"" + k + "\":{\"t\":" + r3(t) + ",\"spread\":" + r3(s) + ",\"compiles\":" + c + "}"
     }.mkString("{", ",", "}")
     val fileLine = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"query_reps":$qfull,"errors":$errs,"reps":$reps,"spread_total":${r3(spreadTotal)},"flagged":$flaggedJson,"loadavg_launch":${jarr(loadAtLaunch)},"loadavg_start":${jarr(loadAtStart)},"loadavg_end":${jarr(loadEnd)},"sf":"$sfDir"}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")

@@ -20,8 +20,10 @@ object Harness {
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
   /** `local[cpus]` with as many shuffle partitions, a UTC session clock
-    * (`Tables.events` re-tags µs-NTZ parquet assuming it), no UI,
-    * corpus-scaled AQE widths and the `SPARK_GRAFT_CONF` pass-through. */
+    * (`Tables.events` re-tags µs-NTZ parquet assuming it), no UI, the
+    * shared sizing of [[util.Sizing.configureAdaptiveWidths]] (codegen
+    * cache, corpus-scaled AQE widths) and the `SPARK_GRAFT_CONF`
+    * pass-through. */
   def session(sfDir: String, cpus: Int): SparkSession = {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")

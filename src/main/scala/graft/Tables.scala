@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Readers for the driver-generated parquet tables (TESTDATA.md). All access
   * goes through `spark.read.parquet` so Catalyst owns column pruning,
@@ -15,9 +15,30 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Session confs that change what parquet schema inference returns. */
+  private val InferenceConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** The table with its inferred schema memoized per JVM: inference is a
+    * Spark job over the footers (~100 ms of CPU per read against ~15 ms
+    * for a read given its schema), and the registry reads the same few
+    * tables over and over. Keyed on [[util.Scratch.sourceKey]], so a
+    * rewritten table re-infers, and on the inference confs, so a session
+    * that reads nanos as longs (`events`) gets its own entry. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     require(all.contains(name), s"unknown table: $name")
-    spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val key = (util.Scratch.sourceKey(dir, name) +: name +:
+      InferenceConfs.map(spark.conf.getOption(_).getOrElse(""))).mkString("|")
+    val schema = schemas.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
   }
 
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")

@@ -1125,16 +1125,18 @@ private class FormSinkBatchWrite(path: String, truncateFirst: Boolean,
   * top-level class so the closure ships only (path, jobId), never
   * the driver-side write. Each task stages one file under the job's (or
   * the epoch's) staging directory; the uuid makes retried and speculative
-  * attempts of the same task collide-free. */
+  * attempts of the same task collide-free. The name carries no task id:
+  * it would make names, and the manifest that lists them, grow with the
+  * number of tasks the JVM ran before the commit. */
 private class FormSinkWriterFactory(path: String, jobId: String)
     extends DataWriterFactory
     with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    stage(FormSinkSource.stagingDir(path, jobId), f"part-$partitionId%05d-$taskId")
+    stage(FormSinkSource.stagingDir(path, jobId), f"part-$partitionId%05d")
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
     stage(FormSinkSource.stagingDir(path, s"$jobId-epoch-$epochId"),
-      f"stream-$epochId%05d-$partitionId%05d-$taskId")
+      f"stream-$epochId%05d-$partitionId%05d")
   private def stage(staging: Path, stem: String): DataWriter[InternalRow] = {
     Files.createDirectories(staging)
     new FormSinkDataWriter(staging.resolve(

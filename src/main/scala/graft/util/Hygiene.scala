@@ -90,9 +90,38 @@ object Sizing {
       math.max(floor.toLong, rows / perTask + 1)).toInt
   }
 
-  /** Corpus-scaled AQE exchange widths for a session over `sfDir` — set on
-    * the BUILDER so streaming checkpoints inherit them too.
+  /** Entries of the JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`); see [[configureAdaptiveWidths]]. */
+  val CodegenCacheEntries: Int = 1024
+
+  /** The session sizing every entry point shares (`Harness.session`, the
+    * test fixture, the benchmark's mix session): a codegen cache that holds
+    * a mixed pass's classes, and corpus-scaled AQE exchange widths. Set on
+    * the BUILDER, before `getOrCreate`: the cache size is a static conf,
+    * and streaming checkpoints inherit the widths. `SPARK_GRAFT_CONF` is
+    * applied after this and can override either.
     *
+    * Codegen cache, unconditional. Spark keeps compiled Janino classes in
+    * one JVM-wide LRU, 100 entries by default, keyed by generated source
+    * and the compiling thread's class loader, so in local mode a class the
+    * driver compiles for planning is compiled and cached again for the
+    * executor's task threads. One pass of the benchmark's seven-query mix
+    * (q310, q339, q146, q44, q151, q263, q03) compiles 182–191 classes that
+    * way, on the 0.01 fixture and on sf0.001 alike. At 100 every pass
+    * thrashes: a second and third pass recompiled 174–177 of them, each
+    * ~18 ms of Janino plus re-JIT of the new class, which made a warm mix
+    * pass cost ~17 CPU-s instead of ~10. At 256, 512 and 1024 they
+    * recompiled 0–3, all plan variants the first pass never generated
+    * (see `SessionReuseSpec`). A single-query loop such as the cron tick
+    * stays under 100 and compiles nothing when warm. 1024 leaves room for
+    * five such mixes, and for Guava's segmenting: the bound is split
+    * across concurrency segments that each evict on their own. The live
+    * heap after GC of a mix run stays within a few MB of the default's.
+    * Spark sizes the cache once per JVM, when the first class compiles,
+    * from the conf active on that thread, so this must be in place before
+    * the JVM's first query.
+    *
+    * AQE widths, scope-gated.
     * The failure being fixed: `spark.sql.shuffle.partitions` is a session
     * constant, so a pair-explosion dedup at 100× data builds 100× the
     * per-task hash table. The failed first cut (measured, r16): a high
@@ -112,6 +141,7 @@ object Sizing {
     * proven bottleneck (sf1+). */
   def configureAdaptiveWidths(builder: org.apache.spark.sql.SparkSession.Builder,
                               sfDir: String, cpus: Int): Unit = {
+    builder.config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
     val bytes =
       try {
         val root = java.nio.file.Paths.get(sfDir)

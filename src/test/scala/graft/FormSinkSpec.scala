@@ -687,32 +687,6 @@ class FormSinkSpec extends SparkSpec {
       .option("rows", rows).option("partitions", 4).load()
       .select("vendor", "description", "picker_erk", "charge_code", "po_number")
 
-  /** `body`'s result, with the Spark jobs and tasks it ran: a listener
-    * counts the jobs and submitted stages of a job group set on this
-    * thread only. */
-  private def jobsAndTasks[T](body: => T): (T, Int, Int) = {
-    import org.apache.spark.scheduler._
-    val group = s"counted-${java.util.UUID.randomUUID()}"
-    val (jobs, tasks) = (new java.util.concurrent.atomic.AtomicInteger,
-      new java.util.concurrent.atomic.AtomicInteger)
-    val listener = new SparkListener {
-      private def ours(p: java.util.Properties) =
-        p != null && group == p.getProperty("spark.jobGroup.id")
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (ours(e.properties)) jobs.incrementAndGet()
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (ours(e.properties)) tasks.addAndGet(e.stageInfo.numTasks)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "counted")
-    try {
-      val out = body
-      assert(org.apache.spark.graft.BusDrain.waitUntilEmpty(sc, 60000L))
-      (out, jobs.get, tasks.get)
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-  }
-
   /** Executed plans of the queries that scan a `rows`-row form source. */
   private def plansScanning[T](rows: Int)(body: => T): (T, Seq[String]) = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()

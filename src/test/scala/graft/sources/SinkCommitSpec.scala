@@ -164,4 +164,21 @@ class SinkCommitSpec extends graft.SparkSpec {
     assert(dataFiles(dir) === onDisk, "the failed merge left files behind")
     assert(FormSinkSource.snapshotInfo(dir)._1 === v)
   }
+
+  test("staged names carry no task id: the same append before and after other jobs lists the same bytes") {
+    def manifestBytes(dir: String): Long = {
+      val Seq(m) = graft.util.Scratch.listEntries(FormSinkSource.manifestDir(dir))
+      Files.size(m)
+    }
+    val before = tmp()
+    append(before, 1, 50)
+    spark.range(0, 1000, 1, 64).count() // 64 more task ids
+    val after = tmp()
+    append(after, 1, 50)
+    assert(manifestBytes(after) === manifestBytes(before))
+    val staged = "part-00000-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}\\.parquet"
+    Seq(before, after).foreach(d =>
+      assert(FormSinkSource.snapshotInfo(d)._2.forall(_.matches(staged)),
+        FormSinkSource.snapshotInfo(d)._2))
+  }
 }
