@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.FormattedMode
   * Env: `SPARK_GRAFT_ONLY` (default: the load-bearing [[Keys]]),
   * `SPARK_GRAFT_PLANS_OUT` (default `dev/PLANS.md`; name a before/after
   * leg in the path), `SPARK_GRAFT_CONF` (tier-forcing confs such as
-  * `graft.lpa.broadcastNodes=0` show the fallback plans), and the
+  * `graft.driverTier.maxBytes=0` show the fallback plans), and the
   * [[Harness]] session variables. */
 object PlanDump {
   val Keys = Seq(

@@ -43,22 +43,14 @@ object GraphOps {
     * graph's diameter at every test SF; unreached nodes stay unlabeled. */
   val BfsRounds = 4
 
-  /** The q326 zero-exchange gate pair, shared by the q130/q176 array
-    * tiers: under [[lpaBroadcastNodes]] AND a dense id domain, a per-round
-    * O(V) vector (labels, ranks, distances) ships as one
-    * `Broadcast[Array[Long]]` resolved by a codegen array index inside the
-    * round's own aggregate over destination-partitioned cached edges —
-    * nothing O(E) crosses the wire after the one-time repartition. Past
-    * either gate the callers keep their original one-shuffle-per-round BSP
-    * loop (the shape that holds at any scale). */
-  private def arrayTier(s: org.apache.spark.sql.SparkSession,
-                        nNodes: Long, maxId: Long): Boolean =
-    nNodes > 0 && nNodes <= lpaBroadcastNodes(s) && maxId >= 0 &&
-      maxId < s.conf.getOption("graft.lpa.denseIdBound").map(_.toLong)
-        .getOrElse(2L * lpaBroadcastNodes(s))
-
   /** `arr(c)` under a broadcast primitive long array ([[org.apache.spark.sql.graft.LabelArrayLookup]]
-    * — generic long-array index, named for its first adopter). */
+    * — generic long-array index, named for its first adopter). The array
+    * tiers (q130, q176, q310, LPA; gated by [[graft.util.DriverTier]]) ship
+    * a per-round O(V) vector (labels, ranks, distances) this way and
+    * resolve it inside the round's own aggregate over cached edges, so
+    * nothing O(E) crosses the wire after the one-time repartition. Past the
+    * gate the callers keep their one-shuffle-per-round BSP loop (the shape
+    * that holds at any scale). */
   private def arrayLookup(
       bc: org.apache.spark.broadcast.Broadcast[Array[Long]],
       c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -173,11 +165,11 @@ object GraphOps {
       // the gate head, the array tier's collect and the fallback's per-round
       // rank rebuilds all re-aggregated it from the O(E) cache before (r20)
       val degF = edges.groupBy(col("u")).agg(count(lit(1)).as("deg")).persist()
-      // one plan-time sizing head(): node count (broadcast gate) + max id
-      // (dense-id gate) — the q326 Lpa gate pair
-      val gate = degF.agg(count(lit(1)), coalesce(max(col("u")), lit(-1L))).head()
-      val (nNodes, maxId) = (gate.getLong(0), gate.getLong(1))
-      if (arrayTier(s, nNodes, maxId)) {
+      // one plan-time sizing head(): node count + max id, the driver-tier
+      // gate's inputs
+      val (nNodes, maxId, arrayTier) =
+        graft.util.DriverTier.sizeDenseGraph(degF, "u")
+      if (arrayTier) {
         // ZERO-EXCHANGE round (the q326 array tier generalized from labels
         // to rank mass): the O(V) per-node contribution vector rides a
         // Broadcast[Array[Long]] resolved by a codegen array index inside
@@ -264,7 +256,7 @@ object GraphOps {
       val ed = Tables.lineitem(s, d)
         .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
         .distinct()
-      // source-partitioned persisted edges + the q326 gate pair, as in q130
+      // source-partitioned persisted edges + the driver-tier gate, as in q130
       // (r20): under the gate each round is ONE zero-exchange aggregate over
       // the cache (groupBy(u) + lookup(v) ≡ the old groupBy(v) + lookup(u)
       // on the symmetric frame); past it, the union+min-agg BSP loop's
@@ -277,9 +269,9 @@ object GraphOps {
       // persisted O(V): gate head + array-tier collect were two O(E) cache
       // aggregates before (r20)
       val degF = edges.groupBy(col("u")).agg(count(lit(1)).as("deg")).persist()
-      val gate = degF.agg(count(lit(1)), coalesce(max(col("u")), lit(-1L))).head()
-      val (nNodes, maxId) = (gate.getLong(0), gate.getLong(1))
-      if (arrayTier(s, nNodes, maxId)) {
+      val (_, maxId, arrayTier) =
+        graft.util.DriverTier.sizeDenseGraph(degF, "u")
+      if (arrayTier) {
         // dist'(v) = min(dist(v), 1 + min over in-neighbors u of dist(u)) —
         // identical to the fallback's union+min-agg round because the
         // unreached sentinel is larger than any reachable distance, so it
@@ -504,7 +496,7 @@ object GraphOps {
       val ed = Tables.lineitem(s, d)
         .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
         .distinct()
-      // source-partitioned persisted edges + the q326 gate pair (the
+      // source-partitioned persisted edges + the driver-tier gate (the
       // q130/q176 shape, r20): peeling is MONOTONE, so round i's edge frame
       // is the ORIGINAL frame filtered by the current survivor set — under
       // the gate each round is one zero-exchange filter+aggregate over the
@@ -521,9 +513,9 @@ object GraphOps {
       // Persisted O(V): gate head + array collect / fallback threshold were
       // separate O(E) cache aggregates before (r20)
       val degF = edges.groupBy(col("u")).agg(count(lit(1)).as("deg")).persist()
-      val gateR = degF.agg(count(lit(1)), coalesce(max(col("u")), lit(-1L))).head()
-      val (nNodes, maxId) = (gateR.getLong(0), gateR.getLong(1))
-      if (arrayTier(s, nNodes, maxId)) {
+      val (nNodes, maxId, arrayTier) =
+        graft.util.DriverTier.sizeDenseGraph(degF, "u")
+      if (arrayTier) {
         import s.implicits._
         val deg0 = new Array[Long](maxId.toInt + 1)
         graft.util.DriverCollect.foreachLongPair(degF)((u, dg) =>
@@ -678,7 +670,7 @@ object GraphOps {
 
     GraftQuery(
       "q326_label_propagation",
-      s"Label-propagation community detection ($LpaRounds fixed synchronous BSP rounds) over the part↔supplier co-occurrence graph — the near-linear community finder (Raghavan et al.) pipelines run where modularity solvers don't scale: every node starts as its own label and each round adopts the MOST FREQUENT label among its neighbors, ties broken by smallest label — the (count DESC, label ASC) order is total, so the update is bit-identical across engines and partitionings (async/random-order LPA is not reproducible; the synchronous total-order form is; the oracle states it as a row_number over each node's neighbor-label census). Per round the engine pays ZERO exchanges under the node-count gate (≤4M nodes): the O(V) label frame BROADCASTS into the join against edges persisted hash-partitioned on the adopting node, the broadcast join preserves that partitioning, and groupBy(node) feeds the native LabelModeAgg (exact degree-bounded label→count map, map-side-merged; q212's bounded-aggregate doctrine — the census+argmax two-shuffle forms this replaces are pinned bit-identical in KernelSpec) partial+final in the SAME stage — nothing O(E) crosses the wire after the one-time repartition; past the gate it degrades to the one-exchange-per-round shuffle form (v-partitioned edges, label frame moves, census exchange on node). localCheckpoint truncates each round's O(V) lineage, short-circuit once the full-assignment xor fingerprint repeats (a true fixpoint: the update is a deterministic function of the assignment). The per-round census (distinct labels, assignment checksum, largest community) makes a single wrongly-adopted label fail the gate — and on this BIPARTITE graph it records synchronous LPA's known two-coloring oscillation, which the q333 modularity eval quantifies at Q = −0.5 (see there; the pair demonstrates detection, and that production projects to one mode first).",
+      s"Label-propagation community detection ($LpaRounds fixed synchronous BSP rounds) over the part↔supplier co-occurrence graph — the near-linear community finder (Raghavan et al.) pipelines run where modularity solvers don't scale: every node starts as its own label and each round adopts the MOST FREQUENT label among its neighbors, ties broken by smallest label — the (count DESC, label ASC) order is total, so the update is bit-identical across engines and partitionings (async/random-order LPA is not reproducible; the synchronous total-order form is; the oracle states it as a row_number over each node's neighbor-label census). Per round the engine pays ZERO exchanges under the driver-tier gate (graft.util.DriverTier — at the default budget ≤4M nodes with ids < 8M): the O(V) assignment BROADCASTS as a primitive array indexed by node id, and groupBy(node) over edges persisted hash-partitioned on the adopting node resolves each neighbor's label by array index into the native LabelModeAgg (exact degree-bounded label→count map, map-side-merged; q212's bounded-aggregate doctrine — the census+argmax two-shuffle forms this replaces are pinned bit-identical in KernelSpec) partial+final in the SAME stage — nothing O(E) crosses the wire after the one-time repartition; past the gate it degrades to the one-exchange-per-round shuffle form (v-partitioned edges, label frame moves, census exchange on node). localCheckpoint truncates each round's O(V) lineage, short-circuit once the full-assignment xor fingerprint repeats (a true fixpoint: the update is a deterministic function of the assignment). The per-round census (distinct labels, assignment checksum, largest community) makes a single wrongly-adopted label fail the gate — and on this BIPARTITE graph it records synchronous LPA's known two-coloring oscillation, which the q333 modularity eval quantifies at Q = −0.5 (see there; the pair demonstrates detection, and that production projects to one mode first).",
       lpaSql) { (s, d) =>
       val ps = Tables.lineitem(s, d)
         .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
@@ -967,37 +959,29 @@ object GraphOps {
        |  $qPpmSql
        |FROM g CROSS JOIN mm CROSS JOIN sic""".stripMargin
 
-  /** Node-count gate for the ZERO-EXCHANGE LPA round: up to this many
-    * nodes the O(V) label frame broadcasts each round (4M nodes ≈ 64 MB of
-    * (node, lab) longs — comfortably executor-resident; the sf10 graphs
-    * carry ~2.1M), above it the loop degrades to the shuffle form below.
-    * Per-session override for specs exercising the degradation path. */
-  private def lpaBroadcastNodes(s: org.apache.spark.sql.SparkSession): Long =
-    s.conf.getOption("graft.lpa.broadcastNodes").map(_.toLong)
-      .getOrElse(4000000L)
-
   /** Shared LPA machinery for one query: takes the UNDIRECTED edge set
     * (each edge once — symmetrization happens in here, against a cache, so
     * an expensive derivation never cold-evaluates twice), partitions +
-    * persists the directed frame in the layout its round shape wants and
-    * serves the rounds.
-    *
-    * Round shape (the r13 q335 finding — the native LabelModeAgg argmax
-    * left the per-round O(E) edge⋈label exchange as the dominant term at
-    * sf10): with the label frame BROADCAST, the round is zero-exchange —
-    * the edge frame persists hash-partitioned on u, the broadcast hash
-    * join preserves that partitioning, and `groupBy(u)` runs partial+final
-    * in the same stage, so NOTHING O(E) ever crosses the wire after the
-    * one-time repartition. The gate is the node count, measured ONCE per
-    * query from the initial label frame (an O(V) driver scalar — the same
-    * plan-time sizing job q304's bloom does): past [[lpaBroadcastNodes]]
-    * the machinery falls back to v-partitioned edges, where the per-round
-    * join reuses the persisted partitioning and only the census exchange
-    * on u moves O(E)-bounded partial maps — the r13 shape, still one
-    * exchange per round. persist() not localCheckpoint: a checkpointed
-    * frame loses its outputPartitioning to Catalyst (measured: every
-    * round re-exchanges the O(E) side); the Bench/Verify harness sweeps
-    * persisted frames between queries (the q261 contract).
+    * persists the directed frame in the layout its tier wants and serves
+    * the rounds. The tier is chosen ONCE per query by
+    * [[graft.util.DriverTier]] from the node count and max node id, both
+    * from one plan-time sizing job (the same kind q304's bloom runs):
+    *   - ARRAY tier (r17 verdict item 4; the r13 q335 finding that the
+    *     per-round O(E) edge⋈label exchange dominated at sf10): the
+    *     assignment ships as one `Broadcast[Array[Long]]` indexed by node
+    *     id, and a round is `groupBy(u).agg(labelMode(lookup(v)))` — one
+    *     whole-stage-codegen aggregate over the u-partitioned edge cache,
+    *     the label resolved by a codegen'd array index
+    *     ([[org.apache.spark.sql.graft.LabelArrayLookup]]): no join, and
+    *     nothing O(E) crosses the wire after the one-time repartition;
+    *   - SHUFFLE tier: edges persist v-partitioned, the per-round join
+    *     reuses that partitioning and only the label frame moves, and the
+    *     census exchange on u moves O(E)-bounded partial maps — the r13
+    *     shape, one exchange per round, at any scale.
+    * persist() not localCheckpoint: a checkpointed frame loses its
+    * outputPartitioning to Catalyst (measured: every round re-exchanges
+    * the O(E) side); the Bench/Verify harness sweeps persisted frames
+    * between queries (the q261 contract).
     *
     * One synchronous round adopts the most frequent neighbor label,
     * smallest label on ties, via ONE native bounded aggregation
@@ -1041,39 +1025,19 @@ object GraphOps {
     val lab0: org.apache.spark.sql.DataFrame =
       eU.select(col("u").as("node")).distinct()
         .withColumn("lab", col("node")).localCheckpoint()
-    /** One sizing action yields BOTH gate inputs — the node count (the
-      * broadcast gate) and the max node id (the dense-id gate below) — plus
-      * the node-id sum, which is the identity assignment's census
-      * `sum_labels` (r20: the array tier computes per-round censuses on the
-      * driver from the collected assignment, and round 0's needs only this
-      * sum — no extra job). */
-    private val (nNodes, maxNodeId, idSum) = {
+    /** One sizing action yields BOTH gate inputs — the node count and the
+      * max node id — plus the node-id sum, which is the identity
+      * assignment's census `sum_labels` (r20: the array tier computes
+      * per-round censuses on the driver from the collected assignment, and
+      * round 0's needs only the count and this sum — no extra job). */
+    val (nodeCount, maxNodeId, nodeIdSum) = {
       val r = lab0.agg(count(lit(1)), coalesce(max(col("node")), lit(-1L)),
         coalesce(sum(col("node")), lit(0L))).head()
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }
-    /** Node count / identity-assignment label sum, for driver-side round-0
-      * censuses in the array tier. */
-    val nodeCount: Long = nNodes
-    val nodeIdSum: Long = idSum
-    private val bcast = nNodes <= lpaBroadcastNodes(session)
-    /** PRIMITIVE-ARRAY tier gate (r17 verdict item 4): under the broadcast
-      * gate AND a dense node-id domain, the per-round label frame ships as
-      * one `Broadcast[Array[Long]]` indexed by node id — the round then
-      * has NO join at all: `groupBy(u).agg(labelMode(lookup(v)))` runs as
-      * one whole-stage-codegen aggregate over the u-partitioned edge
-      * cache, the label resolved by a codegen'd array index
-      * ([[org.apache.spark.sql.graft.LabelArrayLookup]]). The profiled
-      * sf10 constant this removes: 10-14 s/round building + probing a
-      * 2M-entry UnsafeRow broadcast hash relation. The id bound (default
-      * 2× the node gate → a ≤64 MB long array, the same budget the
-      * broadcast gate was sized to) keeps sparse id spaces on the
-      * broadcast-JOIN tier — correctness never depends on density, only
-      * the constant does. Override `graft.lpa.denseIdBound` to pin a tier
-      * in specs. */
-    private val arrayMode = bcast && maxNodeId >= 0 &&
-      maxNodeId < session.conf.getOption("graft.lpa.denseIdBound")
-        .map(_.toLong).getOrElse(2L * lpaBroadcastNodes(session))
+    /** Whether the rounds run on the array tier (see the class doc). */
+    val arrayTier: Boolean = graft.util.DriverTier.denseGraph(
+      graft.util.DriverTier.budget(session), nodeCount, maxNodeId)
 
     /** The assignment as a node-id-indexed long array (unassigned slots
       * -1; never probed — see [[org.apache.spark.sql.graft.LabelArrayLookup]]'s
@@ -1085,21 +1049,14 @@ object GraphOps {
         lab.select(col("node"), col("lab")))((n, l) => arr(n.toInt) = l)
       arr
     }
-    /** lookup(c) under a per-round broadcast of [[labelArray]]. */
-    private def lookupCol(
-        bc: org.apache.spark.broadcast.Broadcast[Array[Long]],
-        c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      org.apache.spark.sql.graft.GraftShim.column(
-        org.apache.spark.sql.graft.LabelArrayLookup(
-          org.apache.spark.sql.graft.GraftShim.expression(c), bc))
-    /** Edge frame persisted pre-partitioned: on u when the rounds run
-      * zero-exchange (the groupBy(u) inherits it through the broadcast
-      * join), on v for the shuffle fallback (the per-round join reuses
-      * it and only the label frame moves) — re-partitioned FROM the
-      * u-cache, one extra O(E) exchange at construction, never a second
-      * cold evaluation of the edge derivation. */
+    /** Edge frame persisted pre-partitioned: on u for the array tier (its
+      * groupBy(u) runs over the cache exchange-free), on v for the shuffle
+      * tier (the per-round join reuses it and only the label frame moves)
+      * — re-partitioned FROM the u-cache, one extra O(E) exchange at
+      * construction, never a second cold evaluation of the edge
+      * derivation. */
     val e: org.apache.spark.sql.DataFrame =
-      if (bcast) { und.unpersist(); eU }
+      if (arrayTier) { und.unpersist(); eU }
       else {
         val ev = eU.repartition(nE, col("v")).persist()
         ev.count() // materialize from the u-cache before dropping it
@@ -1107,29 +1064,15 @@ object GraphOps {
         eU.unpersist()
         ev
       }
-    /** The label frame as a join side — broadcast under the gate. */
-    def labSide(lab: org.apache.spark.sql.DataFrame,
-                nodeAs: String, labAs: String)
-        : org.apache.spark.sql.DataFrame = {
-      val side = lab.select(col("node").as(nodeAs), col("lab").as(labAs))
-      if (bcast) broadcast(side) else side
-    }
-    /** One synchronous LPA round (see class doc). Array tier: no join —
-      * the label resolves via a broadcast primitive-array index inside the
-      * aggregate's own stage; the broadcast is destroyed as soon as the
-      * eager localCheckpoint has materialized the round (the checkpoint
-      * cut the lineage, so nothing can re-evaluate against it). */
+    /** The label frame as a join side. */
+    private def labSide(lab: org.apache.spark.sql.DataFrame,
+                        nodeAs: String, labAs: String)
+        : org.apache.spark.sql.DataFrame =
+      lab.select(col("node").as(nodeAs), col("lab").as(labAs))
+    /** One synchronous shuffle-tier round (see class doc). */
     def round(lab: org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame =
-      if (arrayMode) {
-        val bc = session.sparkContext.broadcast(labelArray(lab))
-        try e.groupBy(col("u"))
-          .agg(graft.functions.GraftFunctions
-            .labelMode(lookupCol(bc, col("v"))).as("lab"))
-          .withColumnRenamed("u", "node")
-          .localCheckpoint()
-        finally bc.destroy()
-      } else e.join(labSide(lab, "vn", "vl"), col("v") === col("vn"))
+      e.join(labSide(lab, "vn", "vl"), col("v") === col("vn"))
         .groupBy(col("u"))
         .agg(graft.functions.GraftFunctions.labelMode(col("vl")).as("lab"))
         .withColumnRenamed("u", "node")
@@ -1149,24 +1092,13 @@ object GraphOps {
         .withColumnRenamed("u", "node")
         .localCheckpoint()
     /** Per-(node, label) degree + same-label endpoint count in ONE pass
-      * over the O(E) cache — modularity's two ingredients, tiered exactly
-      * like [[round]]: array mode resolves BOTH endpoints' labels by
-      * broadcast array index (zero joins, zero exchanges over the
-      * u-partitioned cache); the join tiers below are unchanged. The
-      * array broadcast is reclaimed by the context cleaner once the frame
-      * is unreferenced — the frame is LAZY here (the caller aggregates it
-      * under its own action), so an eager destroy would break execution. */
+      * over the O(E) cache — modularity's two ingredients, shuffle tier:
+      * the v-side label join reuses the edge frame's v-partitioning, so
+      * only the u-side join exchanges the O(E) frame
+      * ([[perNodeDegSameArr]] is the array tier's twin). */
     def perNodeDegSame(lab: org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame =
-      if (arrayMode) {
-        val bc = session.sparkContext.broadcast(labelArray(lab))
-        e.select(col("u"), lookupCol(bc, col("u")).as("la"),
-            lookupCol(bc, col("v")).as("lb"))
-          .groupBy(col("u"), col("la"))
-          .agg(count(lit(1)).as("deg"),
-            sum(when(col("la") === col("lb"), 1L).otherwise(0L)).as("same"))
-      } else e
-        .join(labSide(lab, "bu", "lb"), col("v") === col("bu"))
+      e.join(labSide(lab, "bu", "lb"), col("v") === col("bu"))
         .join(labSide(lab, "au", "la"), col("u") === col("au"))
         .groupBy(col("u"), col("la"))
         .agg(count(lit(1)).as("deg"),
@@ -1192,9 +1124,7 @@ object GraphOps {
     // collects straight into the next assignment array), censuses computed
     // on the driver from the same array, fixpoints detected by EXACT array
     // equality (strictly stronger than the xor fingerprint it replaces —
-    // no collision caveat). Fallback tiers are untouched.
-    /** Whether the zero-exchange array tier is active (gate + dense ids). */
-    def arrayTier: Boolean = arrayMode
+    // no collision caveat).
 
     /** Round 1 from the identity assignment, collected (see
       * [[roundIdentity]] for why min(v) is exact there). */
@@ -1209,7 +1139,7 @@ object GraphOps {
       try labelArray(
         e.groupBy(col("u"))
           .agg(graft.functions.GraftFunctions
-            .labelMode(lookupCol(bc, col("v"))).as("lab"))
+            .labelMode(arrayLookup(bc, col("v"))).as("lab"))
           .withColumnRenamed("u", "node"))
       finally bc.destroy()
     }
@@ -1221,15 +1151,16 @@ object GraphOps {
       arr
     }
 
-    /** [[perNodeDegSame]] fed by an assignment array directly — skips the
-      * redundant collect the frame-based overload would re-run. Lazy; the
-      * broadcast is reclaimed by the context cleaner (see the frame
-      * overload's note). */
+    /** [[perNodeDegSame]] in the array tier, fed by an assignment array:
+      * BOTH endpoints' labels resolve by broadcast array index — zero joins,
+      * zero exchanges over the u-partitioned cache. The frame is LAZY (the
+      * caller aggregates it under its own action), so the broadcast is left
+      * to the context cleaner; an eager destroy would break execution. */
     def perNodeDegSameArr(arr: Array[Long])
         : org.apache.spark.sql.DataFrame = {
       val bc = session.sparkContext.broadcast(arr)
-      e.select(col("u"), lookupCol(bc, col("u")).as("la"),
-          lookupCol(bc, col("v")).as("lb"))
+      e.select(col("u"), arrayLookup(bc, col("u")).as("la"),
+          arrayLookup(bc, col("v")).as("lb"))
         .groupBy(col("u"), col("la"))
         .agg(count(lit(1)).as("deg"),
           sum(when(col("la") === col("lb"), 1L).otherwise(0L)).as("same"))
@@ -1277,9 +1208,8 @@ object GraphOps {
 
   /** (n_communities, m, q_ppm) 1-row modularity frame — Spark twin of
     * [[modularityCtesSql]]; edges directed-both-ways, `lab` (node, lab).
-    * Under the broadcast gate both label joins are map-side and the degree
-    * census inherits the u-partitioning — the whole metric is
-    * exchange-free over the persisted edges. */
+    * In the array tier the whole metric is exchange-free over the
+    * persisted edges. */
   private def modularityFrom(lpa: Lpa,
                              perNodeDegSame: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
@@ -1291,10 +1221,7 @@ object GraphOps {
     // (r16 — deg and sic were two separate full passes): per (u, la) the
     // degree AND the same-label endpoint count ride one aggregate; the
     // grouped frame is O(V) (la is constant per u), and everything below
-    // it is census-sized. Tiered inside Lpa.perNodeDegSame[Arr]: array mode
-    // is join-free (both labels by broadcast array index); the shuffle
-    // fallback's v-side join reuses the edge frame's persisted
-    // v-partitioning so only the u-side join exchanges the O(E) frame.
+    // it is census-sized. Tiered as Lpa.perNodeDegSame[Arr].
     val perNode =
       graft.util.CacheOnce.persistForOneAction(perNodeDegSame)
     val sic = perNode.agg(sum(col("same")).cast(dec).as("sic"))

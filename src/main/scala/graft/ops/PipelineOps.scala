@@ -30,10 +30,10 @@ object PipelineOps {
   private val stagedMv =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** Default per-bucket membership cap for LSH edge generation (overridable
-    * via `spark.graft.lsh.maxBucketSize`). A band bucket with c members emits
-    * c·(c−1) edges; one degenerate mega-bucket (empty/boilerplate documents
-    * all hashing alike) would make edge generation O(c²) at corpus scale.
+  /** Per-bucket membership cap for LSH edge generation. A band bucket with
+    * c members emits c·(c−1) edges; one degenerate mega-bucket
+    * (empty/boilerplate documents all hashing alike) would make edge
+    * generation O(c²) at corpus scale.
     * Buckets over the cap are dropped entirely — the standard guard: a bucket
     * that large is a degenerate-content collision, not near-dup signal, and
     * its members still pair in any other (selective) band they share. */
@@ -63,9 +63,7 @@ object PipelineOps {
 
   /** Candidate duplicate edges from MinHash-LSH band collisions: symmetric
     * (src, dst) pairs of docs sharing any band bucket (same banding as q40),
-    * bounded by the bucket-size cap above. Opt-in logging of truncated
-    * buckets (`spark.graft.lsh.logSkippedBuckets=true`) runs one extra small
-    * aggregate job, so it stays off in the timed query path. */
+    * bounded by the bucket-size cap above. */
   private def lshEdges(s: SparkSession, d: String): DataFrame = {
     val sig = Dedup.minhashSignatures(s, d)
     val bandCols = (0 until Dedup.NumBands).map { b =>
@@ -75,16 +73,7 @@ object PipelineOps {
     }
     val bands = sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-    val cap = s.conf.getOption("spark.graft.lsh.maxBucketSize")
-      .map(_.toInt).getOrElse(DefaultMaxBucket)
-    if (s.conf.getOption("spark.graft.lsh.logSkippedBuckets").exists(_.toBoolean)) {
-      val skipped = bands.groupBy(col("band"), col("key"))
-        .agg(count(lit(1)).as("n")).filter(col("n") > cap).count()
-      if (skipped > 0)
-        org.slf4j.LoggerFactory.getLogger("graft.lsh")
-          .warn(s"lshEdges: dropped $skipped band buckets larger than $cap members")
-    }
-    bandedPairs(bands, cap)
+    bandedPairs(bands, DefaultMaxBucket)
   }
 
   // ---- driver components tier (r20) ----------------------------------------
@@ -100,23 +89,21 @@ object PipelineOps {
   // test (strictly stronger than the xor fingerprint). Past the gate the
   // distributed loops below run unchanged.
 
-  /** Collect an edge frame as encoded `(a << 32) | b` longs if it fits the
-    * driver tier: edge count within budget (default 2M ⇒ ≤64 MB of labels
-    * shipped back, the LPA broadcast budget) AND ids inside the 31-bit
-    * encode domain. `graft.components.driverEdgeBound=0` forces the
-    * distributed tier (specs pin tier equality with it). */
+  /** Collect an edge frame as encoded `(a << 32) | b` longs if
+    * [[graft.util.DriverTier.edgeList]] takes it (edge count within the
+    * driver-tier budget, ids inside the 31-bit encode domain). A zero
+    * budget forces the distributed tier without the sizing job (specs pin
+    * tier equality with it). */
   private def driverTierEdges(e: DataFrame, a: String, b: String)
       : Option[Array[Long]] = {
-    val s = e.sparkSession
-    val bound = s.conf.getOption("graft.components.driverEdgeBound")
-      .map(_.toLong).getOrElse(2000000L)
-    if (bound <= 0L) None
+    val budget = graft.util.DriverTier.budget(e.sparkSession)
+    if (budget <= 0L) None
     else {
       val r = e.agg(count(lit(1)),
         coalesce(max(greatest(col(a), col(b))), lit(-1L)),
         coalesce(min(least(col(a), col(b))), lit(0L))).head()
-      if (r.getLong(0) > bound || r.getLong(1) >= (1L << 31) ||
-        r.getLong(2) < 0L) None
+      if (!graft.util.DriverTier.edgeList(budget, r.getLong(0), r.getLong(2),
+          r.getLong(1))) None
       else {
         val bld = new scala.collection.mutable.ArrayBuilder.ofLong
         graft.util.DriverCollect.foreachLongPair(e.select(col(a), col(b)))(

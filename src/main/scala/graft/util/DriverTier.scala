@@ -1,0 +1,63 @@
+package graft.util
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, max}
+
+/** The one "driver or distributed" gate of the graph and components tiers.
+  *
+  * A driver tier collects a small graph to the driver and runs its rounds
+  * there; past the gate the same rounds run as distributed Spark jobs. Each
+  * family charges its driver footprint against ONE byte budget:
+  *   - dense-id graph arrays (q130, q176, q310, LPA): [[NodeBytes]] per node
+  *     AND [[SlotBytes]] per id slot `0..maxId`, each within the budget;
+  *   - component edge arrays (q83, q131, q149, q339): [[EdgeBytes]] per edge,
+  *     ids inside the 31-bit `(a << 32) | b` encode domain.
+  * The default budget, 64,000,000 bytes, admits ≤ 4M nodes with max id
+  * < 8M, and ≤ 2M edges. `graft.driverTier.maxBytes` may lower the budget
+  * (`0` forces every distributed tier) but never raise it past
+  * [[ceiling]], an eighth of the driver's max heap, so no setting can
+  * collect a graph the driver cannot hold. */
+object DriverTier {
+  val MaxBytesConf = "graft.driverTier.maxBytes"
+  val DefaultMaxBytes: Long = 64000000L
+
+  /** One (node, value) long pair per node. */
+  val NodeBytes: Long = 16L
+  /** One long per dense-id slot. */
+  val SlotBytes: Long = 8L
+  /** An encoded 8-byte edge plus the rounds' sorted copies and label-map
+    * entries; 32 B keeps the components tier's 2M-edge default. */
+  val EdgeBytes: Long = 32L
+
+  /** The hard ceiling: an eighth of the driver JVM's max heap. */
+  def ceiling: Long = Runtime.getRuntime.maxMemory / 8
+
+  /** `maxBytes` clamped to `[0, ceiling]`. */
+  def budget(maxBytes: Long): Long = math.max(0L, math.min(maxBytes, ceiling))
+
+  def budget(s: SparkSession): Long =
+    budget(s.conf.getOption(MaxBytesConf).map(_.toLong).getOrElse(DefaultMaxBytes))
+
+  /** `n` items at `charge` bytes each fit a positive budget. */
+  private def fits(budget: Long, n: Long, charge: Long): Boolean =
+    budget > 0L && n <= budget / charge
+
+  /** A non-empty graph of `nodes` nodes with ids in `[0, maxId]` fits the
+    * dense-array driver tier. */
+  def denseGraph(budget: Long, nodes: Long, maxId: Long): Boolean =
+    nodes > 0L && maxId >= 0L && fits(budget, nodes, NodeBytes) &&
+      maxId < budget / SlotBytes
+
+  /** An edge list of `edges` edges with ids in `[minId, maxId]` fits the
+    * components driver tier. */
+  def edgeList(budget: Long, edges: Long, minId: Long, maxId: Long): Boolean =
+    minId >= 0L && maxId < (1L << 31) && fits(budget, edges, EdgeBytes)
+
+  /** The q130/q176/q310 sizing job over a node-keyed frame: one aggregate
+    * yields `(nodes, maxId)` and whether [[denseGraph]] takes them. */
+  def sizeDenseGraph(nodes: DataFrame, id: String): (Long, Long, Boolean) = {
+    val r = nodes.agg(count(lit(1)), coalesce(max(col(id)), lit(-1L))).head()
+    val (n, maxId) = (r.getLong(0), r.getLong(1))
+    (n, maxId, denseGraph(budget(nodes.sparkSession), n, maxId))
+  }
+}

@@ -384,7 +384,7 @@ object HilbertIndex {
   }
 }
 
-/** Primitive-array label lookup for the LPA broadcast tier (r17 verdict
+/** Primitive-array label lookup for the LPA array tier (r17 verdict
   * item 4 — "shrink the LPA broadcast constants"): under the dense-id gate
   * the per-round O(V) label frame ships to executors as ONE
   * `Broadcast[Array[Long]]` indexed by node id, and the round's label
@@ -397,8 +397,8 @@ object HilbertIndex {
   * [0, maxNodeId] of the SAME symmetrized edge frame the round aggregates,
   * and the label frame assigns every distinct endpoint — so every probe
   * `v` indexes an assigned slot. The dense-id gate (`maxId` bounded by
-  * [[graft.ops.GraphOps]]'s array budget) is what keeps the array small;
-  * sparse id spaces fall back to the broadcast-join tier unchanged. */
+  * [[graft.util.DriverTier]]'s budget) is what keeps the array small;
+  * sparse id spaces fall back to the shuffle tier unchanged. */
 case class LabelArrayLookup(child: Expression,
     bc: org.apache.spark.broadcast.Broadcast[Array[Long]])
     extends UnaryExpression with ExpectsInputTypes {

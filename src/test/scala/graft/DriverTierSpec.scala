@@ -1,0 +1,68 @@
+package graft
+
+import graft.util.DriverTier
+
+/** The driver-tier gate's decision table, called directly: the default
+  * budget's boundaries reproduce the per-family gates it replaced, a zero
+  * budget forces every distributed tier, and no setting lifts the budget
+  * past the heap ceiling. */
+class DriverTierSpec extends SparkSpec {
+
+  private val default = DriverTier.budget(DriverTier.DefaultMaxBytes)
+
+  test("default budget: ≤ 4M nodes with max id < 8M for the dense-id graph tiers") {
+    assert(default === 64000000L)
+    assert(DriverTier.denseGraph(default, 4000000L, 0L))
+    assert(!DriverTier.denseGraph(default, 4000001L, 0L))
+    assert(DriverTier.denseGraph(default, 1L, 7999999L))
+    assert(!DriverTier.denseGraph(default, 1L, 8000000L))
+    assert(DriverTier.denseGraph(default, 4000000L, 7999999L))
+    // an empty graph (max id -1) has nothing to collect
+    assert(!DriverTier.denseGraph(default, 0L, -1L))
+  }
+
+  test("default budget: ≤ 2M edges with ids in [0, 2^31) for the components tier") {
+    assert(DriverTier.edgeList(default, 2000000L, 0L, 0L))
+    assert(!DriverTier.edgeList(default, 2000001L, 0L, 0L))
+    assert(DriverTier.edgeList(default, 1L, 0L, (1L << 31) - 1))
+    assert(!DriverTier.edgeList(default, 1L, 0L, 1L << 31))
+    assert(!DriverTier.edgeList(default, 1L, -1L, 0L))
+    assert(DriverTier.edgeList(default, 0L, 0L, -1L))
+  }
+
+  test("maxBytes=0 (or below) forces every distributed tier") {
+    Seq(0L, -1L, Long.MinValue).foreach { b =>
+      val budget = DriverTier.budget(b)
+      assert(budget === 0L)
+      assert(!DriverTier.denseGraph(budget, 1L, 0L))
+      assert(!DriverTier.edgeList(budget, 0L, 0L, 0L))
+    }
+  }
+
+  test("maxBytes=Long.MaxValue still refuses a footprint above the heap ceiling") {
+    val budget = DriverTier.budget(Long.MaxValue)
+    assert(budget === DriverTier.ceiling)
+    assert(DriverTier.ceiling === Runtime.getRuntime.maxMemory / 8)
+    // a 1e9-edge bound would collect ~32 GB of encoded edges and labels
+    assert(!DriverTier.edgeList(budget, 1000000000L, 0L, 1L))
+    val edges = DriverTier.ceiling / DriverTier.EdgeBytes
+    assert(DriverTier.edgeList(budget, edges, 0L, 1L))
+    assert(!DriverTier.edgeList(budget, edges + 1, 0L, 1L))
+    val nodes = DriverTier.ceiling / DriverTier.NodeBytes
+    assert(DriverTier.denseGraph(budget, nodes, 0L))
+    assert(!DriverTier.denseGraph(budget, nodes + 1, 0L))
+    val slots = DriverTier.ceiling / DriverTier.SlotBytes
+    assert(DriverTier.denseGraph(budget, 1L, slots - 1))
+    assert(!DriverTier.denseGraph(budget, 1L, slots))
+  }
+
+  test("the session budget reads graft.driverTier.maxBytes and clamps it") {
+    assert(DriverTier.budget(spark) === default)
+    try {
+      spark.conf.set(DriverTier.MaxBytesConf, "1000")
+      assert(DriverTier.budget(spark) === 1000L)
+      spark.conf.set(DriverTier.MaxBytesConf, Long.MaxValue.toString)
+      assert(DriverTier.budget(spark) === DriverTier.ceiling)
+    } finally spark.conf.unset(DriverTier.MaxBytesConf)
+  }
+}

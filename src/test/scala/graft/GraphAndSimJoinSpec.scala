@@ -15,66 +15,56 @@ class GraphAndSimJoinSpec extends SparkSpec {
   private def q(name: String) =
     SparkEntry.registry.find(_.name == name).get.build(spark, sf)
 
-  // ---- LPA tiers ----------------------------------------------------------
+  // ---- driver tiers -------------------------------------------------------
 
-  test("LPA array tier ≡ broadcast-join tier, bit-identical (q326/q333/q335)") {
-    // the r17-item-4 lever: under the dense-id gate the round resolves
-    // labels by broadcast primitive-array index instead of a broadcast
-    // hash join — a CONSTANT optimization, so every output frame must be
-    // bit-identical across tiers. denseIdBound=0 forces the join tier
-    // (broadcastNodes stays default, so the join tier — not the shuffle
-    // fallback — is the control).
-    def runAll() = Seq("q326_label_propagation", "q333_lpa_modularity",
-      "q335_projected_community_quality")
-      .map(n => n -> q(n).collect().toSeq).toMap
-    val arrayTier = runAll() // default: dense ids at spec sf → array mode
-    spark.conf.set("graft.lpa.denseIdBound", "0")
-    try {
-      val joinTier = runAll()
-      arrayTier.foreach { case (n, rows) =>
-        assert(rows === joinTier(n), s"$n diverged across LPA tiers")
-      }
-    } finally spark.conf.unset("graft.lpa.denseIdBound")
+  /** Each query's rows at the default driver-tier budget and with
+    * `graft.driverTier.maxBytes=0`, which forces every distributed tier. */
+  private def bothTiers(names: String*)
+      : (Map[String, Seq[org.apache.spark.sql.Row]],
+         Map[String, Seq[org.apache.spark.sql.Row]]) = {
+    def runAll() = names.map(n => n -> q(n).collect().toSeq).toMap
+    val driver = runAll() // default: the spec fixture sits under the gate
+    spark.conf.set(graft.util.DriverTier.MaxBytesConf, "0")
+    try (driver, runAll())
+    finally spark.conf.unset(graft.util.DriverTier.MaxBytesConf)
+  }
+
+  test("LPA array tier ≡ shuffle tier, bit-identical (q326/q333/q335)") {
+    // the r17-item-4 lever: under the driver-tier gate the round resolves
+    // labels by broadcast primitive-array index instead of joining the
+    // label frame — a CONSTANT optimization, so every output frame must be
+    // bit-identical to the shuffle tier every past-gate graph runs.
+    val (arrayTier, shuffleTier) = bothTiers("q326_label_propagation",
+      "q333_lpa_modularity", "q335_projected_community_quality")
+    arrayTier.foreach { case (n, rows) =>
+      assert(rows === shuffleTier(n), s"$n diverged across LPA tiers")
+    }
   }
 
   test("q130/q176/q310 array tier ≡ BSP shuffle fallback, bit-identical") {
     // r19 optimization: PageRank, BFS and k-core peeling adopted the q326
     // zero-exchange round (per-round O(V) vector as a broadcast primitive
     // array over destination-partitioned cached edges). The tier is a
-    // CONSTANT optimization — forcing the gate off (denseIdBound=0) must
-    // reproduce every row of all three queries exactly.
-    def runBoth() = Seq("q130_pagerank", "q176_bfs_distances",
-      "q310_kcore_peeling")
-      .map(n => n -> q(n).collect().toSeq).toMap
-    val arrayTier = runBoth() // default: dense ids at spec sf → array mode
-    spark.conf.set("graft.lpa.denseIdBound", "0")
-    try {
-      val fallback = runBoth()
-      arrayTier.foreach { case (n, rows) =>
-        assert(rows === fallback(n), s"$n diverged across tiers")
-      }
-    } finally spark.conf.unset("graft.lpa.denseIdBound")
+    // CONSTANT optimization — forcing the gate off must reproduce every
+    // row of all three queries exactly.
+    val (arrayTier, fallback) = bothTiers("q130_pagerank",
+      "q176_bfs_distances", "q310_kcore_peeling")
+    arrayTier.foreach { case (n, rows) =>
+      assert(rows === fallback(n), s"$n diverged across tiers")
+    }
   }
-
-  // ---- components driver tier ----------------------------------------------
 
   test("components driver tier ≡ distributed loops (q83/q131/q149/q339)") {
     // r20: under the edge-count + 31-bit-id gate, star contraction and
     // min-label propagation run their rounds on the driver over the
     // collected edge array — a CONSTANT optimization, so every consumer's
-    // output must be bit-identical with the gate forced off
-    // (driverEdgeBound=0 → the distributed loops).
-    def runAll() = Seq("q83_dedup_components", "q131_canonical_selection",
-      "q149_leakage_free_split", "q339_star_contraction_components")
-      .map(n => n -> q(n).collect().toSeq).toMap
-    val driverTier = runAll() // default: fixture edges sit under the gate
-    spark.conf.set("graft.components.driverEdgeBound", "0")
-    try {
-      val distributed = runAll()
-      driverTier.foreach { case (n, rows) =>
-        assert(rows === distributed(n), s"$n diverged across components tiers")
-      }
-    } finally spark.conf.unset("graft.components.driverEdgeBound")
+    // output must be bit-identical with the gate forced off.
+    val (driverTier, distributed) = bothTiers("q83_dedup_components",
+      "q131_canonical_selection", "q149_leakage_free_split",
+      "q339_star_contraction_components")
+    driverTier.foreach { case (n, rows) =>
+      assert(rows === distributed(n), s"$n diverged across components tiers")
+    }
   }
 
   // ---- q125 ---------------------------------------------------------------
