@@ -1,7 +1,9 @@
 package graft.etl
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.QuotingUtils.quoteIdentifier
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.MetadataBuilder
 
 /** The reference's dynamic label→column resolution (SURVEY.md §1.3):
@@ -34,9 +36,21 @@ object SchemaResolver {
     df.withColumn(column, df.col(column).as(column, meta))
   }
 
-  /** Attach many labels at once: column -> label. */
-  def withLabels(df: DataFrame, labels: Seq[(String, String)]): DataFrame =
-    labels.foldLeft(df) { case (acc, (c, l)) => withLabel(acc, c, l) }
+  /** Attach many labels at once: column -> label. One projection in the
+    * frame's column order; a column labelled twice keeps its last label,
+    * as successive [[withLabel]] calls would leave it. */
+  def withLabels(df: DataFrame, labels: Seq[(String, String)]): DataFrame = {
+    // a name that is no column fails the lookup, as in withLabel
+    labels.foreach { case (c, _) => df.col(quoteIdentifier(c)) }
+    val resolver = SQLConf.get.resolver
+    df.select(df.columns.toSeq.map { name =>
+      labels.reverseIterator.find { case (c, _) => resolver(name, c) } match {
+        case Some((c, l)) =>
+          df.col(quoteIdentifier(name)).as(c, new MetadataBuilder().putString(LabelKey, l).build())
+        case None => df.col(quoteIdentifier(name))
+      }
+    }: _*)
+  }
 
   /** Resolve labels to physical column names against the frame's metadata
     * catalog. First match wins on duplicates; throws on a missing label. */

@@ -168,7 +168,8 @@ object GraphOps {
       // one plan-time sizing head(): node count + max id, the driver-tier
       // gate's inputs
       val (nNodes, maxId, arrayTier) =
-        graft.util.DriverTier.sizeDenseGraph(degF, "u")
+        graft.util.DriverTier.sizeDenseGraph(degF, "u",
+          graft.util.DriverTier.PageRankSlotBytes)
       if (arrayTier) {
         // ZERO-EXCHANGE round (the q326 array tier generalized from labels
         // to rank mass): the O(V) per-node contribution vector rides a
@@ -270,7 +271,8 @@ object GraphOps {
       // aggregates before (r20)
       val degF = edges.groupBy(col("u")).agg(count(lit(1)).as("deg")).persist()
       val (_, maxId, arrayTier) =
-        graft.util.DriverTier.sizeDenseGraph(degF, "u")
+        graft.util.DriverTier.sizeDenseGraph(degF, "u",
+          graft.util.DriverTier.BfsSlotBytes)
       if (arrayTier) {
         // dist'(v) = min(dist(v), 1 + min over in-neighbors u of dist(u)) —
         // identical to the fallback's union+min-agg round because the
@@ -514,7 +516,8 @@ object GraphOps {
       // separate O(E) cache aggregates before (r20)
       val degF = edges.groupBy(col("u")).agg(count(lit(1)).as("deg")).persist()
       val (nNodes, maxId, arrayTier) =
-        graft.util.DriverTier.sizeDenseGraph(degF, "u")
+        graft.util.DriverTier.sizeDenseGraph(degF, "u",
+          graft.util.DriverTier.KCoreSlotBytes)
       if (arrayTier) {
         import s.implicits._
         val deg0 = new Array[Long](maxId.toInt + 1)
@@ -670,7 +673,7 @@ object GraphOps {
 
     GraftQuery(
       "q326_label_propagation",
-      s"Label-propagation community detection ($LpaRounds fixed synchronous BSP rounds) over the part↔supplier co-occurrence graph — the near-linear community finder (Raghavan et al.) pipelines run where modularity solvers don't scale: every node starts as its own label and each round adopts the MOST FREQUENT label among its neighbors, ties broken by smallest label — the (count DESC, label ASC) order is total, so the update is bit-identical across engines and partitionings (async/random-order LPA is not reproducible; the synchronous total-order form is; the oracle states it as a row_number over each node's neighbor-label census). Per round the engine pays ZERO exchanges under the driver-tier gate (graft.util.DriverTier — at the default budget ≤4M nodes with ids < 8M): the O(V) assignment BROADCASTS as a primitive array indexed by node id, and groupBy(node) over edges persisted hash-partitioned on the adopting node resolves each neighbor's label by array index into the native LabelModeAgg (exact degree-bounded label→count map, map-side-merged; q212's bounded-aggregate doctrine — the census+argmax two-shuffle forms this replaces are pinned bit-identical in KernelSpec) partial+final in the SAME stage — nothing O(E) crosses the wire after the one-time repartition; past the gate it degrades to the one-exchange-per-round shuffle form (v-partitioned edges, label frame moves, census exchange on node). localCheckpoint truncates each round's O(V) lineage, short-circuit once the full-assignment xor fingerprint repeats (a true fixpoint: the update is a deterministic function of the assignment). The per-round census (distinct labels, assignment checksum, largest community) makes a single wrongly-adopted label fail the gate — and on this BIPARTITE graph it records synchronous LPA's known two-coloring oscillation, which the q333 modularity eval quantifies at Q = −0.5 (see there; the pair demonstrates detection, and that production projects to one mode first).",
+      s"Label-propagation community detection ($LpaRounds fixed synchronous BSP rounds) over the part↔supplier co-occurrence graph — the near-linear community finder (Raghavan et al.) pipelines run where modularity solvers don't scale: every node starts as its own label and each round adopts the MOST FREQUENT label among its neighbors, ties broken by smallest label — the (count DESC, label ASC) order is total, so the update is bit-identical across engines and partitionings (async/random-order LPA is not reproducible; the synchronous total-order form is; the oracle states it as a row_number over each node's neighbor-label census). Per round the engine pays ZERO exchanges under the driver-tier gate (graft.util.DriverTier — at the default budget, node ids < 2.67M): the O(V) assignment BROADCASTS as a primitive array indexed by node id, and groupBy(node) over edges persisted hash-partitioned on the adopting node resolves each neighbor's label by array index into the native LabelModeAgg (exact degree-bounded label→count map, map-side-merged; q212's bounded-aggregate doctrine — the census+argmax two-shuffle forms this replaces are pinned bit-identical in KernelSpec) partial+final in the SAME stage — nothing O(E) crosses the wire after the one-time repartition; past the gate it degrades to the one-exchange-per-round shuffle form (v-partitioned edges, label frame moves, census exchange on node). localCheckpoint truncates each round's O(V) lineage, short-circuit once the full-assignment xor fingerprint repeats (a true fixpoint: the update is a deterministic function of the assignment). The per-round census (distinct labels, assignment checksum, largest community) makes a single wrongly-adopted label fail the gate — and on this BIPARTITE graph it records synchronous LPA's known two-coloring oscillation, which the q333 modularity eval quantifies at Q = −0.5 (see there; the pair demonstrates detection, and that production projects to one mode first).",
       lpaSql) { (s, d) =>
       val ps = Tables.lineitem(s, d)
         .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
@@ -1037,7 +1040,8 @@ object GraphOps {
     }
     /** Whether the rounds run on the array tier (see the class doc). */
     val arrayTier: Boolean = graft.util.DriverTier.denseGraph(
-      graft.util.DriverTier.budget(session), nodeCount, maxNodeId)
+      graft.util.DriverTier.budget(session), nodeCount, maxNodeId,
+      graft.util.DriverTier.LpaSlotBytes)
 
     /** The assignment as a node-id-indexed long array (unassigned slots
       * -1; never probed — see [[org.apache.spark.sql.graft.LabelArrayLookup]]'s

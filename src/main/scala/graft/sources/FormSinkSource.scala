@@ -38,6 +38,25 @@ import org.apache.spark.unsafe.types.UTF8String
   *     via an atomic hard-link that fails if version N+1 already exists
   *     (POSIX rename would silently replace), and the loser re-reads and
   *     retries on top of the winner's manifest;
+  *   - **a manifest log with checkpoints**, after Delta Lake's (Armbrust et
+  *     al., VLDB 2020): a commit writes what it adds, not the whole listing.
+  *     `manifest-v<N>.json` is one of two shapes. An append (version N−1's
+  *     entries unchanged and in order, new entries after them) is a DELTA
+  *     record: `{"add": [names], "epochs": {...}, "stats": {added names}}`,
+  *     about 0.4 KB per tick file. Any other commit (truncate, delete,
+  *     REPLACE WHERE, merge, compaction, clustered rewrites) is a FULL
+  *     listing, `{"files": [names], "epochs", "stats"}`, which is also the
+  *     only shape older tables hold. After a delta at a version that is a
+  *     multiple of [[FormSinkSource.CheckpointInterval]] (10) the commit
+  *     writes `checkpoint-v<N>.json`, the full listing of N, create-once
+  *     like a record. A read lists `_manifests` once, walks down from the
+  *     version it wants to the newest checkpoint or full record at or below
+  *     it (version 0 is the empty table), and replays the deltas above that
+  *     in order: one full listing plus at most nine deltas. A lost or torn
+  *     checkpoint costs replay only; a torn record fails the read naming
+  *     the file. `vacuum` first checkpoints the newest version if it
+  *     replays from older files, then reclaims every older record and
+  *     checkpoint past its age guard;
   *   - **append and truncate** (`SaveMode.Append` / `Overwrite`), matching
   *     the two ways a scheduled ETL runs (incremental tick / full reload);
   *   - **time travel**: `.option("versionAsOf", n)` reads the table as of
@@ -104,12 +123,22 @@ object FormSinkSource {
     Paths.get(path, "_manifests")
 
   private val ManifestName = """manifest-v(\d{10})\.json""".r
+  private val CheckpointName = """checkpoint-v(\d{10})\.json""".r
+  /** A log file's temporary twin: linked into place, or left by a crash. */
+  private val TempName = """(?:manifest|checkpoint)-tmp-.*\.tmp""".r
   /** A Hadoop checksum sidecar `.<data file>.crc`. */
   private val Sidecar = """\.(.+)\.crc""".r
   private def manifestFile(path: String, version: Long): Path =
     manifestDir(path).resolve(f"manifest-v$version%010d.json")
+  private def checkpointFile(path: String, version: Long): Path =
+    manifestDir(path).resolve(f"checkpoint-v$version%010d.json")
 
-  /** One parsed manifest version: the file names it makes visible (in
+  /** Versions between full checkpoints of the log: Delta Lake's interval. */
+  val CheckpointInterval = 10L
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** One snapshot of the table: the file names it makes visible (in
     * listing order), their stats, and the streaming-epoch watermarks it
     * carries. Version 0 with no files when the table has never committed.
     *
@@ -125,16 +154,33 @@ object FormSinkSource {
     def entries: Seq[(String, Option[FileStats])] = files.map(f => f -> stats.get(f))
   }
 
-  /** The newest manifest, listed and parsed once. */
-  private[sources] def latestManifest(path: String): Manifest =
-    graft.util.Scratch.listEntries(manifestDir(path))
-      .flatMap(p => p.getFileName.toString match {
-        case ManifestName(v) => Some(v.toLong -> p)
-        case _               => None // tmp files mid-publish
-      }).maxByOption(_._1) match {
-      case None         => Manifest(0L, Seq.empty, Map.empty, Map.empty)
-      case Some((v, p)) => readManifest(v, p)
-    }
+  /** The `_manifests` directory, listed once: version -> record, and
+    * version -> checkpoint. A temp file mid-publish is neither. */
+  private[sources] final case class Log(records: Map[Long, Path],
+                                        checkpoints: Map[Long, Path]) {
+    /** The newest committed version; 0 when the table never committed. */
+    def latest: Long =
+      (records.keysIterator ++ checkpoints.keysIterator).maxOption.getOrElse(0L)
+  }
+
+  private[sources] def listLog(path: String): Log = {
+    val entries = graft.util.Scratch.listEntries(manifestDir(path))
+    def versions(name: scala.util.matching.Regex): Map[Long, Path] =
+      entries.flatMap(p => p.getFileName.toString match {
+        case name(v) => Some(v.toLong -> p)
+        case _       => None
+      }).toMap
+    Log(versions(ManifestName), versions(CheckpointName))
+  }
+
+  /** The newest version, from the listing alone (no log file opened). */
+  private[sources] def latestVersion(path: String): Long = listLog(path).latest
+
+  /** The newest snapshot, replayed from one listing of the log. */
+  private[sources] def latestManifest(path: String): Manifest = {
+    val log = listLog(path)
+    replay(path, log, log.latest)._1
+  }
 
   /** Per-data-file column statistics, written into the manifest at commit
     * time. Scan planning answers pushed MAX/MIN/COUNT(*) from them and
@@ -149,14 +195,31 @@ object FormSinkSource {
                                         mins: Map[String, String],
                                         maxs: Map[String, String])
 
-  private def readManifest(version: Long, p: Path): Manifest = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(Files.readAllBytes(p))
-    val files = root.get("files")
-    val names = (0 until files.size()).map(files.get(_).asText())
+  /** One parsed log file: a full listing (`full`; a checkpoint, or the
+    * record of a commit that was not an append) or a delta record naming
+    * the files appended to the previous version. `stats` covers `names`;
+    * `epochs` is the epoch record as of the file's version either way. */
+  private final case class LogFile(full: Boolean, names: Seq[String],
+                                   stats: Map[String, FileStats],
+                                   epochs: Map[String, Long])
+
+  /** Parse one log file. A torn or foreign file fails naming it: a reader
+    * must never take a cut listing for a shorter one. */
+  private def readLogFile(p: Path): LogFile = {
+    def bad(why: String, cause: Throwable = null) =
+      new IllegalStateException(s"form sink: unreadable manifest log file $p: $why", cause)
+    val root = try mapper.readTree(Files.readAllBytes(p)) catch {
+      case e: java.io.IOException => throw bad(e.getMessage, e)
+    }
+    def field(key: String) = Option(root).flatMap(r => Option(r.get(key)))
+    val (full, list) = field("files").map(true -> _)
+      .orElse(field("add").map(false -> _))
+      .filter(_._2.isArray)
+      .getOrElse(throw bad("neither a listing (\"files\") nor a delta (\"add\")"))
+    val names = (0 until list.size()).map(list.get(_).asText())
     // "stats" is optional (manifests written before stats existed): a file
     // without stats is never skipped, only read
-    val stats = Option(root.get("stats")).map { s =>
+    val stats = field("stats").map { s =>
       names.flatMap { n =>
         Option(s.get(n)).map { fs =>
           def m(key: String): Map[String, String] = Option(fs.get(key)).map { o =>
@@ -167,22 +230,48 @@ object FormSinkSource {
         }
       }.toMap
     }.getOrElse(Map.empty)
-    val epochs = Option(root.get("epochs")).map { e =>
+    val epochs = field("epochs").map { e =>
       e.properties().iterator().asScala
         .map(en => en.getKey -> en.getValue.asLong()).toMap
     }.getOrElse(Map.empty[String, Long])
-    Manifest(version, names, stats, epochs)
+    LogFile(full, names, stats, epochs)
+  }
+
+  /** Snapshot `version`: walk down from it to the newest checkpoint or
+    * full record at or below it (version 0 is the empty snapshot), then
+    * replay the delta records above that start in version order. Returns
+    * the snapshot and the start's version; a latest read thus opens one
+    * full listing and at most [[CheckpointInterval]] − 1 deltas. Fatal when
+    * `version` or a record it replays is missing (vacuumed, or never
+    * committed) or unreadable. */
+  private[sources] def replay(path: String, log: Log, version: Long): (Manifest, Long) = {
+    require(version >= 0L, s"form sink: no manifest for version=$version at $path")
+    var deltas = List.empty[LogFile] // ascending: the walk prepends
+    var start = Option.empty[LogFile]
+    var v = version
+    while (start.isEmpty && v > 0L) {
+      val file = log.checkpoints.get(v).orElse(log.records.get(v)).getOrElse(
+        throw new IllegalArgumentException(
+          if (v == version)
+            s"form sink: no manifest for version=$version at $path (vacuumed or never committed)"
+          else s"form sink: version=$version replays the record of version $v, " +
+            s"which is missing at $path (vacuumed)"))
+      val f = readLogFile(file)
+      if (f.full) start = Some(f) else { deltas ::= f; v -= 1 }
+    }
+    val files = Vector.newBuilder[String]
+    start.foreach(files ++= _.names)
+    deltas.foreach(files ++= _.names)
+    val stats = deltas.foldLeft(start.fold(Map.empty[String, FileStats])(_.stats))(_ ++ _.stats)
+    val epochs = deltas.lastOption.orElse(start).fold(Map.empty[String, Long])(_.epochs)
+    (Manifest(version, files.result(), stats, epochs), v)
   }
 
   /** Manifest listing + stats as of `version` (empty at 0, fatal if
-    * vacuumed). Time travel keeps file skipping: the pinned manifest
+    * vacuumed). Time travel keeps file skipping: the pinned snapshot
     * carries the stats of its own era. */
   private[sources] def manifestAt(path: String, version: Long): (Seq[String], Map[String, FileStats]) = {
-    if (version == 0L) return (Seq.empty, Map.empty)
-    val p = manifestFile(path, version)
-    require(Files.exists(p),
-      s"form sink: no manifest for version=$version at $path (vacuumed or never committed)")
-    val m = readManifest(version, p)
+    val m = replay(path, listLog(path), version)._1
     (m.files, m.stats)
   }
 
@@ -196,8 +285,9 @@ object FormSinkSource {
   private[sources] def addedFilesBetween(path: String, from: Long, to: Long): (Seq[String], Map[String, FileStats]) = {
     require(from <= to,
       s"form sink change feed: changesFromVersion=$from > changesToVersion=$to")
-    val (before, _) = manifestAt(path, from)
-    val (after, stats) = manifestAt(path, to)
+    val log = listLog(path)
+    val before = replay(path, log, from)._1.files
+    val Manifest(_, after, stats, _) = replay(path, log, to)._1
     val afterSet = after.toSet
     require(before.forall(afterSet.contains),
       s"form sink change feed: versions ($from, $to] include a non-append commit " +
@@ -220,22 +310,19 @@ object FormSinkSource {
   private[sources] case class Successor(entries: Seq[(String, Option[FileStats])],
                                         epochs: Map[String, Long])
 
-  /** Publish `next` as manifest version `version` — atomically, and only
-    * if that version does not exist yet. Returns false when another commit
-    * won the version. [[commit]] is the only caller. */
-  private def tryPublishManifest(path: String, version: Long, next: Successor): Boolean = {
-    val d = manifestDir(path)
-    Files.createDirectories(d)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  /** A log file's JSON: `entries` under `key` ("files" for a full listing,
+    * "add" for a delta record), the epoch record, and the entries' stats. */
+  private def logJson(key: String, entries: Seq[(String, Option[FileStats])],
+                      epochs: Map[String, Long]): Array[Byte] = {
     val node = mapper.createObjectNode()
-    val arr = node.putArray("files")
-    next.entries.foreach(e => arr.add(e._1))
-    if (next.epochs.nonEmpty) {
+    val arr = node.putArray(key)
+    entries.foreach(e => arr.add(e._1))
+    if (epochs.nonEmpty) {
       val e = node.putObject("epochs")
-      next.epochs.foreach { case (q, ep) => e.put(q, ep) }
+      epochs.foreach { case (q, ep) => e.put(q, ep) }
     }
     val statsNode = node.putObject("stats")
-    next.entries.foreach {
+    entries.foreach {
       case (n, Some(fs)) =>
         val f = statsNode.putObject(n)
         f.put("rows", fs.rows)
@@ -243,16 +330,47 @@ object FormSinkSource {
         val maxs = f.putObject("maxs"); fs.maxs.foreach { case (c, v) => maxs.put(c, v) }
       case _ => ()
     }
-    val tmp = Files.createTempFile(d, "manifest-tmp-", ".tmp")
+    mapper.writeValueAsBytes(node)
+  }
+
+  /** Create `target` holding `bytes`, once: written to a temp file, then
+    * hard-linked. createLink is atomic and FAILS if the target exists — the
+    * collision detection ATOMIC_MOVE cannot give (POSIX rename replaces
+    * silently). False when `target` already exists. */
+  private def createOnce(target: Path, bytes: Array[Byte]): Boolean = {
+    val d = target.getParent
+    Files.createDirectories(d)
+    val kind = target.getFileName.toString.takeWhile(_ != '-')
+    val tmp = Files.createTempFile(d, s"$kind-tmp-", ".tmp")
     try {
-      Files.write(tmp, mapper.writeValueAsBytes(node))
-      // createLink is atomic and FAILS if the target exists — the collision
-      // detection ATOMIC_MOVE cannot give (POSIX rename replaces silently)
-      Files.createLink(manifestFile(path, version), tmp)
+      Files.write(tmp, bytes)
+      Files.createLink(target, tmp)
       true
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => false
     } finally Files.deleteIfExists(tmp)
+  }
+
+  /** Publish `next` as version `base.version + 1` — atomically, and only if
+    * that version does not exist yet. Returns false when another commit
+    * won the version. [[commit]] is the only caller.
+    *
+    * An append (the base's entries unchanged and in order, new entries
+    * after them) publishes a delta record of the added entries; any other
+    * successor publishes the full listing. After a delta at a multiple of
+    * [[CheckpointInterval]] comes a checkpoint, the full listing of that
+    * version; losing it to a crash costs readers replay, never rows. */
+  private def tryPublishManifest(path: String, base: Manifest, next: Successor): Boolean = {
+    val version = base.version + 1
+    val appended = next.entries.startsWith(base.entries)
+    val published = createOnce(manifestFile(path, version),
+      if (appended) logJson("add", next.entries.drop(base.files.size), next.epochs)
+      else logJson("files", next.entries, next.epochs))
+    if (published && appended && version % CheckpointInterval == 0L)
+      try createOnce(checkpointFile(path, version),
+        logJson("files", next.entries, next.epochs))
+      catch { case _: java.io.IOException => () }
+    published
   }
 
   /** One optimistic attempt to commit on top of `base`, the newest
@@ -298,7 +416,7 @@ object FormSinkSource {
     val next = try attempt(a) catch { case e: Throwable => a.discard(); throw e }
     val version = a.base.version + 1
     next match {
-      case Some(s) if tryPublishManifest(path, version, s) => Some(version)
+      case Some(s) if tryPublishManifest(path, a.base, s) => Some(version)
       case Some(_) => a.discard(); None
       case None    => a.discard(); Some(a.base.version)
     }
@@ -415,7 +533,7 @@ object FormSinkSource {
       .drop("__cluster_key")
       .write.format(Format).mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("path", path).save()
-    latestManifest(path).version
+    latestVersion(path)
   }
 
   /** INCREMENTAL OPTIMIZE-CLUSTER — the write-time-clustering story's
@@ -875,10 +993,14 @@ object FormSinkSource {
   }
 
   /** Garbage-collect the table: delete data files not referenced by the
-    * NEWEST manifest (crashed-commit orphans, truncate leftovers), all
-    * superseded manifests, and Hadoop `.<name>.crc` sidecars (written
-    * beside rewrite files before the sink used parquet's local-file API)
-    * whose data file is gone or goes now. Only files older than `minAgeMs`
+    * NEWEST snapshot (crashed-commit orphans, truncate leftovers), the
+    * manifest log below it, abandoned log temp files, and Hadoop
+    * `.<name>.crc` sidecars (written beside rewrite files before the sink
+    * used parquet's local-file API) whose data file is gone or goes now.
+    * First, if the newest version replays from older files, a checkpoint of
+    * it is written, so the records and checkpoints of every older version
+    * can go: time travel reaches back to the newest version vacuumed at.
+    * Only files older than `minAgeMs`
     * are touched — a concurrent commit's phase-1 files are mid-publish, not
     * garbage, and the age guard is what keeps vacuum safe to run alongside
     * writers. The default is deliberately conservative (comfortably above
@@ -887,7 +1009,12 @@ object FormSinkSource {
     * concurrent commit's phase-1 files and lose that commit's rows.
     * Returns deleted paths. */
   def vacuum(path: String, minAgeMs: Long = 10 * 60 * 1000L): Seq[Path] = {
-    val Manifest(version, referenced, _, _) = latestManifest(path)
+    val log = listLog(path)
+    val (latest, from) = replay(path, log, log.latest)
+    val version = latest.version
+    if (from < version)
+      createOnce(checkpointFile(path, version), logJson("files", latest.entries, latest.epochs))
+    val referenced = latest.files.toSet
     val cutoff = System.currentTimeMillis() - minAgeMs
     def oldEnough(p: Path): Boolean =
       Files.getLastModifiedTime(p).toMillis <= cutoff
@@ -902,14 +1029,16 @@ object FormSinkSource {
         (gone(data) || !Files.exists(dataDir(path).resolve(data))) && oldEnough(p)
       case _ => false
     })
-    val staleManifests =
+    val staleLog =
       graft.util.Scratch.listEntries(manifestDir(path)).filter { p =>
         p.getFileName.toString match {
-          case ManifestName(v) => v.toLong < version && oldEnough(p)
-          case _               => oldEnough(p) // abandoned tmp files
+          case ManifestName(v)   => v.toLong < version && oldEnough(p)
+          case CheckpointName(v) => v.toLong < version && oldEnough(p)
+          case TempName()        => oldEnough(p)
+          case _                 => false
         }
       }
-    val victims = orphans ++ sidecars ++ staleManifests
+    val victims = orphans ++ sidecars ++ staleLog
     victims.foreach(Files.deleteIfExists(_))
     victims
   }
@@ -947,7 +1076,7 @@ private class FormSinkTable(path: String) extends Table
       Option(options.get("changesFromVersion")).map { from =>
         (from.toLong,
           Option(options.get("changesToVersion")).map(_.toLong)
-            .getOrElse(FormSinkSource.latestManifest(path).version))
+            .getOrElse(FormSinkSource.latestVersion(path)))
       })
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -1413,10 +1542,10 @@ private class FormSinkMicroBatchStream(path: String, required: StructType)
   // prepared, so a commit landing mid-run is left for the next run
   @volatile private var pinned: Option[Long] = None
   override def prepareForTriggerAvailableNow(): Unit =
-    pinned = Some(FormSinkSource.latestManifest(path).version)
+    pinned = Some(FormSinkSource.latestVersion(path))
   override def initialOffset(): Offset = SinkVersionOffset(0L)
   override def latestOffset(): Offset =
-    SinkVersionOffset(FormSinkSource.latestManifest(path).version)
+    SinkVersionOffset(FormSinkSource.latestVersion(path))
   override def latestOffset(start: Offset, limit: ReadLimit): Offset =
     pinned.fold(latestOffset())(SinkVersionOffset(_))
   override def deserializeOffset(json: String): Offset =

@@ -9,22 +9,34 @@ import org.apache.spark.sql.functions.{coalesce, col, count, lit, max}
   * there; past the gate the same rounds run as distributed Spark jobs. Each
   * family charges its driver footprint against ONE byte budget:
   *   - dense-id graph arrays (q130, q176, q310, LPA): [[NodeBytes]] per node
-  *     AND [[SlotBytes]] per id slot `0..maxId`, each within the budget;
+  *     AND, per id slot `0..maxId`, [[SlotBytes]] for each slot-sized long
+  *     array the family keeps live at once, each within the budget;
   *   - component edge arrays (q83, q131, q149, q339): [[EdgeBytes]] per edge,
   *     ids inside the 31-bit `(a << 32) | b` encode domain.
   * The default budget, 64,000,000 bytes, admits ≤ 4M nodes with max id
-  * < 8M, and ≤ 2M edges. `graft.driverTier.maxBytes` may lower the budget
-  * (`0` forces every distributed tier) but never raise it past
-  * [[ceiling]], an eighth of the driver's max heap, so no setting can
-  * collect a graph the driver cannot hold. */
+  * < 1.6M (q130), < 2M (q176, q310) or < 2.67M (LPA), and ≤ 2M edges.
+  * `graft.driverTier.maxBytes` may lower the budget (`0` forces every
+  * distributed tier) but never raise it past [[ceiling]], an eighth of
+  * the driver's max heap, so no setting can collect a graph the driver
+  * cannot hold. */
 object DriverTier {
   val MaxBytesConf = "graft.driverTier.maxBytes"
   val DefaultMaxBytes: Long = 64000000L
 
   /** One (node, value) long pair per node. */
   val NodeBytes: Long = 16L
-  /** One long per dense-id slot. */
+  /** One long per dense-id slot: one array's charge. */
   val SlotBytes: Long = 8L
+  /** q130's live arrays: `deg`, `rank`, `contrib`, `next`, and the
+    * broadcast's serialized copy of `contrib`. */
+  val PageRankSlotBytes: Long = 5 * SlotBytes
+  /** q176's `deg`, `dist`, `next` and the broadcast copy of `dist`. */
+  val BfsSlotBytes: Long = 4 * SlotBytes
+  /** q310's `deg0`, `surv`, `degI` and then the next `surv` beside the old
+    * one (the broadcast copy is destroyed before it). */
+  val KCoreSlotBytes: Long = 4 * SlotBytes
+  /** LPA's assignment in, the broadcast copy, and the assignment out. */
+  val LpaSlotBytes: Long = 3 * SlotBytes
   /** An encoded 8-byte edge plus the rounds' sorted copies and label-map
     * entries; 32 B keeps the components tier's 2M-edge default. */
   val EdgeBytes: Long = 32L
@@ -42,11 +54,12 @@ object DriverTier {
   private def fits(budget: Long, n: Long, charge: Long): Boolean =
     budget > 0L && n <= budget / charge
 
-  /** A non-empty graph of `nodes` nodes with ids in `[0, maxId]` fits the
-    * dense-array driver tier. */
-  def denseGraph(budget: Long, nodes: Long, maxId: Long): Boolean =
+  /** A non-empty graph of `nodes` nodes with ids in `[0, maxId]` fits a
+    * dense-array driver tier charging `slotBytes` per id slot. */
+  def denseGraph(budget: Long, nodes: Long, maxId: Long,
+                 slotBytes: Long = SlotBytes): Boolean =
     nodes > 0L && maxId >= 0L && fits(budget, nodes, NodeBytes) &&
-      maxId < budget / SlotBytes
+      maxId < budget / slotBytes
 
   /** An edge list of `edges` edges with ids in `[minId, maxId]` fits the
     * components driver tier. */
@@ -54,10 +67,12 @@ object DriverTier {
     minId >= 0L && maxId < (1L << 31) && fits(budget, edges, EdgeBytes)
 
   /** The q130/q176/q310 sizing job over a node-keyed frame: one aggregate
-    * yields `(nodes, maxId)` and whether [[denseGraph]] takes them. */
-  def sizeDenseGraph(nodes: DataFrame, id: String): (Long, Long, Boolean) = {
+    * yields `(nodes, maxId)` and whether [[denseGraph]] takes them at
+    * `slotBytes`. */
+  def sizeDenseGraph(nodes: DataFrame, id: String,
+                     slotBytes: Long): (Long, Long, Boolean) = {
     val r = nodes.agg(count(lit(1)), coalesce(max(col(id)), lit(-1L))).head()
     val (n, maxId) = (r.getLong(0), r.getLong(1))
-    (n, maxId, denseGraph(budget(nodes.sparkSession), n, maxId))
+    (n, maxId, denseGraph(budget(nodes.sparkSession), n, maxId, slotBytes))
   }
 }

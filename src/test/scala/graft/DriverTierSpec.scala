@@ -65,4 +65,20 @@ class DriverTierSpec extends SparkSpec {
       assert(DriverTier.budget(spark) === DriverTier.ceiling)
     } finally spark.conf.unset(DriverTier.MaxBytesConf)
   }
+
+  test("default budget charges each dense-id family for the arrays it keeps live") {
+    // (family charge, first max id past the gate): 64M over 40, 32 and 24 B
+    Seq(DriverTier.PageRankSlotBytes -> 1600000L, DriverTier.BfsSlotBytes -> 2000000L,
+      DriverTier.KCoreSlotBytes -> 2000000L, DriverTier.LpaSlotBytes -> 2666666L)
+      .foreach { case (charge, past) =>
+        assert(DriverTier.denseGraph(default, 1L, past - 1, charge), charge)
+        assert(!DriverTier.denseGraph(default, 1L, past, charge), charge)
+        // the node charge is the same for every family
+        assert(DriverTier.denseGraph(default, 4000000L, past - 1, charge), charge)
+        assert(!DriverTier.denseGraph(default, 4000001L, past - 1, charge), charge)
+        assert(!DriverTier.denseGraph(0L, 1L, 0L, charge), charge)
+      }
+    assert(DriverTier.PageRankSlotBytes === 40L && DriverTier.BfsSlotBytes === 32L &&
+      DriverTier.KCoreSlotBytes === 32L && DriverTier.LpaSlotBytes === 24L)
+  }
 }

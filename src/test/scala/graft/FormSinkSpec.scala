@@ -167,25 +167,29 @@ class FormSinkSpec extends SparkSpec {
       === feed(1, 50).count())
   }
 
-  /** Two disjoint clustered commits, then one file's stats STRIPPED from
-    * the newest manifest in place (what a pre-stats-era manifest looks
-    * like — versioned JSON on disk, edited directly like the crash tests
-    * plant orphans directly). */
+  /** Two disjoint clustered commits, then one file's stats STRIPPED in
+    * place from every manifest log file that records them — the delta
+    * record that added the file (what a pre-stats-era manifest looks like —
+    * versioned JSON on disk, edited directly like the crash tests plant
+    * orphans directly). */
   private def clusteredAppend2(dir: String): Unit = {
     def app(lo: Int, hi: Int): Unit =
       feed(lo, hi).repartition(1).write.format(FormSinkSource.Format)
         .mode(SaveMode.Append).option("path", dir).save()
     app(1, 100); app(101, 200)
-    val (v, names) = FormSinkSource.snapshotInfo(dir)
-    val mf = java.nio.file.Paths.get(dir, "_manifests",
-      f"manifest-v$v%010d.json")
+    val (_, names) = FormSinkSource.snapshotInfo(dir)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(Files.readAllBytes(mf))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    root.get("stats")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      .remove(names.head)
-    Files.write(mf, mapper.writeValueAsBytes(root))
+    graft.util.Scratch.listEntries(java.nio.file.Paths.get(dir, "_manifests"))
+      .foreach { mf =>
+        val root = mapper.readTree(Files.readAllBytes(mf))
+          .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        val stats = root.get("stats")
+          .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        if (stats.has(names.head)) {
+          stats.remove(names.head)
+          Files.write(mf, mapper.writeValueAsBytes(root))
+        }
+      }
   }
 
   test("second append is additive; overwrite truncates first") {

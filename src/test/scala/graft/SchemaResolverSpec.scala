@@ -47,4 +47,27 @@ class SchemaResolverSpec extends SparkSpec {
       Seq(Tuple1(Option.empty[String])).toDF("c"), "c", "L")
     assert(SchemaResolver.select(df, Seq("L")).collect()(0).isNullAt(0))
   }
+
+  test("withLabels is one projection: the fold's schema, last label wins") {
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val raw = Seq(("v1", "d1", "p1", "x")).toDF("vendor_col", "desc_col", "po_col", "other")
+    val labels = Seq("po_col" -> "PO", "vendor_col" -> "Vendor",
+      "desc_col" -> "Description", "po_col" -> "Purchase order")
+    val folded = labels.foldLeft(raw) { case (acc, (c, l)) =>
+      SchemaResolver.withLabel(acc, c, l)
+    }
+    val once = SchemaResolver.withLabels(raw, labels)
+    // names, order and metadata, field by field
+    assert(once.schema === folded.schema)
+    assert(once.schema.map(_.name) === Seq("vendor_col", "desc_col", "po_col", "other"))
+    assert(once.schema("po_col").metadata.getString(SchemaResolver.LabelKey) ===
+      "Purchase order")
+    assert(!once.schema("other").metadata.contains(SchemaResolver.LabelKey))
+    def projects(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collect { case p: Project => p }.size
+    assert(projects(once) === projects(raw) + 1)
+    assert(once.collect().toSeq === raw.collect().toSeq)
+    intercept[org.apache.spark.sql.AnalysisException](
+      SchemaResolver.withLabels(raw, Seq("nope" -> "Nope")))
+  }
 }
