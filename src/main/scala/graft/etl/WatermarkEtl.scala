@@ -2,7 +2,6 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import graft.Tables
 
 /** The reference's flagship pipeline re-expressed Spark-first (SURVEY.md §0):
@@ -97,9 +96,9 @@ object WatermarkEtl {
     * the exchange's sampling job and map stage. A larger delta keeps the
     * global `orderBy` and its range-partitioned files. */
   private def ascendingByPo(delta: DataFrame): DataFrame = {
-    val oneTask = delta.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
-    if (delta.queryExecution.optimizedPlan.stats.sizeInBytes <= oneTask)
+    val conf = delta.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+    if (graft.util.Sizing.oneTask(conf, delta.queryExecution.optimizedPlan.stats.sizeInBytes))
       delta.coalesce(1).sortWithinPartitions(col("po_number"))
     else delta.orderBy(col("po_number"))
   }

@@ -224,19 +224,9 @@ private class FormScanBuilder(rows: Long, partitions: Int)
     * (last-row read of the sink table, bin:53-69); here an ungrouped
     * MAX/MIN/COUNT(*) is evaluated inside the source over the post-filter
     * rows, and Spark plans NO aggregate exec at all (complete pushdown —
-    * the scan's single partition returns the one final row). */
-  private def translate(f: AggregateFunc): Option[PushedAgg] = f match {
-    case m: Max => fieldOf(m.column).map(PushedAgg("MAX", _))
-    case m: Min => fieldOf(m.column).map(PushedAgg("MIN", _))
-    case _: CountStar => Some(PushedAgg("COUNT_STAR", ""))
-    case _ => None
-  }
-  private def fieldOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] = e match {
-    case nr: NamedReference if nr.fieldNames.length == 1 =>
-      Some(nr.fieldNames.head)
-    case _ => None
-  }
-  /** `aggregateExpressions.nonEmpty` is load-bearing: when an outer
+    * the scan's single partition returns the one final row).
+    *
+    * `aggregateExpressions.nonEmpty` is load-bearing: when an outer
     * `count()` is planned on top of the already-pushed aggregate, column
     * pruning can offer the source an Aggregation with ZERO aggregate
     * expressions. Accepting it (`forall` on empty = true) leaves `aggs`
@@ -246,10 +236,10 @@ private class FormScanBuilder(rows: Long, partitions: Int)
     * refuse it and let Spark plan its own aggregate. */
   override def supportCompletePushDown(a: Aggregation): Boolean =
     a.groupByExpressions.isEmpty && a.aggregateExpressions.nonEmpty &&
-      a.aggregateExpressions.forall(translate(_).isDefined)
+      a.aggregateExpressions.forall(PushedAgg.translate(_).isDefined)
   override def pushAggregation(a: Aggregation): Boolean = {
     if (!supportCompletePushDown(a)) return false
-    aggs = a.aggregateExpressions.toSeq.map(translate(_).get)
+    aggs = a.aggregateExpressions.toSeq.map(PushedAgg.translate(_).get)
     true
   }
 
@@ -268,7 +258,7 @@ private class FormScanBuilder(rows: Long, partitions: Int)
     * `order_by=column` param — no expressions server-side). All columns are
     * non-nullable by the row model, so null ordering never matters. */
   override def pushTopN(orders: Array[sortexpr.SortOrder], l: Int): Boolean = {
-    val fields = orders.toSeq.map(o => fieldOf(o.expression()).map(
+    val fields = orders.toSeq.map(o => PushedAgg.fieldOf(o.expression()).map(
       f => (f, o.direction() == sortexpr.SortDirection.ASCENDING)))
     if (fields.isEmpty || fields.exists(_.isEmpty)) return false
     topN = fields.map(_.get)
@@ -286,6 +276,30 @@ private class FormScanBuilder(rows: Long, partitions: Int)
 /** One accepted source-side aggregate: MAX/MIN over a column, or COUNT(*). */
 private case class PushedAgg(fn: String, field: String) {
   override def toString: String = if (fn == "COUNT_STAR") "COUNT(*)" else s"$fn($field)"
+}
+
+/** The translation both connectors' scan builders share. */
+private object PushedAgg {
+  /** MAX/MIN over a plain column, or COUNT(*); any other function is not
+    * answered at the source. */
+  def translate(f: AggregateFunc): Option[PushedAgg] = f match {
+    case m: Max => fieldOf(m.column).map(PushedAgg("MAX", _))
+    case m: Min => fieldOf(m.column).map(PushedAgg("MIN", _))
+    case _: CountStar => Some(PushedAgg("COUNT_STAR", ""))
+    case _ => None
+  }
+
+  /** The columns the MAX/MIN in `aggs` read, in slot order. */
+  def fields(aggs: Seq[PushedAgg]): Seq[String] =
+    aggs.collect { case PushedAgg(fn, f) if fn != "COUNT_STAR" => f }
+
+  /** The column a single-part reference names; None for any other
+    * expression. */
+  def fieldOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] = e match {
+    case nr: NamedReference if nr.fieldNames.length == 1 =>
+      Some(nr.fieldNames.head)
+    case _ => None
+  }
 }
 
 private class FormScan(rows: Long, partitions: Int,

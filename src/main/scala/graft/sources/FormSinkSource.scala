@@ -74,7 +74,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *     An ungrouped MAX/MIN/COUNT(*) is answered on the driver from the
   *     manifest's per-file stats, so the watermark costs one manifest read,
   *     not a pass over the table; only files from manifests written before
-  *     stats existed are still opened;
+  *     stats existed are still opened. The same aggregates grouped by sink
+  *     columns — the analyst's `count(*)` by `charge_code` — are folded
+  *     per group by one task when one task is the right size for the
+  *     snapshot (see [[FormSinkScanBuilder]]): one Spark job, no exchange;
   *   - **manifest-stats file skipping**: each commit records per-file
   *     rows/min/max in the manifest (collected inline by the task writers),
   *     and the scan prunes whole files whose range provably excludes a
@@ -1320,13 +1323,70 @@ private class FormSinkDataWriter(file: Path) extends DataWriter[InternalRow] {
 
 // ---- read path: committed files packed into read partitions, pruned columns ----
 
+/** The snapshot one read sees: a change-feed delta, a pinned version (time
+  * travel), or the newest committed version — its file names, in listing
+  * order, and their stats. Resolved once, on first use: the scan builder's
+  * aggregate pushdown decision, the scan's statistics and its partitions
+  * all see the same files, and the log is read once. Each file's on-disk
+  * size is statted once. */
+private final class SinkSnapshot(val path: String, val versionAsOf: Option[Long],
+                                 val changes: Option[(Long, Long)]) {
+  lazy val (names, stats) =
+    (changes, versionAsOf) match {
+      case (Some((from, to)), _) =>
+        FormSinkSource.addedFilesBetween(path, from, to)
+      case (None, Some(v)) =>
+        // surface the option name: the reader typed `versionAsOf`, not
+        // "manifest" — the error must say which knob pointed at the gap
+        try FormSinkSource.manifestAt(path, v)
+        catch {
+          case e: IllegalArgumentException =>
+            throw new IllegalArgumentException(
+              s"form sink time travel: versionAsOf=$v — ${e.getMessage}", e)
+        }
+      case (None, None) =>
+        val m = FormSinkSource.latestManifest(path)
+        (m.files, m.stats)
+    }
+  /** The snapshot files that may match every filter in `pruners`. */
+  def surviving(pruners: Seq[sqlf.Filter]): Seq[String] =
+    names.filter(n => pruners.forall(FormSinkSource.mayMatch(stats.get(n), _)))
+  def file(n: String): Path = FormSinkSource.dataDir(path).resolve(n)
+  // planning may run on a broadcast or subquery thread too
+  private val sizes = scala.collection.concurrent.TrieMap.empty[String, Long]
+  def size(n: String): Long =
+    sizes.getOrElseUpdate(n, try Files.size(file(n)) catch { case _: Exception => 0L })
+}
+
+/** Reads of one snapshot ([[SinkSnapshot]]), with columns pruned, filters
+  * used to skip files, and COUNT(*)/MIN/MAX answered inside the scan:
+  *
+  *   - an ungrouped aggregate is answered on the driver from the
+  *     manifest's per-file stats; only files without stats are opened, by
+  *     the scan's one task;
+  *   - an aggregate grouped by plain sink columns is answered by one task
+  *     that decodes the files and folds their rows per group, when one task
+  *     is the right size for them: the files fit one read split by
+  *     [[FormSinkSource.packFiles]]' rule without its per-core division
+  *     (Σ(bytes + `openCostInBytes`) ≤ `maxPartitionBytes`, about 31 tick
+  *     files at the defaults; [[graft.util.Sizing.oneSplit]]), and their
+  *     bytes scaled to the columns read (× columns / 5, as Spark's
+  *     `FileScan.estimateStatistics` scales a pruned file scan) fit
+  *     [[graft.util.Sizing.oneTask]]. Spark then plans no
+  *     aggregate, no exchange and one job of one task. A larger snapshot
+  *     keeps Spark's parallel partial/final aggregate over the row scan.
+  *
+  * Any filter leaves the aggregate to Spark (see `pushFilters`), and
+  * nothing is ever pushed partially. */
 private class FormSinkScanBuilder(path: String, versionAsOf: Option[Long],
                                   changes: Option[(Long, Long)],
                                   rowLevel: Boolean = false)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
+  private val snapshot = new SinkSnapshot(path, versionAsOf, changes)
   private var required: StructType = FormSinkSource.schema
+  private var groups: Seq[String] = Seq.empty
   private var aggs: Seq[PushedAgg] = Seq.empty
   private var skip: Array[sqlf.Filter] = Array.empty
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
@@ -1336,7 +1396,8 @@ private class FormSinkScanBuilder(path: String, versionAsOf: Option[Long],
     * while the understood subset additionally prunes whole files against
     * the manifest min/max at planning time. Claiming filters as fully
     * handled instead would make the coarse file stats the correctness
-    * boundary — pruning must stay an optimization. */
+    * boundary — pruning must stay an optimization. A residual filter also
+    * means Spark never offers this scan an aggregate. */
   override def pushFilters(filters: Array[sqlf.Filter]): Array[sqlf.Filter] = {
     // the row-level (UPDATE/MERGE) scan must read EVERY row of the snapshot
     // its write will replace: file skipping here would silently drop the
@@ -1346,40 +1407,49 @@ private class FormSinkScanBuilder(path: String, versionAsOf: Option[Long],
   }
   override def pushedFilters(): Array[sqlf.Filter] = skip
 
-  /** R3 sink-side watermark: an ungrouped MAX/MIN/COUNT(*) evaluates inside
-    * the sink scan (the reference reads its watermark FROM the sink table,
-    * bin:53-69), from the manifest stats where every commit already
-    * recorded each file's exact rows/min/max — same complete-pushdown
-    * contract as [[FormPipelineSource]], including the non-empty guard
-    * (see the note there: an outer count() can offer an empty Aggregation,
-    * which must be refused). */
-  private def translate(f: org.apache.spark.sql.connector.expressions.aggregate.AggregateFunc): Option[PushedAgg] = f match {
-    case m: org.apache.spark.sql.connector.expressions.aggregate.Max =>
-      fieldOf(m.column).map(PushedAgg("MAX", _))
-    case m: org.apache.spark.sql.connector.expressions.aggregate.Min =>
-      fieldOf(m.column).map(PushedAgg("MIN", _))
-    case _: org.apache.spark.sql.connector.expressions.aggregate.CountStar =>
-      Some(PushedAgg("COUNT_STAR", ""))
-    case _ => None
+  /** The group-by expressions as sink columns; None when one is anything
+    * else. */
+  private def groupsOf(a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
+      : Option[Seq[String]] = {
+    val gs = a.groupByExpressions.toSeq.map(PushedAgg.fieldOf)
+    if (gs.forall(_.exists(FormSinkSource.schema.fieldNames.contains))) Some(gs.flatten)
+    else None
   }
-  private def fieldOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] = e match {
-    case nr: org.apache.spark.sql.connector.expressions.NamedReference
-      if nr.fieldNames.length == 1 => Some(nr.fieldNames.head)
-    case _ => None
+
+  /** Is one task the right size to decode `cols` of the files the scan
+    * would read? See the class doc for the two rules. */
+  private def oneTask(cols: Int): Boolean = {
+    val sizes = snapshot.surviving(skip).map(snapshot.size)
+    graft.util.Sizing.oneSplit(sizes) &&
+      graft.util.Sizing.oneTask(org.apache.spark.sql.internal.SQLConf.get,
+        BigInt(sizes.sum) * cols / FormSinkSource.schema.length)
   }
+
+  /** R3 sink-side watermark and the analyst's grouped read: COUNT(*) and
+    * MAX/MIN over sink columns, ungrouped or grouped by sink columns,
+    * evaluate inside the sink scan — same complete-pushdown contract as
+    * [[FormPipelineSource]], including the non-empty guard (see the note
+    * there: an outer count() can offer an empty Aggregation, which must be
+    * refused). A grouped aggregate also needs the size rule of the class
+    * doc. */
   override def supportCompletePushDown(
       a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    a.groupByExpressions.isEmpty && a.aggregateExpressions.nonEmpty &&
-      a.aggregateExpressions.forall(translate(_).isDefined)
+    a.aggregateExpressions.nonEmpty &&
+      a.aggregateExpressions.forall(PushedAgg.translate(_).isDefined) &&
+      (a.groupByExpressions.isEmpty || groupsOf(a).exists { gs =>
+        val aggs = a.aggregateExpressions.toSeq.flatMap(PushedAgg.translate(_))
+        oneTask((gs ++ PushedAgg.fields(aggs)).distinct.size)
+      })
   override def pushAggregation(
       a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
     if (!supportCompletePushDown(a)) return false
-    aggs = a.aggregateExpressions.toSeq.map(translate(_).get)
+    aggs = a.aggregateExpressions.toSeq.map(PushedAgg.translate(_).get)
+    groups = groupsOf(a).get
     true
   }
 
   override def build(): Scan = {
-    val scan = new FormSinkScan(path, required, aggs, versionAsOf, changes, skip.toSeq)
+    val scan = new FormSinkScan(snapshot, required, groups, aggs, skip.toSeq)
     // the row-level scan hides SupportsRuntimeFiltering: Spark's runtime
     // group-filtering rule would otherwise prune "groups" (with no metadata
     // group columns, whole rows) out of the scan, and the truncate-replace
@@ -1398,13 +1468,16 @@ private class FormSinkRowLevelScan(inner: FormSinkScan) extends Scan with Batch 
   override def description(): String = s"rowlevel ${inner.description()}"
 }
 
-private class FormSinkScan(path: String, required: StructType,
-                           aggs: Seq[PushedAgg],
-                           versionAsOf: Option[Long],
-                           changes: Option[(Long, Long)],
+/** The scan [[FormSinkScanBuilder]] builds over one [[SinkSnapshot]]: the
+  * snapshot's files that may match the pushed filters, read as rows, or
+  * folded into the pushed aggregates (grouped by `groups` when non-empty)
+  * by one task. */
+private class FormSinkScan(snapshot: SinkSnapshot, required: StructType,
+                           groups: Seq[String], aggs: Seq[PushedAgg],
                            skip: Seq[sqlf.Filter])
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
+  import snapshot.{names, stats}
 
   /** Runtime (join-driven) file pruning — dynamic partition pruning's DSv2
     * form: when this table is the probe side of a broadcast join, Spark
@@ -1414,48 +1487,24 @@ private class FormSinkScan(path: String, required: StructType,
     * dim join then opens only the files whose range covers some build key
     * — at a 100 TB history that is the difference between scanning the
     * table and scanning the delta. Advisory like all skipping: rows are
-    * still filtered by the join itself. */
+    * still filtered by the join itself. Only the sink columns the scan
+    * outputs are offered (Spark resolves each against the scan's output):
+    * the pruned columns of a row scan, the group columns of a pushed
+    * aggregate, whose groups lose only rows the join drops anyway. */
   private var runtime: Seq[sqlf.Filter] = Seq.empty
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    FormSinkSource.schema.fieldNames
+    readSchema().fieldNames.filter(FormSinkSource.schema.fieldNames.contains)
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
   override def filter(filters: Array[sqlf.Filter]): Unit = {
     runtime = filters.toSeq.filter(FormSinkSource.skippable)
   }
-  /** Snapshot resolution: a change-feed delta, a pinned manifest version
-    * (time travel), or the newest committed manifest — as (names, stats).
-    * Resolved once per scan: statistics and partition planning see the
-    * same listing, and the manifest is read once. */
-  private lazy val (names, stats) =
-    (changes, versionAsOf) match {
-      case (Some((from, to)), _) =>
-        FormSinkSource.addedFilesBetween(path, from, to)
-      case (None, Some(v)) =>
-        // surface the option name: the reader typed `versionAsOf`, not
-        // "manifest" — the error must say which knob pointed at the gap
-        try FormSinkSource.manifestAt(path, v)
-        catch {
-          case e: IllegalArgumentException =>
-            throw new IllegalArgumentException(
-              s"form sink time travel: versionAsOf=$v — ${e.getMessage}", e)
-        }
-      case (None, None) =>
-        val m = FormSinkSource.latestManifest(path)
-        (m.files, m.stats)
-    }
-  /** The snapshot files that may match every filter in `pruners`. */
-  private def surviving(pruners: Seq[sqlf.Filter]): Seq[String] =
-    names.filter(n => pruners.forall(FormSinkSource.mayMatch(stats.get(n), _)))
-  private def file(n: String): Path = FormSinkSource.dataDir(path).resolve(n)
-  /** On-disk bytes of every file the static filters keep, statted once:
-    * runtime filters only prune further. */
-  private lazy val bytes: Map[String, Long] = surviving(skip).map { n =>
-    n -> (try Files.size(file(n)) catch { case _: Exception => 0L })
-  }.toMap
 
+  /** With an aggregate pushed, the scan's rows ARE the result: the group
+    * columns, then one field per aggregate (COUNT(*) a long, MAX/MIN a
+    * string), the order Spark's pushdown rule expects. */
   override def readSchema(): StructType =
     if (aggs.isEmpty) required
-    else StructType(aggs.map {
+    else StructType(groups.map(FormSinkSource.schema(_)) ++ aggs.map {
       case PushedAgg("COUNT_STAR", _) =>
         StructField("count(*)", LongType, nullable = false)
       case PushedAgg(fn, field) =>
@@ -1463,9 +1512,10 @@ private class FormSinkScan(path: String, required: StructType,
     })
   override def toBatch: Batch = this
   override def description(): String =
-    s"FormSinkScan path=$path version=${versionAsOf.getOrElse("latest")} " +
-      changes.map { case (f, t) => s"changes=($f,$t] " }.getOrElse("") +
+    s"FormSinkScan path=${snapshot.path} version=${snapshot.versionAsOf.getOrElse("latest")} " +
+      snapshot.changes.map { case (f, t) => s"changes=($f,$t] " }.getOrElse("") +
       s"PushedAggregates: [${aggs.mkString(", ")}], " +
+      (if (groups.nonEmpty) s"PushedGroupBy: [${groups.mkString(", ")}], " else "") +
       s"SkipFilters: [${skip.mkString(", ")}], " +
       s"ReadSchema: ${readSchema().simpleString}"
   /** The snapshot's files minus those whose manifest stats prove no row
@@ -1473,26 +1523,28 @@ private class FormSinkScan(path: String, required: StructType,
     * opens only the newest commit's files, not the whole append history —
     * packed into read partitions of several files each
     * ([[FormSinkSource.packFiles]]), so a scan's task count follows its
-    * bytes, not how many commits wrote them. A pushed aggregate is answered
-    * from the stats of the same files on the driver. The (files opened,
-    * snapshot size) census is published to
-    * [[FormSinkSource.lastScanFileCensus]] so specs and queries can assert
-    * skipping actually engaged, not just that results were correct. */
+    * bytes, not how many commits wrote them. A pushed aggregate plans one
+    * partition: ungrouped, its partial result from the stats of the same
+    * files on the driver; grouped, every file. The (files opened, snapshot
+    * size) census is published to [[FormSinkSource.lastScanFileCensus]] so
+    * specs and queries can assert skipping actually engaged, not just that
+    * results were correct. */
   override def planInputPartitions(): Array[InputPartition] = {
     // static pushed filters AND runtime join-key filters prune identically
-    val survivors = surviving(skip ++ runtime)
+    val survivors = snapshot.surviving(skip ++ runtime)
     if (aggs.nonEmpty) {
       // complete pushdown → exactly one partition (an empty sink must still
-      // emit its single aggregate row); only files without manifest stats
-      // are opened, by that partition's task
-      val (known, legacy) = survivors.partition(stats.contains)
+      // emit its single ungrouped aggregate row); the stats answer an
+      // ungrouped aggregate for every file that has them
+      val (known, opened) =
+        if (groups.isEmpty) survivors.partition(stats.contains) else (Nil, survivors)
       val partial = new SinkAggAcc(aggs)
       known.foreach(n => partial.addStats(stats(n)))
-      FormSinkSource.recordScanCensus(legacy.size, names.size)
-      Array(SinkAggPartition(legacy.map(file(_).toString), partial))
+      FormSinkSource.recordScanCensus(opened.size, names.size)
+      Array(SinkAggPartition(opened.map(snapshot.file(_).toString), groups, partial))
     } else {
       FormSinkSource.recordScanCensus(survivors.size, names.size)
-      FormSinkSource.packFiles(survivors.map(n => file(n) -> bytes(n)))
+      FormSinkSource.packFiles(survivors.map(n => snapshot.file(n) -> snapshot.size(n)))
     }
   }
 
@@ -1504,9 +1556,9 @@ private class FormSinkScan(path: String, required: StructType,
     * is. Pruned-snapshot stats also mean a selective delta read reports
     * only the files it will open (CBO sees the delta, not the history). */
   override def estimateStatistics(): Statistics = new Statistics {
-    private val survivors = surviving(skip)
+    private val survivors = snapshot.surviving(skip)
     override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(bytes.values.sum)
+      java.util.OptionalLong.of(survivors.map(snapshot.size).sum)
     override def numRows(): java.util.OptionalLong =
       if (survivors.forall(stats.contains))
         java.util.OptionalLong.of(survivors.map(stats(_).rows).sum)
@@ -1518,7 +1570,7 @@ private class FormSinkScan(path: String, required: StructType,
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new FormSinkMicroBatchStream(path, required)
+    new FormSinkMicroBatchStream(snapshot.path, required)
 }
 
 /** The sink as a STREAMING SOURCE — the manifest log IS the offset axis:
@@ -1566,14 +1618,14 @@ private class FormSinkMicroBatchStream(path: String, required: StructType)
   override def stop(): Unit = ()
 }
 
-/** Running state of the pushed ungrouped aggregates: COUNT(*) and, per
-  * MAX/MIN slot, the extremum so far. Extrema compare in UTF-8 binary order
-  * — `UTF8String.compareTo`, the SAME order Spark's own string comparisons
-  * use — and ignore nulls (SQL aggregate semantics). Java `String` </> is
-  * UTF-16 code-unit order, which diverges from Spark for
+/** Running state of the pushed aggregates over one group's rows: COUNT(*)
+  * and, per MAX/MIN slot, the extremum so far. Extrema compare in UTF-8
+  * binary order — `UTF8String.compareTo`, the SAME order Spark's own string
+  * comparisons use — and ignore nulls (SQL aggregate semantics). Java
+  * `String` </> is UTF-16 code-unit order, which diverges from Spark for
   * supplementary-plane characters, so a pushed MAX would differ from the
   * unpushed plan on non-BMP data. */
-private final class SinkAggAcc(aggs: Seq[PushedAgg]) extends Serializable {
+private final class SinkAggAcc(val aggs: Seq[PushedAgg]) extends Serializable {
   private var count = 0L
   private val extrema = new Array[UTF8String](aggs.length)
 
@@ -1598,55 +1650,79 @@ private final class SinkAggAcc(aggs: Seq[PushedAgg]) extends Serializable {
     }
   }
 
-  /** Fold one decoded row; `cell(field)` is its (nullable) cell. */
-  def addRow(cell: String => UTF8String): Unit = {
+  /** Fold one decoded row: slot j offers `cells(slots(j))`, and a COUNT(*)
+    * slot, marked by a negative index, offers nothing. */
+  def addRow(cells: Array[UTF8String], slots: Array[Int]): Unit = {
     count += 1
-    aggs.zipWithIndex.foreach { case (a, j) =>
-      if (a.fn != "COUNT_STAR") offer(j, cell(a.field))
+    var j = 0
+    while (j < slots.length) {
+      if (slots(j) >= 0) offer(j, cells(slots(j)))
+      j += 1
     }
   }
 
-  def fields: Seq[String] =
-    aggs.collect { case PushedAgg(fn, f) if fn != "COUNT_STAR" => f }.distinct
+  /** An empty state for the same aggregates. */
+  def fresh(): SinkAggAcc = new SinkAggAcc(aggs)
 
-  def result: InternalRow = InternalRow.fromSeq(aggs.zipWithIndex.map {
-    case (PushedAgg("COUNT_STAR", _), _) => count
-    case (_, j)                          => extrema(j)
-  })
+  /** The output row: `keys` (the group's cells), then each slot's value. */
+  def result(keys: Array[Any]): InternalRow = {
+    val out = new Array[Any](keys.length + aggs.length)
+    System.arraycopy(keys, 0, out, 0, keys.length)
+    var j = 0
+    while (j < aggs.length) {
+      out(keys.length + j) = if (aggs(j).fn == "COUNT_STAR") count else extrema(j)
+      j += 1
+    }
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
+  }
 }
 
-/** The driver's partial aggregate over every file with manifest stats, plus
-  * the stats-less files (manifests written before stats existed) it could
-  * not answer. */
-private case class SinkAggPartition(files: Seq[String], partial: SinkAggAcc)
+/** One pushed aggregate's task: the files it decodes and the columns it
+  * groups by. Ungrouped, `partial` holds the driver's result over every
+  * file with manifest stats and `files` are the stats-less rest; grouped,
+  * `files` are all the scan's files and `partial` is empty. */
+private case class SinkAggPartition(files: Seq[String], groups: Seq[String],
+                                    partial: SinkAggAcc)
     extends InputPartition
 
-/** Opens the partition's stats-less files and folds their rows into the
-  * driver's partial result (each task deserializes its own copy of it):
-  * one output row. With no such files it opens nothing. */
+/** Decodes the partition's files, reading only the grouped and aggregated
+  * columns, and folds each row into its group's [[SinkAggAcc]]; groups are
+  * kept in first-seen order, keyed by their cells. Emits one row per
+  * group — none for no rows — or, ungrouped, exactly one row on top of the
+  * driver's partial. */
 private object FormSinkAggReaderFactory extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[SinkAggPartition]
-    new PartitionReader[InternalRow] {
-      private var done = false
-      override def next(): Boolean = !done
-      override def get(): InternalRow = {
-        done = true
-        val acc = part.partial
-        // read only the aggregated columns (COUNT(*) needs none — one
-        // column keeps the row count observable through either codec)
-        val cols = acc.fields match {
-          case Seq() => Seq(FormSinkSource.schema.fieldNames.head)
-          case cs    => cs
+    val aggs = part.partial.aggs
+    // COUNT(*) alone reads one column, which keeps the row count observable
+    // through either codec
+    val cols = (part.groups ++ PushedAgg.fields(aggs)).distinct match {
+      case Seq() => Seq(FormSinkSource.schema.fieldNames.head)
+      case cs    => cs
+    }
+    val keyAt = part.groups.map(cols.indexOf(_)).toArray
+    val slots = aggs.map(a => if (a.fn == "COUNT_STAR") -1 else cols.indexOf(a.field)).toArray
+    val accs = new java.util.LinkedHashMap[Seq[UTF8String], SinkAggAcc]()
+    def key(cells: Array[UTF8String]): Seq[UTF8String] =
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(keyAt.map(cells))
+    // ungrouped, the one (empty) key starts from the driver's partial
+    if (keyAt.isEmpty) accs.put(key(Array.empty), part.partial)
+    lazy val rows = {
+      part.files.foreach { f =>
+        SinkCodec.foreachRow(Paths.get(f), cols) { cells =>
+          val k = key(cells)
+          var acc = accs.get(k)
+          if (acc == null) { acc = part.partial.fresh(); accs.put(k, acc) }
+          acc.addRow(cells, slots)
         }
-        val colIdx = cols.zipWithIndex.toMap
-        part.files.foreach { f =>
-          SinkCodec.foreachRow(Paths.get(f), cols) { cells =>
-            acc.addRow(c => cells(colIdx(c)))
-          }
-        }
-        acc.result
       }
+      accs.entrySet().iterator().asScala.map(e => e.getValue.result(e.getKey.toArray[Any]))
+    }
+    new PartitionReader[InternalRow] {
+      private var row: InternalRow = _
+      override def next(): Boolean =
+        rows.hasNext && { row = rows.next(); true }
+      override def get(): InternalRow = row
       override def close(): Unit = ()
     }
   }

@@ -163,6 +163,25 @@ object Sizing {
     }
   }
 
+  /** Does work of `bytes` (an optimizer estimate) run as one task? At most
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize`, the smallest
+    * partition adaptive execution coalesces to, so an exchange over it
+    * would be merged into one partition anyway. The connector tick's append
+    * sorts a delta this small inside one task, and the sink answers a
+    * grouped aggregate over a snapshot this small (and [[oneSplit]]) inside
+    * its scan. */
+  def oneTask(conf: org.apache.spark.sql.internal.SQLConf, bytes: BigInt): Boolean =
+    bytes <= conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+
+  /** Do files of `sizes` bytes fit one read split by Spark's file-split
+    * rule without its per-core division: Σ(bytes + `openCostInBytes`) ≤
+    * `spark.sql.files.maxPartitionBytes`? */
+  def oneSplit(sizes: Seq[Long]): Boolean = {
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    sizes.map(_ + conf.filesOpenCostInBytes).sum <= conf.filesMaxPartitionBytes
+  }
+
   /** `SPARK_GRAFT_CONF`'s `k=v;k=v` extra session conf, as pairs: keys
     * and values trimmed, entries without `=` or with an empty key dropped. */
   def extraConf(spec: String): Seq[(String, String)] =
