@@ -24,10 +24,4 @@ object GraftQuery {
   def apply(name: String, doc: String, oracle: String)(
       build: (SparkSession, String) => DataFrame): GraftQuery =
     GraftQuery(name, doc, Some(oracle), build)
-
-  /** A query with no SQL-expressible oracle (driver records rows-only check;
-    * semantics covered by ScalaTest instead — SURVEY.md §5 point 2/3). */
-  def noOracle(name: String, doc: String)(
-      build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, doc, None, build)
 }

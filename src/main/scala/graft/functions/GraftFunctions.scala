@@ -3,16 +3,16 @@ package graft.functions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graft.{AsciiClean, GraftShim, H60, Tokenize, VectorDot, VectorNorm, WordNGrams}
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.Column
 
 /** DataFrame + SQL surface for the engine's native Catalyst expressions.
   *
   * Two integration paths, both offered because a real deployment uses both:
   *   - [[vecDot]]/[[vecNorm]] Column builders for DataFrame pipelines
   *     (wrap the expression directly — no function-registry round trip);
-  *   - [[GraftExtensions]] (`spark.sql.extensions=graft.functions.GraftExtensions`)
-  *     or [[GraftFunctions.register]] for SQL users, exposing `vec_dot` /
-  *     `vec_norm` / `h60` to `spark.sql(...)`.
+  *   - [[registry]], which `graft.plans.GraftPlans.install` registers for
+  *     SQL users, exposing `vec_dot` / `vec_norm` / `h60` to
+  *     `spark.sql(...)`.
   */
 object GraftFunctions {
 
@@ -134,7 +134,8 @@ object GraftFunctions {
     column(org.apache.spark.sql.graft.CappedCollectAgg(
       expression(v), cap).toAggregateExpression())
 
-  /** (name, info, builder) triples for SQL registration. */
+  /** (name, info, builder) triples for SQL registration
+    * ([[graft.plans.GraftPlans.install]]). */
   val registry: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[VectorDot].getName, "vec_dot"),
@@ -177,30 +178,4 @@ object GraftFunctions {
         }
         WordNGrams(children.head, n)
       }))
-
-  /** Idempotent per-session SQL registration (for sessions not built with
-    * `spark.sql.extensions`). */
-  def register(spark: SparkSession): Unit = {
-    val fr = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    registry.foreach { case (id, info, builder) =>
-      fr.registerFunction(id, info, builder)
-    }
-  }
-}
-
-/** `SparkSessionExtensions` entry point: registers the engine's native
-  * expressions at session build time — set the session conf
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.registry.foreach(ext.injectFunction)
-    // plan rewrites (each gated by its own conf key or per-attribute
-    // metadata mark, inert by default)
-    ext.injectOptimizerRule(_ => graft.plans.BinRangeJoin())
-    ext.injectOptimizerRule(_ => graft.plans.CatalogJoinHints())
-    // whole-operator extensions (planned only when their node appears)
-    ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.AsOfJoinStrategy)
-  }
 }

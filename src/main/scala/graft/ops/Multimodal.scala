@@ -679,7 +679,7 @@ object Multimodal {
       require(tag() == "avih", s"doc ${rec.doc_id}: missing avih")
       buf.getInt // avih size
       buf.getInt; buf.getInt; buf.getInt; buf.getInt // usPerFrame..flags
-      val nFrames = buf.getInt
+      buf.getInt // total frames
       buf.getInt; buf.getInt; buf.getInt
       val w = buf.getInt; val h = buf.getInt
       buf.getInt; buf.getInt; buf.getInt; buf.getInt

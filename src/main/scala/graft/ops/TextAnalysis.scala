@@ -1872,9 +1872,6 @@ object TextAnalysis {
       }) { (s, d) =>
       val depth = 4
       val w = 1024
-      val p = Dedup.P
-      val as = Dedup.hashParams.take(depth).map(_._1).toArray
-      val bs = Dedup.hashParams.take(depth).map(_._2).toArray
       val rels = statsRels(s, d)
       val relMap = rels.toMap
       def hashed(df: DataFrame) = statsHashed(df)

@@ -39,8 +39,7 @@ import org.apache.spark.sql.types.LongType
   * fixed point after one application.
   *
   * Install via [[GraftPlans.install]] (session-mutable
-  * `experimental.extraOptimizations`) or session-build-time via
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * `experimental.extraOptimizations`).
   */
 case class BinRangeJoin() extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -132,19 +131,24 @@ case class BinRangeJoin() extends Rule[LogicalPlan] with PredicateHelper {
   }
 }
 
-/** Session-mutable installation of the engine's optimizer rules — for
-  * sessions not built with `spark.sql.extensions`. Idempotent. */
+/** The one installation of the engine's plan extensions into a session:
+  * the optimizer rules (each gated by its own conf key or per-attribute
+  * metadata mark, inert by default), the as-of join strategy (planned only
+  * when its node appears) and the native expressions' SQL functions
+  * (`vec_dot`, `h60`, ...). Idempotent. */
 object GraftPlans {
   def install(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_.isInstanceOf[BinRangeJoin]))
-      spark.experimental.extraOptimizations = cur :+ BinRangeJoin()
-    val cur2 = spark.experimental.extraOptimizations
-    if (!cur2.exists(_.isInstanceOf[CatalogJoinHints]))
-      spark.experimental.extraOptimizations = cur2 :+ CatalogJoinHints()
-    val strats = spark.experimental.extraStrategies
-    if (!strats.contains(org.apache.spark.sql.graft.AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        strats :+ org.apache.spark.sql.graft.AsOfJoinStrategy
+    val exp = spark.experimental
+    if (!exp.extraOptimizations.exists(_.isInstanceOf[BinRangeJoin]))
+      exp.extraOptimizations :+= BinRangeJoin()
+    if (!exp.extraOptimizations.exists(_.isInstanceOf[CatalogJoinHints]))
+      exp.extraOptimizations :+= CatalogJoinHints()
+    if (!exp.extraStrategies.contains(org.apache.spark.sql.graft.AsOfJoinStrategy))
+      exp.extraStrategies :+= org.apache.spark.sql.graft.AsOfJoinStrategy
+    val functions = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    graft.functions.GraftFunctions.registry.foreach { case (id, info, builder) =>
+      functions.registerFunction(id, info, builder)
+    }
   }
 }

@@ -75,10 +75,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * estimate as None and stamp nothing — the engine's default planning
   * applies (documented fallback, not a silent guess).
   *
-  * Install via [[GraftPlans.install]] or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. Registered
-  * adopter: q348 (unhinted 3-way events⋈orders⋈customer; PlanSpec pins
-  * that flipping the bound conf flips the planned physical strategy).
+  * Install via [[GraftPlans.install]]. Registered adopter: q348 (unhinted
+  * 3-way events⋈orders⋈customer; PlanSpec pins that flipping the bound
+  * conf flips the planned physical strategy).
   */
 case class CatalogJoinHints() extends Rule[LogicalPlan] with PredicateHelper {
   import CatalogJoinHints._

@@ -79,10 +79,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *     per group by one task when one task is the right size for the
   *     snapshot (see [[FormSinkScanBuilder]]): one Spark job, no exchange;
   *   - **manifest-stats file skipping**: each commit records per-file
-  *     rows/min/max in the manifest (collected inline by the task writers),
-  *     and the scan prunes whole files whose range provably excludes a
-  *     pushed comparison filter — advisory, parquet-row-group style: the
-  *     filter is still re-applied post-scan, so the coarse stats are an
+  *     rows/min/max in the manifest (collected inline by the task writers).
+  *     One evaluator, [[SinkPredicate]], answers every filter question: a
+  *     row is a file whose min equals its max, so the scan's and runtime
+  *     filtering's file pruning, DELETE, REPLACE WHERE and MERGE all ask
+  *     the same three-valued outcomes of the same `sources.Filter` — a file
+  *     is opened when TRUE is possible, a row is removed when it is exactly
+  *     TRUE. Scan pruning is advisory, parquet-row-group style: the filter
+  *     is still re-applied post-scan, so the coarse stats are an
   *     optimization, never the correctness boundary.
   *
   * Data files go through [[SinkCodec]]. New files are always snappy
@@ -646,14 +650,12 @@ object FormSinkSource {
     * files. */
   private def overlapGroups(m: Manifest, sortCol: String): Seq[Seq[String]] = {
     val Manifest(_, files, stats, _) = m
-    def bin(x: String) = UTF8String.fromString(x)
     // (file, range): None range = all-null column (overlaps nothing);
     // missing stats = unknown (overlaps everything)
     val unknown = files.filterNot(stats.contains)
     val known = files.filter(stats.contains).map { f =>
-      val s = stats(f)
-      f -> (for { mn <- s.mins.get(sortCol); mx <- s.maxs.get(sortCol) }
-        yield (bin(mn), bin(mx)))
+      val k = SinkPredicate.file(stats(f))(sortCol)
+      f -> Option.when(k.lo != null)((k.lo, k.hi))
     }
     // all-null-column files fall out of `bounded` and thus carry over
     val bounded = known.collect { case (f, Some(r)) => f -> r }
@@ -695,14 +697,12 @@ object FormSinkSource {
 
   /** Advisory skipping census: how many committed files a conjunction of
     * pushable filters would open vs skip — (mayOpen, total). The same
-    * [[mayMatch]] the scan planner runs, surfaced so layout operations
-    * (q350) can measure their effect; cost is one manifest read, no data
-    * IO. */
+    * [[SinkSnapshot.surviving]] the scan planner runs, surfaced so layout
+    * operations (q350) can measure their effect; cost is one manifest
+    * read, no data IO. */
   def skippingCensus(path: String, filters: Seq[sqlf.Filter]): (Int, Int) = {
-    val Manifest(_, fileNames, stats, _) = latestManifest(path)
-    val open = fileNames.count(f =>
-      filters.forall(fl => mayMatch(stats.get(f), fl)))
-    (open, fileNames.size)
+    val snapshot = new SinkSnapshot(path, None, None)
+    (snapshot.surviving(filters).size, snapshot.names.size)
   }
 
   /** Public snapshot inspection: (current version, the data-file names it
@@ -729,16 +729,12 @@ object FormSinkSource {
     * `Not(EqualTo(c, v))` does NOT delete rows where c is null, matching
     * what `DELETE FROM ... WHERE c <> v` does in every SQL engine. An
     * unsupported predicate shape throws instead of guessing: unlike scan
-    * skipping (advisory), delete is a correctness boundary. */
-  def delete(path: String, filter: sqlf.Filter): Option[Long] = {
-    // Pre-validate the predicate SHAPE with a dry-run 3VL evaluation against
-    // an all-null row: an unsupported filter (e.g. In containing null, which
-    // mayMatch passes through as may-match) must throw BEFORE any rewrite
-    // file exists — validating lazily inside the row loop would leave the
-    // already-written `deleted-*` survivor files as orphans until vacuum.
-    eval3(_ => None, filter)
-    commit(path)(deleteOnto(filter))
-  }
+    * skipping (advisory), delete is a correctness boundary. It throws
+    * BEFORE any rewrite file exists (an In holding a null may match every
+    * file, so a lazy check inside the row loop would leave `deleted-*`
+    * survivor files behind as orphans until vacuum). */
+  def delete(path: String, filter: sqlf.Filter): Option[Long] =
+    commit(path)(deleteOnto(SinkPredicate.check(filter)))
 
   /** [[delete]]'s attempt: no successor when stats proved a no-op or the
     * predicate matched nothing (a rewrite renames, a drop shortens). */
@@ -754,16 +750,12 @@ object FormSinkSource {
   private[sources] def rewriteSurvivors(a: Attempt, filter: sqlf.Filter)
       : Seq[(String, Option[FileStats])] = {
     val cols = schema.fieldNames.toSeq
-    val colIdx = schema.fieldNames.zipWithIndex.toMap
     a.base.entries.flatMap { case entry @ (f, st) =>
-      if (!mayMatch(st, filter)) Seq(entry)
+      if (!SinkPredicate.mayMatch(st, filter)) Seq(entry)
       else {
         val rows = scala.collection.mutable.ArrayBuffer[Array[UTF8String]]()
         SinkCodec.foreachRow(dataDir(a.path).resolve(f), cols)(rows += _)
-        val survivors = rows.filterNot { cells =>
-          rowMatches(c => colIdx.get(c).flatMap(i => Option(cells(i)))
-            .map(_.toString), filter)
-        }
+        val survivors = rows.filterNot(SinkPredicate.rowMatches(_, filter))
         if (survivors.size == rows.size) Seq(entry) // untouched
         else if (survivors.isEmpty) Seq.empty // whole file deleted
         else Seq(a.write("deleted")(survivors.foreach(_)))
@@ -811,17 +803,8 @@ object FormSinkSource {
       "every MERGE image needs a non-null key cell")
     val byKey = images.map(r => r(keyCol) -> r).toMap
     require(byKey.size == images.size, "duplicate keys in the MERGE source")
-    def bin(x: String) = UTF8String.fromString(x)
-    // a file may hold key k only if its [min,max] range covers k; a file
-    // with no stats (legacy) or an all-null key column range must be read
-    def mayHoldAny(st: Option[FileStats]): Boolean = st.forall { s =>
-      (s.mins.get(keyCol), s.maxs.get(keyCol)) match {
-        case (Some(mn), Some(mx)) => byKey.keys.exists(k =>
-          bin(k).compareTo(bin(mn)) >= 0 && bin(k).compareTo(bin(mx)) <= 0)
-        case _ => false // stats exist but no keyCol range: the key column
-          // was all-null in this file, so no row can match a non-null key
-      }
-    }
+    // a file is read only when it may hold one of the keys
+    val anyKey = sqlf.In(keyCol, byKey.keys.toArray[Any])
     val cols = schema.fieldNames.toSeq
     val keyIdx = schema.fieldNames.indexOf(keyCol)
     def toCells(r: Map[String, String]): Array[UTF8String] =
@@ -832,7 +815,7 @@ object FormSinkSource {
     commit(path) { a =>
       val matched = scala.collection.mutable.Set[String]()
       val out = a.base.entries.map { case entry @ (f, st) =>
-        if (!mayHoldAny(st)) entry
+        if (!SinkPredicate.mayMatch(st, anyKey)) entry
         else {
           val rows = scala.collection.mutable.ArrayBuffer[Array[UTF8String]]()
           SinkCodec.foreachRow(dataDir(path).resolve(f), cols)(rows += _)
@@ -852,49 +835,6 @@ object FormSinkSource {
         else Seq(a.write("merged")(add => inserts.foreach(r => add(toCells(r))))))
       // nothing matched and nothing new: a rewrite renames, an insert adds
       if (all.map(_._1) == a.base.files) None else Some(a.successor(all))
-    }
-  }
-
-  /** Kleene 3VL evaluation of a pushed-filter shape over one JSON row
-    * (`get` returns the non-null cell text). Definitely-TRUE only. */
-  private[sources] def rowMatches(get: String => Option[String],
-                                  f: sqlf.Filter): Boolean =
-    eval3(get, f).contains(true)
-
-  private[sources] def eval3(get: String => Option[String],
-                    f: sqlf.Filter): Option[Boolean] = {
-    def bin(x: String) = UTF8String.fromString(x)
-    def cmp(c: String, v: String): Option[Int] =
-      get(c).map(x => Integer.signum(bin(x).compareTo(bin(v))))
-    f match {
-      case sqlf.EqualTo(c, v: String)            => cmp(c, v).map(_ == 0)
-      case sqlf.EqualNullSafe(c, v: String)      => Some(cmp(c, v).contains(0))
-      case sqlf.GreaterThan(c, v: String)        => cmp(c, v).map(_ > 0)
-      case sqlf.GreaterThanOrEqual(c, v: String) => cmp(c, v).map(_ >= 0)
-      case sqlf.LessThan(c, v: String)           => cmp(c, v).map(_ < 0)
-      case sqlf.LessThanOrEqual(c, v: String)    => cmp(c, v).map(_ <= 0)
-      case sqlf.In(c, vs) if vs != null && vs.forall(_.isInstanceOf[String]) =>
-        get(c).map(x => vs.exists(v => x == v.asInstanceOf[String]))
-      case sqlf.StringStartsWith(c, v) => get(c).map(_.startsWith(v))
-      case sqlf.StringEndsWith(c, v)   => get(c).map(_.endsWith(v))
-      case sqlf.StringContains(c, v)   => get(c).map(_.contains(v))
-      case sqlf.IsNull(c)    => Some(get(c).isEmpty)
-      case sqlf.IsNotNull(c) => Some(get(c).isDefined)
-      case sqlf.And(l, r) => (eval3(get, l), eval3(get, r)) match {
-        case (Some(false), _) | (_, Some(false)) => Some(false)
-        case (Some(true), Some(true))            => Some(true)
-        case _                                   => None
-      }
-      case sqlf.Or(l, r) => (eval3(get, l), eval3(get, r)) match {
-        case (Some(true), _) | (_, Some(true)) => Some(true)
-        case (Some(false), Some(false))        => Some(false)
-        case _                                 => None
-      }
-      case sqlf.Not(x) => eval3(get, x).map(!_)
-      case _: sqlf.AlwaysTrue  => Some(true)  // DELETE with no WHERE
-      case _: sqlf.AlwaysFalse => Some(false)
-      case other => throw new IllegalArgumentException(
-        s"form sink delete: unsupported predicate shape $other")
     }
   }
 
@@ -940,59 +880,6 @@ object FormSinkSource {
     }
     if (run.nonEmpty) parts += SinkFilesPartition(run.toList)
     parts.toArray
-  }
-
-  // ---- manifest-stats file skipping ----------------------------------
-  // The scan prunes whole FILES whose manifest min/max provably exclude a
-  // pushed filter; the filter itself stays post-scan (Spark re-applies it
-  // to the surviving files' rows). Same advisory contract as parquet
-  // row-group stats: pruning is an optimization, never the correctness
-  // boundary, so a conservative "true" (may match) is always sound.
-
-  /** Filters whose shape the skipper understands (strings only — the sink's
-    * cells are strings by model). Everything else is left un-claimed. */
-  private[sources] def skippable(f: sqlf.Filter): Boolean = f match {
-    case sqlf.EqualTo(_, _: String)            => true
-    case sqlf.EqualNullSafe(_, _: String)      => true
-    case sqlf.GreaterThan(_, _: String)        => true
-    case sqlf.GreaterThanOrEqual(_, _: String) => true
-    case sqlf.LessThan(_, _: String)           => true
-    case sqlf.LessThanOrEqual(_, _: String)    => true
-    case sqlf.In(_, vs) => vs != null && vs.nonEmpty && vs.forall(_.isInstanceOf[String])
-    case sqlf.IsNotNull(_)  => true
-    case sqlf.And(l, r)     => skippable(l) || skippable(r) // one conjunct suffices
-    case sqlf.Or(l, r)      => skippable(l) && skippable(r) // both needed for soundness
-    case _ => false
-  }
-
-  /** May `f` match any row of a file with stats `st`? `None` (a manifest
-    * written before stats existed) → always may match. With stats, a column
-    * absent from `mins` was ALL-NULL in the file, so comparisons against it
-    * match nothing. All compares are UTF-8 binary ([[UTF8String]]), the
-    * order Spark's own string comparisons use. */
-  private[sources] def mayMatch(st: Option[FileStats], f: sqlf.Filter): Boolean =
-    st.forall(s => if (s.rows == 0L) false else may(s, f))
-
-  private def may(s: FileStats, f: sqlf.Filter): Boolean = {
-    def bin(x: String) = UTF8String.fromString(x)
-    def rng(c: String): Option[(UTF8String, UTF8String)] =
-      for { mn <- s.mins.get(c); mx <- s.maxs.get(c) } yield (bin(mn), bin(mx))
-    def eq(c: String, v: String): Boolean = rng(c).exists { case (mn, mx) =>
-      bin(v).compareTo(mn) >= 0 && bin(v).compareTo(mx) <= 0 }
-    f match {
-      case sqlf.EqualTo(c, v: String)            => eq(c, v)
-      case sqlf.EqualNullSafe(c, v: String)      => eq(c, v)
-      case sqlf.GreaterThan(c, v: String)        => rng(c).exists(_._2.compareTo(bin(v)) > 0)
-      case sqlf.GreaterThanOrEqual(c, v: String) => rng(c).exists(_._2.compareTo(bin(v)) >= 0)
-      case sqlf.LessThan(c, v: String)           => rng(c).exists(_._1.compareTo(bin(v)) < 0)
-      case sqlf.LessThanOrEqual(c, v: String)    => rng(c).exists(_._1.compareTo(bin(v)) <= 0)
-      case sqlf.In(c, vs) if vs != null && vs.forall(_.isInstanceOf[String]) =>
-        vs.exists(v => eq(c, v.asInstanceOf[String]))
-      case sqlf.IsNotNull(c) => s.mins.contains(c)
-      case sqlf.And(l, r)    => may(s, l) && may(s, r)
-      case sqlf.Or(l, r)     => may(s, l) || may(s, r)
-      case _ => true // shape the skipper doesn't understand: read the file
-    }
   }
 
   /** Garbage-collect the table: delete data files not referenced by the
@@ -1064,11 +951,9 @@ private class FormSinkTable(path: String) extends Table
     * routes unsupported predicate shapes to a loud analysis failure instead
     * of a wrong partial delete; the swap retries past concurrent commits. */
   override def canDeleteWhere(filters: Array[sqlf.Filter]): Boolean =
-    scala.util.Try(FormSinkSource.eval3(_ => None,
-      filters.reduceOption[sqlf.Filter](sqlf.And(_, _)).getOrElse(sqlf.AlwaysTrue))).isSuccess
+    SinkPredicate.supported(SinkPredicate.conjunction(filters))
   override def deleteWhere(filters: Array[sqlf.Filter]): Unit = {
-    val combined =
-      filters.reduceOption[sqlf.Filter](sqlf.And(_, _)).getOrElse(sqlf.AlwaysTrue)
+    val combined = SinkPredicate.conjunction(filters)
     var done = false
     while (!done) done = FormSinkSource.delete(path, combined).isDefined
   }
@@ -1134,15 +1019,11 @@ private class FormSinkWriteBuilder(path: String, schema: StructType, jobId: Stri
     * rows matching the conjunction are replaced by the batch, everything
     * else survives — one atomic manifest swap for the delete AND the
     * append. AlwaysTrue degenerates to truncate. The filter shape is
-    * validated HERE (3VL dry run), so an unsupported predicate fails the
-    * write before any task runs. */
+    * validated HERE ([[SinkPredicate.check]]), so an unsupported predicate
+    * fails the write before any task runs. */
   override def overwrite(filters: Array[sqlf.Filter]): WriteBuilder = {
     if (filters.isEmpty || filters.contains(sqlf.AlwaysTrue)) truncateFirst = true
-    else {
-      val combined = filters.reduce[sqlf.Filter](sqlf.And(_, _))
-      FormSinkSource.eval3(_ => None, combined) // shape check, fail fast
-      replaceWhere = Some(combined)
-    }
+    else replaceWhere = Some(SinkPredicate.check(SinkPredicate.conjunction(filters)))
     this
   }
   override def build(): Write = new Write {
@@ -1350,7 +1231,7 @@ private final class SinkSnapshot(val path: String, val versionAsOf: Option[Long]
     }
   /** The snapshot files that may match every filter in `pruners`. */
   def surviving(pruners: Seq[sqlf.Filter]): Seq[String] =
-    names.filter(n => pruners.forall(FormSinkSource.mayMatch(stats.get(n), _)))
+    names.filter(n => pruners.forall(SinkPredicate.mayMatch(stats.get(n), _)))
   def file(n: String): Path = FormSinkSource.dataDir(path).resolve(n)
   // planning may run on a broadcast or subquery thread too
   private val sizes = scala.collection.concurrent.TrieMap.empty[String, Long]
@@ -1393,16 +1274,19 @@ private class FormSinkScanBuilder(path: String, versionAsOf: Option[Long],
 
   /** ADVISORY pushdown, the parquet row-group-stats contract: every filter
     * is returned as a post-scan residual (Spark re-applies it row-by-row),
-    * while the understood subset additionally prunes whole files against
-    * the manifest min/max at planning time. Claiming filters as fully
-    * handled instead would make the coarse file stats the correctness
-    * boundary — pruning must stay an optimization. A residual filter also
-    * means Spark never offers this scan an aggregate. */
+    * while those whose stats can rule a file out ([[SinkPredicate.prunes]])
+    * additionally prune whole files at planning time: a file is skipped
+    * when TRUE is not among the outcomes [[SinkPredicate]] gives the filter
+    * over its manifest min/max — the same evaluator DELETE and MERGE run
+    * per row. Claiming filters as fully handled instead would make the
+    * coarse file stats the correctness boundary — pruning must stay an
+    * optimization. A residual filter also means Spark never offers this
+    * scan an aggregate. */
   override def pushFilters(filters: Array[sqlf.Filter]): Array[sqlf.Filter] = {
     // the row-level (UPDATE/MERGE) scan must read EVERY row of the snapshot
     // its write will replace: file skipping here would silently drop the
     // carry-over rows of pruned files at the truncate-replace commit
-    if (!rowLevel) skip = filters.filter(FormSinkSource.skippable)
+    if (!rowLevel) skip = filters.filter(SinkPredicate.prunes)
     filters
   }
   override def pushedFilters(): Array[sqlf.Filter] = skip
@@ -1495,9 +1379,8 @@ private class FormSinkScan(snapshot: SinkSnapshot, required: StructType,
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     readSchema().fieldNames.filter(FormSinkSource.schema.fieldNames.contains)
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-  override def filter(filters: Array[sqlf.Filter]): Unit = {
-    runtime = filters.toSeq.filter(FormSinkSource.skippable)
-  }
+  override def filter(filters: Array[sqlf.Filter]): Unit =
+    runtime = filters.toSeq.filter(SinkPredicate.prunes)
 
   /** With an aggregate pushed, the scan's rows ARE the result: the group
     * columns, then one field per aggregate (COUNT(*) a long, MAX/MIN a

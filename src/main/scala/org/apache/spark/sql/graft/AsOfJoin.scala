@@ -47,9 +47,8 @@ case class AsOfJoinPlan(left: LogicalPlan, right: LogicalPlan,
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner strategy: [[AsOfJoinPlan]] → [[AsOfJoinExec]]. Injected via
-  * `GraftExtensions` (session build) or `GraftPlans.install` (runtime,
-  * `experimental.extraStrategies`). */
+/** Planner strategy: [[AsOfJoinPlan]] → [[AsOfJoinExec]]. Injected by
+  * `GraftPlans.install` (`experimental.extraStrategies`). */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinPlan(l, r, lk, rk, lt, rt) =>

@@ -303,7 +303,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("SQL registration exposes the native functions to spark.sql") {
-    GraftFunctions.register(spark)
+    graft.plans.GraftPlans.install(spark)
     val r = spark.sql(
       """SELECT vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
         |               array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d,
