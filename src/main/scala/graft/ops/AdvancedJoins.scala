@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
-import graft.functions.ColumnOps._
 
 /** Non-equi join surface (SURVEY.md §2.4 joins: theta/range, as-of).
   *

@@ -141,36 +141,13 @@ object GraphOps {
       "q130_pagerank",
       s"All-integer PageRank ($Iters rounds, damping 0.85, mass 1e12 units) over the undirected part↔supplier co-occurrence graph from lineitem: each round is one rank⋈edges equi-join + one groupBy(dst) long-sum — O(E) shuffle of 8-byte values, the BSP shape that holds at any graph scale. Every contribution is a long floor-division, so ranks are exact integers: no float summation order to diverge between engines, partitionings or cluster sizes. Top-20 hubs with a total (rank, id) order.",
       pagerankSql) { (s, d) =>
-      // the edge list feeds every round — materialize once, hash-partitioned
-      // ON THE SOURCE (r20, guide §2.4): u-partitioning serves BOTH tiers.
-      // The array-tier round groups by u and resolves v's contribution by
-      // broadcast array index (≡ the old groupBy(v)+lookup(u) because the
-      // frame is symmetric: it holds (a,b) iff (b,a)), so it stays
-      // exchange-free; and the FALLBACK's per-round rank⋈edges join on u now
-      // inherits the cached partitioning too, so past the gate only the O(V)
-      // rank frame moves per round — the r19 fallback re-shuffled O(E) edges
-      // every round against a v-partitioned cache. Plain persist, not
-      // persistForOneAction: the array tier below runs one action per round;
-      // both tiers unpersist the caches before returning.
-      val ed = Tables.lineitem(s, d)
-        .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
-        .distinct()
-      val nEdge = graft.util.Sizing.exchangePartitions(s,
-        2L * graft.util.Sizing.parquetRowCount(d, "lineitem"))
-      val edges = ed.unionAll(ed.select(col("v").as("u"), col("u").as("v")))
-        .repartition(nEdge, col("u")).persist()
-      // in-degree == out-degree on the symmetrized frame: grouping by u is
-      // exchange-free over the u-partitioned cache and yields the identical
-      // degree census the original groupBy(v) computed. Persisted (O(V)):
-      // the gate head, the array tier's collect and the fallback's per-round
-      // rank rebuilds all re-aggregated it from the O(E) cache before (r20)
-      val degF = edges.groupBy(col("u")).agg(count(lit(1)).as("deg")).persist()
-      // one plan-time sizing head(): node count + max id, the driver-tier
-      // gate's inputs
-      val (nNodes, maxId, arrayTier) =
-        graft.util.DriverTier.sizeDenseGraph(degF, "u",
-          graft.util.DriverTier.PageRankSlotBytes)
-      if (arrayTier) {
+      // the array-tier round groups by u and resolves v's contribution by
+      // broadcast array index (≡ the oracle's groupBy(v)+lookup(u) on the
+      // symmetric frame); the fallback's per-round rank⋈edges join on u
+      // inherits the cache's partitioning, so only the O(V) rank frame moves
+      val g = new PartSupplierGraph(s, d, graft.util.DriverTier.PageRankSlotBytes)
+      import g.{degF, edges, maxId, nNodes}
+      if (g.arrayTier) {
         // ZERO-EXCHANGE round (the q326 array tier generalized from labels
         // to rank mass): the O(V) per-node contribution vector rides a
         // Broadcast[Array[Long]] resolved by a codegen array index inside
@@ -183,9 +160,7 @@ object GraphOps {
         // (Primitive collects throughout — guide §5: the boxed Row path
         // transiently allocated ~10× the 16 payload bytes per node on the
         // driver, which at the 4M-node gate is hundreds of MB per round.)
-        val deg = new Array[Long](maxId.toInt + 1)
-        graft.util.DriverCollect.foreachLongPair(degF)((u, dg) =>
-          deg(u.toInt) = dg)
+        val deg = g.degrees()
         val base0 = 1000000000000L / nNodes
         val base = 150000000000L / nNodes
         var rank = Array.tabulate(maxId.toInt + 1)(i =>
@@ -197,18 +172,15 @@ object GraphOps {
             if (deg(j) > 0) contrib(j) = rank(j) * 85L / (100L * deg(j))
             j += 1
           }
-          val bc = s.sparkContext.broadcast(contrib)
           // every node of the symmetrized frame has an in-edge, so this
           // covers the full node set — the fallback's left join + coalesce
           // is defensive slack the construction makes unreachable. groupBy(u)
           // with the contribution looked up on v ≡ the oracle's groupBy(v)
           // with lookup(u): the symmetric frame makes the two row sets equal.
           val next = new Array[Long](maxId.toInt + 1)
-          try graft.util.DriverCollect.foreachLongPair(
-            edges.groupBy(col("u"))
-              .agg(sum(arrayLookup(bc, col("v"))).as("c")))((v, c) =>
+          g.round(contrib)(at =>
+            edges.groupBy(col("u")).agg(sum(at(col("v"))).as("c")))((v, c) =>
             next(v.toInt) = base + c)
-          finally bc.destroy()
           rank = next
         }
         val top = (0 to maxId.toInt).iterator
@@ -218,8 +190,7 @@ object GraphOps {
           .take(20)
         // the result is a driver-side literal — nothing below references
         // the caches, so reclaim them here (r19 verdict hygiene item)
-        degF.unpersist(false)
-        edges.unpersist(false)
+        g.release()
         import s.implicits._
         top.toSeq.toDF("node_id", "rank_e12")
       } else {
@@ -252,51 +223,34 @@ object GraphOps {
 
     GraftQuery(
       "q176_bfs_distances",
-      s"BFS shortest-path distances ($BfsRounds rounds) from the minimum-id node over the part↔supplier graph — the frontier formulation: each round unions the current label frame with neighbors-at-distance+1 and keeps min(d) per node, a map-side-combinable aggregate. One O(E) equi-join + one min-agg per round (the BSP shape), `localCheckpoint` truncating the lineage between rounds exactly like q83's label propagation; labels are longs, never paths. (A frontier-only variant with per-round anti-joins was measured ~25% SLOWER here: this graph is dense bipartite — the frontier IS the graph by round 2, so the anti-join/distinct shuffles buy nothing; keep frontier-only for high-diameter graphs, min-agg for dense ones.) Output: the distance histogram — reach of each BFS ring.",
+      s"BFS shortest-path distances ($BfsRounds rounds) from the minimum-id node over the part↔supplier graph — the frontier formulation: each round unions the current label frame with neighbors-at-distance+1 and keeps min(d) per node, a map-side-combinable aggregate. One O(E) equi-join + one min-agg per round (the BSP shape), `localCheckpoint` truncating the lineage between rounds exactly like q83's components rounds; labels are longs, never paths. (A frontier-only variant with per-round anti-joins was measured ~25% SLOWER here: this graph is dense bipartite — the frontier IS the graph by round 2, so the anti-join/distinct shuffles buy nothing; keep frontier-only for high-diameter graphs, min-agg for dense ones.) Output: the distance histogram — reach of each BFS ring.",
       bfsSql) { (s, d) =>
-      val ed = Tables.lineitem(s, d)
-        .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
-        .distinct()
-      // source-partitioned persisted edges + the driver-tier gate, as in q130
-      // (r20): under the gate each round is ONE zero-exchange aggregate over
-      // the cache (groupBy(u) + lookup(v) ≡ the old groupBy(v) + lookup(u)
-      // on the symmetric frame); past it, the union+min-agg BSP loop's
-      // frontier join keys on u and now inherits the cached partitioning —
-      // only the O(V) distance frame moves per round
-      val nEdge = graft.util.Sizing.exchangePartitions(s,
-        2L * graft.util.Sizing.parquetRowCount(d, "lineitem"))
-      val edges = ed.unionAll(ed.select(col("v").as("u"), col("u").as("v")))
-        .repartition(nEdge, col("u")).persist()
-      // persisted O(V): gate head + array-tier collect were two O(E) cache
-      // aggregates before (r20)
-      val degF = edges.groupBy(col("u")).agg(count(lit(1)).as("deg")).persist()
-      val (_, maxId, arrayTier) =
-        graft.util.DriverTier.sizeDenseGraph(degF, "u",
-          graft.util.DriverTier.BfsSlotBytes)
-      if (arrayTier) {
+      // under the gate each round is ONE zero-exchange aggregate over the
+      // cache (groupBy(u) + lookup(v) ≡ groupBy(v) + lookup(u) on the
+      // symmetric frame); past it, the union+min-agg BSP loop's frontier
+      // join keys on u and inherits the cached partitioning — only the O(V)
+      // distance frame moves per round
+      val g = new PartSupplierGraph(s, d, graft.util.DriverTier.BfsSlotBytes)
+      import g.{degF, edges, maxId}
+      if (g.arrayTier) {
         // dist'(v) = min(dist(v), 1 + min over in-neighbors u of dist(u)) —
         // identical to the fallback's union+min-agg round because the
         // unreached sentinel is larger than any reachable distance, so it
         // never wins a min against a real frontier value
         val Inf = Long.MaxValue / 4
-        val deg = new Array[Long](maxId.toInt + 1)
-        graft.util.DriverCollect.foreachLongPair(degF)((u, dg) =>
-          deg(u.toInt) = dg)
+        val deg = g.degrees()
         var dist = Array.tabulate(maxId.toInt + 1)(i =>
           if (deg(i) > 0) Inf else 0L)
         // seed = min node id (first assigned slot of the dense domain)
         dist((0 to maxId.toInt).find(deg(_) > 0).get) = 0L
         for (_ <- 1 to BfsRounds) {
-          val bc = s.sparkContext.broadcast(dist)
           // groupBy(u) + lookup(v) ≡ groupBy(v) + lookup(u): symmetric frame
           val next = dist.clone()
-          try graft.util.DriverCollect.foreachLongPair(
-            edges.groupBy(col("u"))
-              .agg(min(arrayLookup(bc, col("v"))).as("md")))((v, md) => {
+          g.round(dist)(at =>
+            edges.groupBy(col("u")).agg(min(at(col("v"))).as("md")))((v, md) => {
             val cand = md + 1
             if (cand < next(v.toInt)) next(v.toInt) = cand
           })
-          finally bc.destroy()
           dist = next
         }
         val hist = (0 to maxId.toInt).iterator
@@ -306,8 +260,7 @@ object GraphOps {
           .map { case (dd, vs) => (dd, vs.size.toLong) }
           .sortBy(_._1)
         // driver-side literal result: reclaim the caches here
-        degF.unpersist(false)
-        edges.unpersist(false)
+        g.release()
         import s.implicits._
         hist.toDF("dist", "n_nodes").orderBy(col("dist"))
       } else {
@@ -331,8 +284,7 @@ object GraphOps {
         }
         // the final frame is checkpointed — its lineage no longer touches
         // the caches, so reclaim them here
-        degF.unpersist(false)
-        edges.unpersist(false)
+        g.release()
         dist.groupBy(col("d").as("dist"))
           .agg(count(lit(1)).as("n_nodes"))
           .orderBy(col("dist"))
@@ -495,34 +447,17 @@ object GraphOps {
       "q310_kcore_peeling",
       s"k-core decomposition by iterative peeling ($KCoreRounds fixed BSP rounds) over the part↔supplier co-occurrence graph — the dense-subgraph extractor pipelines run to isolate the mutually-reinforcing cluster (spam/bot rings, template farms) that degree alone can't find: k is DATA-DRIVEN (the lower-median degree, by cumulative selection over the bounded degree histogram — q208's threshold doctrine, so the cut adapts to any SF), each round keeps only edges whose BOTH endpoints still meet deg >= k and re-derives survivor degrees — two O(E) semi-join-shaped equi-joins + one count aggregate per round, localCheckpoint truncating lineage exactly like q176. The fixed round count makes engine and oracle bit-identical whether or not the fixpoint has been reached (production loops until a 1-row delta count hits zero); the census emits each round's surviving nodes/directed edges plus an id checksum, so a single wrongly-peeled node fails the gate.",
       kcoreSql) { (s, d) =>
-      val ed = Tables.lineitem(s, d)
-        .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
-        .distinct()
-      // source-partitioned persisted edges + the driver-tier gate (the
-      // q130/q176 shape, r20): peeling is MONOTONE, so round i's edge frame
-      // is the ORIGINAL frame filtered by the current survivor set — under
-      // the gate each round is one zero-exchange filter+aggregate over the
-      // cache with the survivor set broadcast as a primitive array, and
-      // nothing O(E) crosses the wire after the one-time repartition; the
-      // fallback's first per-round semi-join keys on u and inherits the
-      // cache too (see the alternating-key loop below)
-      val nEdge = graft.util.Sizing.exchangePartitions(s,
-        2L * graft.util.Sizing.parquetRowCount(d, "lineitem"))
-      val edges = ed.unionAll(ed.select(col("v").as("u"), col("u").as("v")))
-        .repartition(nEdge, col("u")).persist()
-      // in-degree == out-degree on the symmetric frame: groupBy(u) is
-      // exchange-free over the cache and equals the original groupBy(v).
-      // Persisted O(V): gate head + array collect / fallback threshold were
-      // separate O(E) cache aggregates before (r20)
-      val degF = edges.groupBy(col("u")).agg(count(lit(1)).as("deg")).persist()
-      val (nNodes, maxId, arrayTier) =
-        graft.util.DriverTier.sizeDenseGraph(degF, "u",
-          graft.util.DriverTier.KCoreSlotBytes)
-      if (arrayTier) {
+      // peeling is MONOTONE, so round i's edge frame is the ORIGINAL frame
+      // filtered by the current survivor set — under the gate each round is
+      // one zero-exchange filter+aggregate over the cache with the survivor
+      // set broadcast as a primitive array; the fallback's first per-round
+      // semi-join keys on u and inherits the cache too (see the
+      // alternating-key loop below)
+      val g = new PartSupplierGraph(s, d, graft.util.DriverTier.KCoreSlotBytes)
+      import g.{degF, edges, maxId, nNodes}
+      if (g.arrayTier) {
         import s.implicits._
-        val deg0 = new Array[Long](maxId.toInt + 1)
-        graft.util.DriverCollect.foreachLongPair(degF)((u, dg) =>
-          deg0(u.toInt) = dg)
+        val deg0 = g.degrees()
         // lower-median k by the same cumulative selection over the degree
         // histogram, in exact integers (the frame below replicates it 1:1)
         val histo = scala.collection.immutable.SortedMap.empty[Long, Long] ++
@@ -550,17 +485,14 @@ object GraphOps {
         for (i <- 1 to KCoreRounds) {
           if (converged) rows += rows.last.copy(_1 = i)
           else {
-            val bc = s.sparkContext.broadcast(surv)
             // groupBy(u) over the u-partitioned cache (the filter condition
             // is symmetric, so the filtered frame stays symmetric and the
             // u-census equals the v-census); primitive collect per §5
             val degI = new Array[Long](maxId.toInt + 1)
-            try graft.util.DriverCollect.foreachLongPair(
-              edges.filter(arrayLookup(bc, col("u")) === 1L &&
-                  arrayLookup(bc, col("v")) === 1L)
+            g.round(surv)(at =>
+              edges.filter(at(col("u")) === 1L && at(col("v")) === 1L)
                 .groupBy(col("u")).agg(count(lit(1)).as("deg")))((u, dg) =>
               degI(u.toInt) = dg)
-            finally bc.destroy()
             val r = censusOf(degI)
             surv = degI.map(dg => if (dg >= k) 1L else 0L)
             converged =
@@ -569,8 +501,7 @@ object GraphOps {
           }
         }
         // driver-side literal result: reclaim the caches here
-        degF.unpersist(false)
-        edges.unpersist(false)
+        g.release()
         rows.toSeq.toDF("round", "n_nodes", "n_edges", "sum_nodes")
           .orderBy(col("round"))
       } else {
@@ -663,8 +594,7 @@ object GraphOps {
       // the round caches, so reclaim them here instead of leaking them to
       // the harness sweep (r19 verdict hygiene item)
       owned.foreach(_.unpersist(false))
-      degF.unpersist(false)
-      edges.unpersist(false)
+      g.release()
       import s.implicits._
       rows.toSeq.toDF("round", "n_nodes", "n_edges", "sum_nodes")
         .orderBy(col("round"))
@@ -961,6 +891,59 @@ object GraphOps {
        |    AS max_comm,
        |  $qPpmSql
        |FROM g CROSS JOIN mm CROSS JOIN sic""".stripMargin
+
+  /** The part↔supplier co-occurrence graph of q130, q176 and q310: the
+    * distinct (part·2, supplier·2+1) pairs of lineitem, directed both ways
+    * and persisted hash-partitioned ON THE SOURCE u (r20, guide §2.4), so
+    * an array-tier round groups by u over the cache exchange-free and a
+    * fallback round's join on u inherits its partitioning (only the O(V)
+    * frame moves). In-degree == out-degree on the symmetric frame, so the
+    * degree frame is an exchange-free groupBy(u), persisted because the
+    * gate head, the array tier's collect and the fallbacks all read it. One
+    * plan-time sizing job gives [[graft.util.DriverTier.sizeDenseGraph]]'s
+    * node count, max id and tier at the query's per-slot charge. Plain
+    * persist, not persistForOneAction: a tier runs one action per round;
+    * every query calls [[release]] before it returns. */
+  private final class PartSupplierGraph(s: org.apache.spark.sql.SparkSession,
+                                        d: String, slotBytes: Long) {
+    private val ed = Tables.lineitem(s, d)
+      .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
+      .distinct()
+    private val nEdge = graft.util.Sizing.exchangePartitions(s,
+      2L * graft.util.Sizing.parquetRowCount(d, "lineitem"))
+    val edges: org.apache.spark.sql.DataFrame =
+      ed.unionAll(ed.select(col("v").as("u"), col("u").as("v")))
+        .repartition(nEdge, col("u")).persist()
+    val degF: org.apache.spark.sql.DataFrame =
+      edges.groupBy(col("u")).agg(count(lit(1)).as("deg")).persist()
+    val (nNodes, maxId, arrayTier) =
+      graft.util.DriverTier.sizeDenseGraph(degF, "u", slotBytes)
+
+    /** The degrees as a node-id-indexed array (array tier: one primitive
+      * collect, guide §5). */
+    def degrees(): Array[Long] = {
+      val deg = new Array[Long](maxId.toInt + 1)
+      graft.util.DriverCollect.foreachLongPair(degF)((u, dg) => deg(u.toInt) = dg)
+      deg
+    }
+
+    /** One array-tier round: `arr` broadcast, `plan` built with `at(c)` =
+      * `arr(c)` ([[arrayLookup]]), its `(key, value)` rows fed to `f`, and
+      * the broadcast destroyed once the collect is done. */
+    def round(arr: Array[Long])(
+        plan: (org.apache.spark.sql.Column => org.apache.spark.sql.Column) =>
+          org.apache.spark.sql.DataFrame)(f: (Long, Long) => Unit): Unit = {
+      val bc = s.sparkContext.broadcast(arr)
+      try graft.util.DriverCollect.foreachLongPair(plan(c => arrayLookup(bc, c)))(f)
+      finally bc.destroy()
+    }
+
+    /** Unpersist the degree frame and the edge cache. */
+    def release(): Unit = {
+      degF.unpersist(false)
+      edges.unpersist(false)
+    }
+  }
 
   /** Shared LPA machinery for one query: takes the UNDIRECTED edge set
     * (each edge once — symmetrization happens in here, against a cache, so

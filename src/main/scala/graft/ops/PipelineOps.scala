@@ -13,12 +13,12 @@ import graft.functions.CrossHash.{h60, h60Sql}
   * analytics, embedding quantization, and PII-pattern profiling.
   *
   * Scale notes (100 TB design intent):
-  *   - connected components is the iterated min-label-propagation algorithm
-  *     (the MapReduce-CC family — Kiveris et al., "Connected Components in
-  *     MapReduce and Beyond", SoCC'14): each round is one self-join + one
-  *     min-aggregate, rounds ≈ component diameter (near-dup clusters are
-  *     shallow), lineage truncated per round with `localCheckpoint` (a real
-  *     cluster checkpoints to reliable storage instead);
+  *   - connected components is alternating large-star/small-star
+  *     contraction (Kiveris et al., "Connected Components in MapReduce and
+  *     Beyond", SoCC'14): each operation is one min-aggregate + one
+  *     equi-join, O(log n) alternations whatever the graph's diameter,
+  *     lineage truncated per round with `localCheckpoint` (a real cluster
+  *     checkpoints to reliable storage instead);
   *   - stratified sampling is a stateless hash residue — no sort, no
   *     per-stratum scan, reproducible across engines and cluster sizes;
   *   - funnel/cohort are two-shuffle shapes (per-user agg + re-join);
@@ -64,7 +64,7 @@ object PipelineOps {
   /** Candidate duplicate edges from MinHash-LSH band collisions: symmetric
     * (src, dst) pairs of docs sharing any band bucket (same banding as q40),
     * bounded by the bucket-size cap above. */
-  private def lshEdges(s: SparkSession, d: String): DataFrame = {
+  private[graft] def lshEdges(s: SparkSession, d: String): DataFrame = {
     val sig = Dedup.minhashSignatures(s, d)
     val bandCols = (0 until Dedup.NumBands).map { b =>
       val key = concat_ws(",",
@@ -77,36 +77,34 @@ object PipelineOps {
   }
 
   // ---- driver components tier (r20) ----------------------------------------
-  // The component iterations (star contraction, min-label propagation) run
-  // over LSH candidate-edge graphs whose size is governed by the band
-  // bucket cap — at the measured SFs a few thousand to a few hundred
-  // thousand edges, where each distributed round is pure scheduling
-  // (2 localCheckpoints + a fingerprint aggregate per alternation; the
-  // q326 job-floor finding applied to this family). Under the gate below
-  // the edge set collects ONCE as a primitive long array (the LPA
-  // DriverCollect doctrine, guide §5) and the rounds run on the driver —
-  // bit-identical updates, EXACT set/assignment equality for the fixpoint
-  // test (strictly stronger than the xor fingerprint). Past the gate the
-  // distributed loops below run unchanged.
+  // The star-contraction alternations run over LSH candidate-edge graphs
+  // whose size is governed by the band bucket cap — 1,133 canonical edges
+  // at sf0.1 and 11,217 at sf1 (ScaleData ×10), where each distributed
+  // round is pure scheduling (2 localCheckpoints + a fingerprint aggregate
+  // per alternation; the q326 job-floor finding applied to this family).
+  // Under the gate below the edge set collects ONCE as a primitive long
+  // array (the LPA DriverCollect doctrine, guide §5) and the rounds run on
+  // the driver — bit-identical updates, EXACT edge-set equality for the
+  // fixpoint test (strictly stronger than the xor fingerprint). Past the
+  // gate the distributed loop below runs unchanged.
 
-  /** Collect an edge frame as encoded `(a << 32) | b` longs if
-    * [[graft.util.DriverTier.edgeList]] takes it (edge count within the
-    * driver-tier budget, ids inside the 31-bit encode domain). A zero
-    * budget forces the distributed tier without the sizing job (specs pin
-    * tier equality with it). */
-  private def driverTierEdges(e: DataFrame, a: String, b: String)
-      : Option[Array[Long]] = {
+  /** Collect a canonical `(u, v)` edge frame as encoded `(u << 32) | v`
+    * longs if [[graft.util.DriverTier.edgeList]] takes it (edge count
+    * within the driver-tier budget, ids inside the 31-bit encode domain).
+    * A zero budget forces the distributed tier without the sizing job
+    * (specs pin tier equality with it). */
+  private def driverTierEdges(e: DataFrame): Option[Array[Long]] = {
     val budget = graft.util.DriverTier.budget(e.sparkSession)
     if (budget <= 0L) None
     else {
       val r = e.agg(count(lit(1)),
-        coalesce(max(greatest(col(a), col(b))), lit(-1L)),
-        coalesce(min(least(col(a), col(b))), lit(0L))).head()
+        coalesce(max(greatest(col("u"), col("v"))), lit(-1L)),
+        coalesce(min(least(col("u"), col("v"))), lit(0L))).head()
       if (!graft.util.DriverTier.edgeList(budget, r.getLong(0), r.getLong(2),
           r.getLong(1))) None
       else {
         val bld = new scala.collection.mutable.ArrayBuilder.ofLong
-        graft.util.DriverCollect.foreachLongPair(e.select(col(a), col(b)))(
+        graft.util.DriverCollect.foreachLongPair(e.select(col("u"), col("v")))(
           (x, y) => bld += ((x << 32) | y))
         Some(bld.result())
       }
@@ -128,7 +126,7 @@ object PipelineOps {
 
   /** One Large-Star + Small-Star alternation on a sorted, deduplicated,
     * CANONICAL (u > v) encoded edge array — the exact driver twin of the
-    * distributed round in [[largeSmallStarComponents]]: on a canonical
+    * distributed round in [[connectedComponents]]: on a canonical
     * frame, large-star emits exactly (u, m(v)) per edge (the larger
     * endpoint hangs onto m of its smaller neighbor's star center; the
     * v-as-neighbor-of-u row fails the v > u filter), and small-star's
@@ -176,15 +174,20 @@ object PipelineOps {
     sortedDistinct(bs.result())
   }
 
+  /** The alternation cap of [[connectedComponents]], in both tiers: a
+    * graph still changing after it fails the query instead of returning
+    * partial labels. */
+  private val MaxAlternations = 30
+
   /** Connected components via ALTERNATING Large-Star / Small-Star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC
-    * 2014) — the O(log n)-round alternative to [[connectedComponents]]'s
-    * min-label propagation, whose round count is O(diameter): min-label
-    * moves the smallest id ONE hop per round, so a long-path graph (chained
-    * near-dup clusters, linked-page graphs) pays diameter-many O(E)
-    * passes, while star contraction HALVES tree heights every alternation.
-    * That asymmetry is invisible at test SFs and decisive at 100 TB — this
-    * is the form a production components job runs.
+    * 2014) — O(log n) alternations, where min-label propagation needs
+    * O(diameter) rounds: it moves the smallest id ONE hop per round, so a
+    * long-path graph (chained near-dup clusters, linked-page graphs) pays
+    * diameter-many O(E) passes, while star contraction HALVES tree heights
+    * every alternation. That asymmetry is invisible at test SFs and
+    * decisive at 100 TB — this is the form a production components job
+    * runs.
     *
     * Both operations preserve connectivity and are expressible as exactly
     * the engine's bounded primitives: per round, a groupBy(u).min neighbor
@@ -197,28 +200,31 @@ object PipelineOps {
     * order-invariant (count, bit_xor of xxhash64(u,v)) fingerprint repeats
     * across one full L+S alternation — at the fixpoint the edges form a
     * star forest with every component's min-id node at the center, and the
-    * star edges ARE the label assignment. */
-  private[graft] def largeSmallStarComponents(nodes: DataFrame,
-                                              edges: DataFrame,
-                                              maxIters: Int = 30): DataFrame = {
+    * star edges ARE the label assignment.
+    *
+    * `edges` may hold self-loops, duplicates and either direction of a
+    * pair; an endpoint outside `nodes` joins components but is not output.
+    * Both tiers return exactly one `(node, label)` row per `nodes` row. */
+  private[graft] def connectedComponents(nodes: DataFrame,
+                                         edges: DataFrame): DataFrame = {
     var e = edges
       .select(greatest(col("src"), col("dst")).as("u"),
         least(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v")).distinct().localCheckpoint()
-    driverTierEdges(e, "u", "v") match {
+    driverTierEdges(e) match {
       case Some(enc0) =>
         // driver tier (r20): identical alternations on the collected
         // canonical edge array, fixpoint by EXACT edge-set equality
         var enc = sortedDistinct(enc0)
         var conv = false
         var it = 0
-        while (!conv && it < maxIters) {
+        while (!conv && it < MaxAlternations) {
           val next = starAlternation(enc)
           conv = java.util.Arrays.equals(next, enc)
           enc = next
           it += 1
         }
-        require(conv, s"star contraction did not converge in $maxIters rounds")
+        require(conv, s"star contraction did not converge in $MaxAlternations rounds")
         // star forest → labels: first (sorted) entry per u is min(v)
         val stars = new scala.collection.mutable.LongMap[Long]()
         var i = 0
@@ -242,7 +248,7 @@ object PipelineOps {
     var last = fingerprint(e)
     var converged = false
     var iter = 0
-    while (!converged && iter < maxIters) {
+    while (!converged && iter < MaxAlternations) {
       // large-star: every neighbor v > u hangs onto m = min(N(u) ∪ {u});
       // m ≤ u < v keeps the (larger → smaller) canonical orientation
       val bidirL = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
@@ -267,7 +273,7 @@ object PipelineOps {
       e = eS
       iter += 1
     }
-    require(converged, s"star contraction did not converge in $maxIters rounds")
+    require(converged, s"star contraction did not converge in $MaxAlternations rounds")
     // star forest → labels: leaves carry their center, centers and isolated
     // nodes label themselves (min() is a no-op at a true fixpoint — belt)
     val stars = e.groupBy(col("u").as("node")).agg(min(col("v")).as("lab"))
@@ -275,100 +281,41 @@ object PipelineOps {
       .select(col("node"), coalesce(col("lab"), col("node")).as("label"))
   }
 
-  /** Min-label propagation to fixpoint: label(n) ← min(label(n),
-    * min over neighbors' labels); converged when Σlabel stops falling
-    * (labels are monotone non-increasing with a fixed node set). */
-  private[graft] def connectedComponents(nodes: DataFrame, edges: DataFrame,
-                                         maxIters: Int = 20): DataFrame = {
-    val eDriver = edges.localCheckpoint()
-    driverTierEdges(eDriver, "src", "dst") match {
-      case Some(enc) =>
-        // driver tier (r20): the same synchronous min-label update on the
-        // collected edge array — only edge-touched nodes can ever change
-        // label, so the map covers exactly those; isolated nodes fall out
-        // of the coalesce below, as in the distributed frame. Fixpoint by
-        // exact assignment equality (≡ the sum test: labels are monotone
-        // non-increasing, so an unchanged sum IS an unchanged assignment).
-        val mask = 0xffffffffL
-        var labels = new scala.collection.mutable.LongMap[Long]()
-        var i = 0
-        while (i < enc.length) {
-          val sN = enc(i) >>> 32; val dN = enc(i) & mask
-          labels(sN) = sN; labels(dN) = dN
-          i += 1
-        }
-        var conv = false
-        var it = 0
-        while (!conv && it < maxIters) {
-          val next = labels.clone()
-          var changed = false
-          i = 0
-          while (i < enc.length) {
-            val sN = enc(i) >>> 32; val dN = enc(i) & mask
-            val cand = labels(dN)
-            if (cand < next(sN)) { next(sN) = cand; changed = true }
-            i += 1
-          }
-          conv = !changed
-          labels = next
-          it += 1
-        }
-        require(conv, s"connected components did not converge in $maxIters rounds")
-        val s = nodes.sparkSession
-        import s.implicits._
-        val labDf = labels.toSeq.toDF("node", "lab")
-        return nodes.join(broadcast(labDf), Seq("node"), "left")
-          .select(col("node"), coalesce(col("lab"), col("node")).as("label"))
-      case None => ()
-    }
-    var labels = nodes.select(col("node"), col("node").as("label")).localCheckpoint()
-    val e = eDriver
-    var lastSum = labels.agg(sum(col("label"))).head.getLong(0)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val prop = e.join(labels, e("dst") === labels("node"))
-        .select(e("src").as("node"), labels("label"))
-      val next = labels.union(prop)
-        .groupBy(col("node")).agg(min(col("label")).as("label"))
-        .localCheckpoint()
-      val s = next.agg(sum(col("label"))).head.getLong(0)
-      converged = s == lastSum
-      lastSum = s
-      labels = next
-      iter += 1
-    }
-    require(converged, s"connected components did not converge in $maxIters rounds")
-    labels
+  /** The DuckDB oracle's components prefix of q83, q339, q131 and q149:
+    * the MinHash bands, their symmetric edge set `e`, and `lab(node,
+    * label)`, each document's component minimum by recursive reachability
+    * — independent of the engine's algorithm. `rest` continues the WITH
+    * chain (`,\n…`) or ends it with the final SELECT (`\n…`). */
+  private def componentsSql(rest: String): String = {
+    val bandSelects = (0 until Dedup.NumBands).map { b =>
+      val key = (0 until Dedup.RowsPerBand)
+        .map(r => f"mh${b * Dedup.RowsPerBand + r}%02d").mkString(" || ',' || ")
+      s"SELECT doc_id, $b AS band, $key AS key FROM sig"
+    }.mkString("\n  UNION ALL ")
+    s"""WITH RECURSIVE sig AS (
+       |${Dedup.minhashSql}
+       |),
+       |bands AS (
+       |  $bandSelects),
+       |e AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
+       |      FROM bands a JOIN bands b
+       |        ON a.band = b.band AND a.key = b.key AND a.doc_id <> b.doc_id),
+       |reach(node, label) AS (
+       |  SELECT doc_id, doc_id FROM documents
+       |  UNION
+       |  SELECT e.src, r.label FROM reach r JOIN e ON r.node = e.dst),
+       |lab AS (SELECT node, min(label) AS label FROM reach GROUP BY node)""".stripMargin +
+      rest
   }
 
   def queries: Seq[GraftQuery] = Seq(
 
     GraftQuery(
       "q83_dedup_components",
-      "Duplicate-cluster resolution: connected components over MinHash-LSH candidate edges (docs sharing any band bucket), iterated min-label propagation; per cluster the canonical (min) doc_id and member count. The cluster step LSH pairs alone cannot give: transitive near-dup groups.",
-      {
-        val bandSelects = (0 until Dedup.NumBands).map { b =>
-          val key = (0 until Dedup.RowsPerBand)
-            .map(r => f"mh${b * Dedup.RowsPerBand + r}%02d").mkString(" || ',' || ")
-          s"SELECT doc_id, $b AS band, $key AS key FROM sig"
-        }.mkString("\n  UNION ALL ")
-        s"""WITH RECURSIVE sig AS (
-           |${Dedup.minhashSql}
-           |),
-           |bands AS (
-           |  $bandSelects),
-           |e AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-           |      FROM bands a JOIN bands b
-           |        ON a.band = b.band AND a.key = b.key AND a.doc_id <> b.doc_id),
-           |reach(node, label) AS (
-           |  SELECT doc_id, doc_id FROM documents
-           |  UNION
-           |  SELECT e.src, r.label FROM reach r JOIN e ON r.node = e.dst),
-           |lab AS (SELECT node, min(label) AS label FROM reach GROUP BY node)
-           |SELECT label AS component_id, CAST(count(*) AS BIGINT) AS n_docs
-           |FROM lab GROUP BY label ORDER BY component_id""".stripMargin
-      }) { (s, d) =>
+      "Duplicate-cluster resolution: connected components over MinHash-LSH candidate edges (docs sharing any band bucket), by q339's large-star/small-star contraction; per cluster the canonical (min) doc_id and member count. The cluster step LSH pairs alone cannot give: transitive near-dup groups.",
+      componentsSql("""
+        |SELECT label AS component_id, CAST(count(*) AS BIGINT) AS n_docs
+        |FROM lab GROUP BY label ORDER BY component_id""".stripMargin)) { (s, d) =>
       val nodes = Tables.documents(s, d).select(col("doc_id").as("node"))
       val labels = connectedComponents(nodes, lshEdges(s, d))
       labels.groupBy(col("label").as("component_id"))
@@ -378,33 +325,14 @@ object PipelineOps {
 
     GraftQuery(
       "q339_star_contraction_components",
-      "Connected components via ALTERNATING LARGE-STAR/SMALL-STAR contraction (Kiveris et al., SoCC 2014) over the same MinHash-LSH candidate edges as q83 — the O(log n)-ROUND components algorithm a 100 TB corpus actually runs: q83's min-label propagation moves the smallest id one hop per round (round count = graph DIAMETER — fine on LSH blob clusters, pathological on chained near-dup paths and link graphs), while star contraction halves tree heights every alternation, so the round count is logarithmic REGARDLESS of topology. Each operation is one groupBy-min + one equi-join over a canonically-oriented (larger→smaller) edge set that only ever shrinks toward a star forest; the fixpoint is detected by the q326 doctrine (order-invariant count+bit_xor edge-set fingerprint repeating across a full L+S alternation), at which point the star edges ARE the component assignment — centers are component minima. Output: the duplicate-cluster SIZE HISTOGRAM (how many singletons, pairs, triples… — the shape number a dedup run reports), fully determined by the true components, which the recursive oracle computes independently; RobustStatsSpec additionally pins the full label frame equal to q83's propagation output node-for-node.",
-      {
-        val bandSelects = (0 until Dedup.NumBands).map { b =>
-          val key = (0 until Dedup.RowsPerBand)
-            .map(r => f"mh${b * Dedup.RowsPerBand + r}%02d").mkString(" || ',' || ")
-          s"SELECT doc_id, $b AS band, $key AS key FROM sig"
-        }.mkString("\n  UNION ALL ")
-        s"""WITH RECURSIVE sig AS (
-           |${Dedup.minhashSql}
-           |),
-           |bands AS (
-           |  $bandSelects),
-           |e AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-           |      FROM bands a JOIN bands b
-           |        ON a.band = b.band AND a.key = b.key AND a.doc_id <> b.doc_id),
-           |reach(node, label) AS (
-           |  SELECT doc_id, doc_id FROM documents
-           |  UNION
-           |  SELECT e.src, r.label FROM reach r JOIN e ON r.node = e.dst),
-           |lab AS (SELECT node, min(label) AS label FROM reach GROUP BY node),
-           |cs AS (SELECT label, count(*) AS sz FROM lab GROUP BY label)
-           |SELECT CAST(sz AS BIGINT) AS component_size,
-           |  CAST(count(*) AS BIGINT) AS n_components
-           |FROM cs GROUP BY sz ORDER BY component_size""".stripMargin
-      }) { (s, d) =>
+      "Connected components via ALTERNATING LARGE-STAR/SMALL-STAR contraction (Kiveris et al., SoCC 2014) over the same MinHash-LSH candidate edges as q83 — the O(log n)-ROUND components algorithm a 100 TB corpus actually runs, and the one every components query here (q83, q131, q149, q339) goes through: min-label propagation would move the smallest id one hop per round (round count = graph DIAMETER — fine on LSH blob clusters, pathological on chained near-dup paths and link graphs), while star contraction halves tree heights every alternation, so the round count is logarithmic REGARDLESS of topology. Each operation is one groupBy-min + one equi-join over a canonically-oriented (larger→smaller) edge set that only ever shrinks toward a star forest; the fixpoint is detected by the q326 doctrine (order-invariant count+bit_xor edge-set fingerprint repeating across a full L+S alternation), at which point the star edges ARE the component assignment — centers are component minima. Output: the duplicate-cluster SIZE HISTOGRAM (how many singletons, pairs, triples… — the shape number a dedup run reports), fully determined by the true components, which the recursive oracle computes independently; RobustStatsSpec additionally pins the full label frame equal to a union-find reference node-for-node.",
+      componentsSql(""",
+        |cs AS (SELECT label, count(*) AS sz FROM lab GROUP BY label)
+        |SELECT CAST(sz AS BIGINT) AS component_size,
+        |  CAST(count(*) AS BIGINT) AS n_components
+        |FROM cs GROUP BY sz ORDER BY component_size""".stripMargin)) { (s, d) =>
       val nodes = Tables.documents(s, d).select(col("doc_id").as("node"))
-      val labels = largeSmallStarComponents(nodes, lshEdges(s, d))
+      val labels = connectedComponents(nodes, lshEdges(s, d))
       labels.groupBy(col("label")).agg(count(lit(1)).as("sz"))
         .groupBy(col("sz").as("component_size"))
         .agg(count(lit(1)).as("n_components"))
@@ -414,37 +342,18 @@ object PipelineOps {
     GraftQuery(
       "q131_canonical_selection",
       "Survivor selection — the step after q83's clustering that actually deduplicates: within each near-dup cluster keep the best document (longest text, doc_id tie-break) as canonical. The argmax is one map-side-combinable max(struct(quality, −id)) aggregate over the label frame — never a per-cluster window sort. Output: multi-member clusters with their keeper; everything else in the corpus survives untouched.",
-      {
-        val bandSelects = (0 until Dedup.NumBands).map { b =>
-          val key = (0 until Dedup.RowsPerBand)
-            .map(r => f"mh${b * Dedup.RowsPerBand + r}%02d").mkString(" || ',' || ")
-          s"SELECT doc_id, $b AS band, $key AS key FROM sig"
-        }.mkString("\n  UNION ALL ")
-        s"""WITH RECURSIVE sig AS (
-           |${Dedup.minhashSql}
-           |),
-           |bands AS (
-           |  $bandSelects),
-           |e AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-           |      FROM bands a JOIN bands b
-           |        ON a.band = b.band AND a.key = b.key AND a.doc_id <> b.doc_id),
-           |reach(node, label) AS (
-           |  SELECT doc_id, doc_id FROM documents
-           |  UNION
-           |  SELECT e.src, r.label FROM reach r JOIN e ON r.node = e.dst),
-           |lab AS (SELECT node, min(label) AS label FROM reach GROUP BY node),
-           |j AS (SELECT lab.label, lab.node, d.n_chars
-           |      FROM lab JOIN documents d ON lab.node = d.doc_id),
-           |r AS (SELECT label, node, n_chars,
-           |        row_number() OVER (PARTITION BY label
-           |                           ORDER BY n_chars DESC, node) AS rn,
-           |        count(*) OVER (PARTITION BY label) AS n_docs
-           |      FROM j)
-           |SELECT label AS component_id, CAST(n_docs AS BIGINT) AS n_docs,
-           |  node AS keeper_id, CAST(n_chars AS BIGINT) AS keeper_chars
-           |FROM r WHERE rn = 1 AND n_docs >= 2
-           |ORDER BY component_id""".stripMargin
-      }) { (s, d) =>
+      componentsSql(""",
+        |j AS (SELECT lab.label, lab.node, d.n_chars
+        |      FROM lab JOIN documents d ON lab.node = d.doc_id),
+        |r AS (SELECT label, node, n_chars,
+        |        row_number() OVER (PARTITION BY label
+        |                           ORDER BY n_chars DESC, node) AS rn,
+        |        count(*) OVER (PARTITION BY label) AS n_docs
+        |      FROM j)
+        |SELECT label AS component_id, CAST(n_docs AS BIGINT) AS n_docs,
+        |  node AS keeper_id, CAST(n_chars AS BIGINT) AS keeper_chars
+        |FROM r WHERE rn = 1 AND n_docs >= 2
+        |ORDER BY component_id""".stripMargin)) { (s, d) =>
       val nodes = Tables.documents(s, d).select(col("doc_id").as("node"))
       val labels = connectedComponents(nodes, lshEdges(s, d))
       labels.join(Tables.documents(s, d).select(col("doc_id").as("node"), col("n_chars")), "node")
@@ -463,33 +372,14 @@ object PipelineOps {
     GraftQuery(
       "q149_leakage_free_split",
       "Contamination-safe train/test split: the unit of assignment is the NEAR-DUP CLUSTER (q83's connected components), not the document — membership is a hash residue of the cluster label, so every near-duplicate lands on the same side and no test document has a training-set twin (the leakage a doc-level hash split cannot prevent). ~10% of clusters to test; per side the doc and cluster counts.",
-      {
-        val bandSelects = (0 until Dedup.NumBands).map { b =>
-          val key = (0 until Dedup.RowsPerBand)
-            .map(r => f"mh${b * Dedup.RowsPerBand + r}%02d").mkString(" || ',' || ")
-          s"SELECT doc_id, $b AS band, $key AS key FROM sig"
-        }.mkString("\n  UNION ALL ")
-        s"""WITH RECURSIVE sig AS (
-           |${Dedup.minhashSql}
-           |),
-           |bands AS (
-           |  $bandSelects),
-           |e AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-           |      FROM bands a JOIN bands b
-           |        ON a.band = b.band AND a.key = b.key AND a.doc_id <> b.doc_id),
-           |reach(node, label) AS (
-           |  SELECT doc_id, doc_id FROM documents
-           |  UNION
-           |  SELECT e.src, r.label FROM reach r JOIN e ON r.node = e.dst),
-           |lab AS (SELECT node, min(label) AS label FROM reach GROUP BY node),
-           |sided AS (SELECT node, label,
-           |    CASE WHEN ${h60Sql("'split|' || CAST(label AS VARCHAR)")} % 10 = 0
-           |         THEN 'test' ELSE 'train' END AS side
-           |  FROM lab)
-           |SELECT side, CAST(count(*) AS BIGINT) AS n_docs,
-           |  CAST(count(DISTINCT label) AS BIGINT) AS n_clusters
-           |FROM sided GROUP BY side ORDER BY side""".stripMargin
-      }) { (s, d) =>
+      componentsSql(s""",
+        |sided AS (SELECT node, label,
+        |    CASE WHEN ${h60Sql("'split|' || CAST(label AS VARCHAR)")} % 10 = 0
+        |         THEN 'test' ELSE 'train' END AS side
+        |  FROM lab)
+        |SELECT side, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(count(DISTINCT label) AS BIGINT) AS n_clusters
+        |FROM sided GROUP BY side ORDER BY side""".stripMargin)) { (s, d) =>
       val nodes = Tables.documents(s, d).select(col("doc_id").as("node"))
       val labels = connectedComponents(nodes, lshEdges(s, d))
       val side = when(

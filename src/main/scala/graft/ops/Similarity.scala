@@ -1,11 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
 import graft.functions.ColumnOps._
-import graft.functions.CrossHash.{h60Local, h60Sql}
+import graft.functions.CrossHash.h60Local
 
 /** Approximate-nearest-neighbor surface over `embeddings.embedding`
   * (`array<float>`, dim 64): exact brute-force cosine top-k as the

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions.{coalesce, col, count, lit, max}
   *   - component edge arrays (q83, q131, q149, q339): [[EdgeBytes]] per edge,
   *     ids inside the 31-bit `(a << 32) | b` encode domain.
   * The default budget, 64,000,000 bytes, admits ≤ 4M nodes with max id
-  * < 1.6M (q130), < 2M (q176, q310) or < 2.67M (LPA), and ≤ 2M edges.
+  * < 1.6M (q130), < 2M (q176, q310) or < 2.67M (LPA), and ≤ 210,526 edges.
   * `graft.driverTier.maxBytes` may lower the budget (`0` forces every
   * distributed tier) but never raise it past [[ceiling]], an eighth of
   * the driver's max heap, so no setting can collect a graph the driver
@@ -37,9 +37,24 @@ object DriverTier {
   val KCoreSlotBytes: Long = 4 * SlotBytes
   /** LPA's assignment in, the broadcast copy, and the assignment out. */
   val LpaSlotBytes: Long = 3 * SlotBytes
-  /** An encoded 8-byte edge plus the rounds' sorted copies and label-map
-    * entries; 32 B keeps the components tier's 2M-edge default. */
-  val EdgeBytes: Long = 32L
+  /** The components tier's peak per input edge, inside one star
+    * alternation, every local counted live until it returns. No array of
+    * an alternation outgrows its input: large-star emits one edge per
+    * edge, small-star one per large-star edge. An `ArrayBuilder.ofLong`
+    * doubles, so its buffer holds ≤ 16 B per element, and `result()`
+    * copies 8 B more:
+    *   - the collected edges, which the caller still holds, and the
+    *     alternation's input: 2 × 8 = 16 B;
+    *   - four builders (large-star, small-star, and the sorted-distinct of
+    *     each) with their copies: 4 × (16 + 8) = 96 B;
+    *   - two `LongMap[Long]`s: the min neighbor of every endpoint (≤ 2 per
+    *     edge) and the small-star center of every larger endpoint (≤ 1).
+    *     An entry is a boxed value (16 B) and 2 to 4 slots of an 8 B key
+    *     and a 4 B compressed reference (the map doubles past half full):
+    *     ≤ 64 B, so 3 × 64 = 192 B.
+    * 16 + 96 + 192 = 304 B. The label frame built after the last
+    * alternation (one row per non-center node, ≤ 1 per edge) holds less. */
+  val EdgeBytes: Long = 304L
 
   /** The hard ceiling: an eighth of the driver JVM's max heap. */
   def ceiling: Long = Runtime.getRuntime.maxMemory / 8

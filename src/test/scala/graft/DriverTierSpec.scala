@@ -21,9 +21,11 @@ class DriverTierSpec extends SparkSpec {
     assert(!DriverTier.denseGraph(default, 0L, -1L))
   }
 
-  test("default budget: ≤ 2M edges with ids in [0, 2^31) for the components tier") {
-    assert(DriverTier.edgeList(default, 2000000L, 0L, 0L))
-    assert(!DriverTier.edgeList(default, 2000001L, 0L, 0L))
+  test("default budget: ≤ 210,526 edges with ids in [0, 2^31) for components") {
+    // 64M over the 304 B a star alternation keeps live per edge
+    assert(DriverTier.EdgeBytes === 304L)
+    assert(DriverTier.edgeList(default, 210526L, 0L, 0L))
+    assert(!DriverTier.edgeList(default, 210527L, 0L, 0L))
     assert(DriverTier.edgeList(default, 1L, 0L, (1L << 31) - 1))
     assert(!DriverTier.edgeList(default, 1L, 0L, 1L << 31))
     assert(!DriverTier.edgeList(default, 1L, -1L, 0L))
@@ -43,7 +45,7 @@ class DriverTierSpec extends SparkSpec {
     val budget = DriverTier.budget(Long.MaxValue)
     assert(budget === DriverTier.ceiling)
     assert(DriverTier.ceiling === Runtime.getRuntime.maxMemory / 8)
-    // a 1e9-edge bound would collect ~32 GB of encoded edges and labels
+    // a 1e9-edge bound would keep ~304 GB live in a star alternation
     assert(!DriverTier.edgeList(budget, 1000000000L, 0L, 1L))
     val edges = DriverTier.ceiling / DriverTier.EdgeBytes
     assert(DriverTier.edgeList(budget, edges, 0L, 1L))

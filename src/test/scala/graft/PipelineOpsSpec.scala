@@ -39,13 +39,13 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("connected components: long chain needs multiple propagation rounds") {
-    // a 12-node path — diameter 11, so min-label propagation must iterate;
-    // the label must still reach the far end
+    // a 12-node path — diameter 11, so star contraction must alternate
+    // several times; the label must still reach the far end
     val n = 12
     val nodes = (0 until n).map(_.toLong).toDF("node")
     val pairs = (0 until n - 1).map(i => (i.toLong, i.toLong + 1))
     val edges = (pairs ++ pairs.map(_.swap)).toDF("src", "dst")
-    val labels = PipelineOps.connectedComponents(nodes, edges, maxIters = 20)
+    val labels = PipelineOps.connectedComponents(nodes, edges)
     assert(labels.select(countDistinct(col("label"))).head.getLong(0) === 1L)
     assert(labels.agg(max(col("label"))).head.getLong(0) === 0L)
   }

@@ -333,31 +333,25 @@ class RobustStatsSpec extends SparkSpec {
       "P@10 should beat the base rate for an above-chance ranker")
   }
 
-  test("q339 star-contraction labels equal q83's min-label propagation node-for-node") {
-    // the two algorithms must agree on the FULL label frame, not just the
-    // size histogram the gate compares — every node, same component minimum
-    val nodes = Tables.documents(spark, sf).select(col("doc_id").as("node"))
-    val sig = graft.ops.Dedup.minhashSignatures(spark, sf)
-    val bandCols = (0 until graft.ops.Dedup.NumBands).map { b =>
-      val key = concat_ws(",", (0 until graft.ops.Dedup.RowsPerBand).map(r =>
-        col(f"mh${b * graft.ops.Dedup.RowsPerBand + r}%02d")): _*)
-      struct(lit(b).as("band"), key.as("key"))
-    }
-    val bands = sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-    val edges = graft.ops.PipelineOps.bandedPairs(bands, 64)
-    val star = graft.ops.PipelineOps.largeSmallStarComponents(nodes, edges)
-    val prop = graft.ops.PipelineOps.connectedComponents(nodes, edges)
-    assert(star.exceptAll(prop).count() === 0)
-    assert(prop.exceptAll(star).count() === 0)
-    // and on a pure PATH graph — min-label's worst case (diameter rounds),
-    // star contraction's showcase — plus an isolated node and a triangle
+  test("q339 star-contraction labels equal a union-find reference node-for-node") {
+    // the FULL label frame, not just the size histogram the gate compares —
+    // every node, same component minimum as an independent union-find
     import spark.implicits._
+    val nodes = Tables.documents(spark, sf).select(col("doc_id").as("node"))
+    val edges = graft.ops.PipelineOps.lshEdges(spark, sf)
+    val star = graft.ops.PipelineOps.connectedComponents(nodes, edges)
+      .as[(Long, Long)].collect().toSeq.sorted
+    val ids = nodes.as[Long].collect().toSeq
+    val ref = ComponentsProperties.unionFind(ids, edges.as[(Long, Long)].collect().toSeq)
+    assert(star === ids.map(n => n -> ref(n)).sorted)
+    // and on a pure PATH graph — min-label propagation's worst case
+    // (diameter rounds), star contraction's showcase — plus an isolated
+    // node and a triangle
     val pathEdges = ((0L until 19L).map(i => (i, i + 1)) ++
       Seq((100L, 101L), (101L, 102L), (102L, 100L))).toDF("src", "dst")
     val pathNodes = ((0L to 19L) ++ Seq(100L, 101L, 102L, 500L)).toDF("node")
     val got = graft.ops.PipelineOps
-      .largeSmallStarComponents(pathNodes, pathEdges)
+      .connectedComponents(pathNodes, pathEdges)
       .as[(Long, Long)].collect().toMap
     assert((0L to 19L).forall(got(_) == 0L))
     assert(Seq(100L, 101L, 102L).forall(got(_) == 100L))
